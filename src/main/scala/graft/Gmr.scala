@@ -28,20 +28,16 @@ import graft.io.GraphLoaders
 object Gmr {
 
   /** Load a graph file, auto-detecting the reference's formats:
-    * `.subgraph.N` → pre-partitioned METIS subgraph; any data line with
-    * >3 tokens → METIS adjacency (line = neighbor list); otherwise edge
+    * `.subgraph.N` or any data line with >3 tokens → the METIS-family
+    * reader (its header's fmt mask decides the columns); otherwise edge
     * list with optional single-token header lines. */
   def load(spark: SparkSession, path: String): PropertyGraph =
-    if (path.matches(".*\\.subgraph\\.\\d+$")) GraphLoaders.metisSubgraph(spark, path)
-    else {
-      val wide = spark.read.text(path)
+    if (path.matches(".*\\.subgraph\\.\\d+$") || spark.read.text(path)
         .where(!(col("value").startsWith("#") || col("value").startsWith("%") ||
           trim(col("value")) === ""))
         .where(size(split(trim(col("value")), "\\s+")) > 3)
-        .limit(1).count()
-      if (wide > 0) GraphLoaders.metisAdjacency(spark, path)
-      else GraphLoaders.edgeList(spark, path)
-    }
+        .limit(1).count() > 0) GraphLoaders.metisGraph(spark, path)
+    else GraphLoaders.edgeList(spark, path)
 
   /** One algorithm run → (result DataFrame, iterations). Exposed
     * separately from main so tests drive it without a JVM boundary. */

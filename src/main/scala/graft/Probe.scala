@@ -165,10 +165,11 @@ object Probe {
       graft.io.GraphLoaders.writeMetisSubgraphs(g, parts, base)
     }
     // r22: the query's read side parses the files ONCE
-    // (writtenSubgraphRecords, persisted) — mirror that here, but also
-    // time the stats aggregate and the canon distinct separately.
+    // (metisRecords, persisted) — mirror that here, but also time the
+    // stats aggregate and the canon distinct separately.
     val recs = t("g19", "parse once (cache fill)") {
-      val r = graft.io.GraphLoaders.writtenSubgraphRecords(spark, base, parts)
+      val r = graft.io.GraphLoaders.metisRecords(spark,
+          graft.io.GraphLoaders.subgraphFiles(base, parts))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       r.count(); r
     }

@@ -78,16 +78,16 @@ trait VertexProgram {
   *  - callers should persist `edges` (it is re-joined every superstep);
   *    [[run]] repartitions it once by `src` so the per-superstep join
   *    co-locates without re-shuffling the static side.
-  *  - vertex state is checkpointed ([[Materialize]]) every
-  *    `checkpointInterval` supersteps to truncate lineage — unbounded
-  *    lineage is the classic iterative-Spark failure mode. The
-  *    durability mode is session conf: default `localCheckpoint`
+  *  - vertex state is checkpointed ([[Materialize]]) every superstep
+  *    to truncate lineage — unbounded lineage is the classic
+  *    iterative-Spark failure mode. The durability mode is session
+  *    conf: default `localCheckpoint`
   *    (right for local[*]), `spark.graft.checkpoint.reliable=true`
   *    switches every loop in the engine to reliable `checkpoint()`
   *    against a checkpoint dir so executor loss cannot kill a
   *    long-running BSP job at cluster scale.
-  *  - convergence mode runs one action per superstep (inherent: BSP);
-  *    fixed-iteration mode runs one action per checkpoint interval only.
+  *  - every superstep is one checkpoint action; convergence mode adds
+  *    the consensus aggregate (inherent: BSP).
   */
 object GmrRunner {
 
@@ -102,26 +102,25 @@ object GmrRunner {
 
   /** Run to convergence (max-abs-delta < tolerance, `gmr.h:125`) or the
     * iteration cap. */
-  def run(graph: PropertyGraph, program: VertexProgram,
-          checkpointInterval: Int = 1): RunResult =
-    loop(graph, program, program.maxIterations, convergenceCheck = true, checkpointInterval)
+  def run(graph: PropertyGraph, program: VertexProgram): RunResult =
+    loop(graph, program, program.maxIterations, convergenceCheck = true)
 
   /** Run exactly `iterations` supersteps — deterministic mode for
     * oracle-checked queries (SURVEY.md §7.3 "fixed iteration counts").
     *
-    * checkpointInterval defaults to 1: each superstep references the
-    * previous vertex state twice (message join + update join), so a lazy
+    * Every superstep is materialized: each one references the previous
+    * vertex state twice (message join + update join), so a lazy
     * k-superstep plan is a ~2^k recompute tree — materializing the small
     * vertex state every superstep is far cheaper than ever evaluating
-    * that tree (measured 239s → seconds on the sf0.1 SSSP query). */
-  def runFixed(graph: PropertyGraph, program: VertexProgram, iterations: Int,
-               checkpointInterval: Int = 1): DataFrame =
-    loop(graph, program, iterations, convergenceCheck = false, checkpointInterval).vertices
+    * that tree (measured 239s → seconds on the sf0.1 SSSP query; every
+    * second superstep measured 15–20% slower on d18/g9 in r22). */
+  def runFixed(graph: PropertyGraph, program: VertexProgram, iterations: Int): DataFrame =
+    loop(graph, program, iterations, convergenceCheck = false).vertices
 
   /** [[runFixed]] keeping the per-superstep timings (builder-side
     * instrumentation; `graft.Probe g1`). */
   def loopTimed(graph: PropertyGraph, program: VertexProgram, iterations: Int): RunResult =
-    loop(graph, program, iterations, convergenceCheck = false, checkpointInterval = 1)
+    loop(graph, program, iterations, convergenceCheck = false)
 
   /** [[runFixed]] with per-superstep residual recording — the
     * reference's per-iteration deviation report (`gmr.h:127-128`)
@@ -130,23 +129,13 @@ object GmrRunner {
     * paying the same one max(_delta) action convergence mode pays. */
   def runTraced(graph: PropertyGraph, program: VertexProgram,
                 iterations: Int): RunResult =
-    loop(graph, program, iterations, convergenceCheck = true,
-      checkpointInterval = 1, earlyStop = false)
+    loop(graph, program, iterations, convergenceCheck = true, earlyStop = false)
 
   private def loop(graph: PropertyGraph, program: VertexProgram, maxIter: Int,
-                   convergenceCheck: Boolean, checkpointInterval: Int,
+                   convergenceCheck: Boolean,
                    earlyStop: Boolean = true): RunResult = {
     val spark = graph.edges.sparkSession
     val nShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // r22 A/B instrument (VERDICT r21 item 2): fixed-mode checkpoint
-    // cadence. The "cadence > 1 is slower" measurement predates the r21
-    // broadcast superstep shape, so it is re-measurable via conf without
-    // a code edit: each skipped checkpoint doubles the lazy recompute
-    // tree (state is referenced by both per-superstep joins), which is
-    // exactly the trade being priced. Convergence/traced modes always
-    // materialize per superstep (the consensus action needs it).
-    val cadence = spark.conf.getOption("spark.graft.checkpointCadence")
-      .map(_.toInt).filter(_ >= 1).getOrElse(checkpointInterval)
     // Break lineage into the (possibly self-referential) source plan so the
     // edges-derived vertex set can be re-joined against edges without
     // ambiguous-self-join resolution issues.
@@ -168,12 +157,6 @@ object GmrRunner {
     // pre-r21 shape: edges hash-partitioned by src once, shuffle joins.
     val stateRows = state.count()
     val bcastState = GraphOps.stateBroadcastFits(spark, stateRows)
-    // Kill switch for the r21 fixed-mode empty-frontier early exit below
-    // (the LPA-frontier-knob pattern): `false` forces every contracted
-    // superstep to run. Exists for the A/B instrument and as an
-    // operational escape hatch; results are bit-identical either way.
-    val fixedEarlyExit = spark.conf
-      .getOption("spark.graft.fixedEarlyExit").forall(_.toBoolean)
     // Static side of every superstep join. Broadcast mode streams the
     // cached frame map-side (partitioning is irrelevant to a broadcast
     // join probe side — skipping the upfront repartition saves its
@@ -209,14 +192,12 @@ object GmrRunner {
           program.delta(col("value"), program.updated(col("value"), col("_agg"))).as("_delta") +:
           staticCols.map(col): _*)
       iter += 1
-      val checkpointNow = convergenceCheck || iter % cadence == 0 || iter == maxIter
-      val next = if (checkpointNow) stepped.materialize() else stepped
+      val next = stepped.materialize()
       if (convergenceCheck) {
         lastDelta = next.agg(max(col("_delta"))).first().getDouble(0)
         residuals += lastDelta
         converged = earlyStop && lastDelta < program.tolerance
-      } else if (earlyStop && fixedEarlyExit && program.frontierOnly &&
-          checkpointNow && iter < maxIter) {
+      } else if (earlyStop && program.frontierOnly && iter < maxIter) {
         // r21 (guide §1.2: don't compute what you throw away): in FIXED
         // mode a frontier-pruned monotone program whose frontier has
         // emptied can never change again — no senders means no messages,

@@ -1,11 +1,15 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 
-/** Loaders for the reference's three text graph formats (SURVEY.md §2.1
-  * O1/O4/O5/O6, FIXTURES.md §A). All are thin declarative pipelines over
+/** Loaders for the reference's text graph formats (SURVEY.md §2.1
+  * O1/O4/O5/O6, FIXTURES.md §A): [[edgeList]] for edge lists, and ONE
+  * header-driven reader for the METIS family — adjacency files and
+  * `*.subgraph.N` files, whose `nvtxs nedges [fmt [ncon]]` header says
+  * which columns every row carries ([[metisGraph]], [[metisRecords]],
+  * [[partitionStats]]). The readers are thin declarative pipelines over
   * `spark.read.text` — Spark's FileScan already does byte-range parallel
   * ingestion with line realignment, which is the entire point of the
   * reference's 275-line manual reader (`/root/reference/graph.h:274-549`);
@@ -48,94 +52,141 @@ object GraphLoaders {
     PropertyGraph(spark.range(1, maxId + 1).select(col("id")), edges)
   }
 
-  /** A2: METIS adjacency format — header `nvtxs nedges`, line i (1-based)
-    * lists the neighbors of vertex i. Line position IS the vertex id, so
-    * this needs an order-preserving indexed read: the one genuinely
-    * imperative per-partition step in the loaders (RDD zipWithIndex —
-    * constant extra pass, preserves scale-out). */
-  def metisAdjacency(spark: SparkSession, path: String): PropertyGraph = {
-    import spark.implicits._
-    val indexed = spark.sparkContext.textFile(path)
-      .zipWithIndex()
-      .filter { case (line, _) =>
-        val t = line.trim
-        t.nonEmpty && !t.startsWith("#") && !t.startsWith("%")
-      }
-      .map { case (line, idx) => (idx, line.trim) }
-      .toDF("lineno", "line")
-    // lineno 0 = header; vertex id = lineno (1-based line = vertex 1).
-    val edges = indexed.where(col("lineno") > 0)
-      .select(col("lineno").as("src"),
-        explode(split(col("line"), "\\s+")).as("nbr"))
-      .where(col("nbr") =!= "")
-      .select(col("src"), col("nbr").cast("long").as("dst"), lit(1.0).as("weight"))
-    // vertex set from the header's nvtxs (isolated vertices included — the
-    // reference's gap-fill behavior, partition.h:628-642)
-    val nvtxs = indexed.where(col("lineno") === 0)
-      .select(split(col("line"), "\\s+").getItem(0).cast("long")).first().getLong(0)
-    val vertices = spark.range(1, nvtxs + 1).select(col("id"))
-    PropertyGraph(vertices, edges)
+  /** The columns a 4-digit fmt mask gives every data row, decoded like the
+    * reference (`graph.h:592-597`, `sprintf("%04zu", fmt)`):
+    * vertex id, vertex weights (× ncon), edge weights, per-edge owner part;
+    * per-edge order nbr, loc, weight (`graph.h:677-698`). fmt 0 = adjacency. */
+  private final case class MetisShape(fmt: Int, ncon: Int) {
+    val Seq(vid, vwgt, ewgt, loc) = Seq(1000, 100, 10, 1).map(d => fmt / d % 10 == 1)
+    /** Data rows carry `vOff + k·stride` tokens: vertex columns, then k neighbors. */
+    val vOff: Int = (if (vid) 1 else 0) + (if (vwgt) ncon else 0)
+    val stride: Int = 1 + (if (loc) 1 else 0) + (if (ewgt) 1 else 0)
   }
 
-  /** A3: pre-partitioned METIS subgraph format (`*.subgraph.N`) — header
-    * `nvtxs nedges fmt [ncon]`; row = `[vid] [vwgt×ncon] (nbr [nbrloc]
-    * [ewgt])*`. The 4-digit fmt mask is decoded from the header exactly
-    * like the reference (`/root/reference/graph.h:592-597`,
-    * `sprintf("%04zu", fmt)`): digit 0 = vertex-id column ("sizes" reused
-    * as the vid, `graph.h:655-659`), digit 1 = vertex weights (× ncon),
-    * digit 2 = edge weights, digit 3 = per-edge owner partition — and the
-    * per-edge column order is nbr, loc, weight (`graph.h:677-698`: the
-    * loc read precedes the vals read). When the vid column is absent the
-    * vertex id is the 1-based row position, same convention as
-    * [[metisAdjacency]]. The `Option` flags override individual digits
-    * (None = trust the header). `nbrloc` is surfaced as `dst_part` for
-    * inspection but plays no role in placement — Spark's shuffle owns
-    * that (SURVEY.md §1.2). */
-  def metisSubgraph(spark: SparkSession, path: String,
-                    hasVertexId: Option[Boolean] = None,
-                    hasVertexWeight: Option[Boolean] = None,
-                    hasEdgeWeight: Option[Boolean] = None,
-                    hasEdgeLoc: Option[Boolean] = None): PropertyGraph = {
-    // The header is line 1 (the reference reads it first, graph.h:569-599);
-    // line order must survive the read → indexed RDD pass.
+  /** A header `nvtxs nedges [fmt [ncon]]`: the first non-comment,
+    * non-blank line, at 0-based position `row` among the non-comment
+    * lines; a missing fmt is 0. */
+  private final case class MetisHeader(path: String, line: String, row: Long) {
+    private val t = line.trim.split("\\s+")
+    val nvtxs: Long = t(0).toLong
+    private val fmt = if (t.length >= 3) t(2).toInt else 0
+    require(fmt <= 1111, s"$path: Cannot read this type of file format $fmt") // graph.h:590
+    val shape: MetisShape = MetisShape(fmt, // ncon 0 reads as 1, graph.h:599
+      if (t.length >= 4 && t(3).toInt > 0) t(3).toInt else 1)
+    /** The vid column names each vertex and the header fits no data row's
+      * shape, so rows are told apart by content, not position. */
+    val positionFree: Boolean = shape.vid &&
+      (t.length < shape.vOff || (t.length - shape.vOff) % shape.stride != 0)
+  }
+
+  private def isMetisComment(line: String): Boolean =
+    line.trim.startsWith("#") || line.trim.startsWith("%")
+
+  /** Reads a file's header through the Hadoop FileSystem API (the
+    * writer's rename API): a few bytes, no Spark job. */
+  private def metisHeader(spark: SparkSession, path: String): MetisHeader = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) // fail like a Spark read of the file
+      throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> fs.makeQualified(p).toString))
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
+    try Iterator.continually(in.readLine()).takeWhile(_ != null)
+      .filterNot(isMetisComment).zipWithIndex
+      .collectFirst { case (l, i) if l.trim.nonEmpty => MetisHeader(path, l, i.toLong) }
+      .getOrElse(throw new IllegalArgumentException(s"$path: no METIS header line"))
+    finally in.close()
+  }
+
+  /** A file's vertex rows `(part, file, row, value)`, `row` = 1-based row
+    * position. A position-free file (all [[writeMetisSubgraphs]] output) is
+    * a splittable text scan; its comment, blank and header lines get a null
+    * `value` before the filter, as consumers' pushed-down predicates may run
+    * first. Other files take an indexed read: comments are dropped before
+    * rows are numbered; without a vid column blank rows are isolated
+    * vertices and rows past nvtxs must be blank. */
+  private def metisLines(spark: SparkSession, h: MetisHeader, part: Long): DataFrame = {
     import spark.implicits._
-    val indexed = spark.sparkContext.textFile(path)
-      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#") && !l.startsWith("%"))
-      .zipWithIndex()
-      .map { case (l, i) => (i, l.split("\\s+").toSeq) }
-      .toDF("lineno", "t")
-    val header = indexed.where(col("lineno") === 0)
-      .select(col("t")).first().getSeq[String](0)
-    val fmt = if (header.size >= 3) header(2).toInt else 0
-    require(fmt <= 1111, s"Cannot read this type of file format $fmt") // graph.h:590
-    val nconHdr = if (header.size >= 4) header(3).toInt else 0
-    val ncon = if (nconHdr == 0) 1 else nconHdr // graph.h:599
-    val readVid = hasVertexId.getOrElse(fmt / 1000 % 10 == 1)
-    val readWgts = hasVertexWeight.getOrElse(fmt / 100 % 10 == 1)
-    val readVals = hasEdgeWeight.getOrElse(fmt / 10 % 10 == 1)
-    val readLoc = hasEdgeLoc.getOrElse(fmt % 10 == 1)
-    val vOff = (if (readVid) 1 else 0) + (if (readWgts) ncon else 0)
-    val stride = 1 + (if (readLoc) 1 else 0) + (if (readVals) 1 else 0)
-    val wSlot = if (readLoc) 3 else 2
-    val data = indexed.where(col("lineno") > 0)
-    val idCol =
-      if (readVid) element_at(col("t"), 1).cast("long") else col("lineno").cast("long")
-    val vertices = data.select(idCol.as("id"),
-      (if (readWgts) element_at(col("t"), if (readVid) 2 else 1).cast("double")
-       else lit(1.0)).as("vweight"))
-    val edges = data.select(idCol.as("src"),
-        slice(col("t"), lit(vOff + 1), greatest(size(col("t")) - vOff, lit(0))).as("rest"))
-      .where(size(col("rest")) >= stride)
-      .select(col("src"), explode(transform(
-        sequence(lit(0), (size(col("rest")) / stride).cast("int") - 1), g => struct(
-          element_at(col("rest"), g * stride + 1).cast("long").as("dst"),
-          (if (readLoc) element_at(col("rest"), g * stride + 2).cast("int")
-           else lit(null).cast("int")).as("dst_part"),
-          (if (readVals) element_at(col("rest"), g * stride + wSlot).cast("double")
-           else lit(1.0)).as("weight")))).as("e"))
+    if (h.positionFree)
+      spark.read.text(h.path).select(lit(part).as("part"), lit(h.path).as("file"),
+          lit(null).cast("long").as("row"),
+          when(col("value") =!= h.line && !col("value").rlike("^\\s*([#%]|$)"), col("value"))
+            .as("value"))
+        .where(col("value").isNotNull)
+    else
+      spark.sparkContext.textFile(h.path).filter(l => !isMetisComment(l)).zipWithIndex()
+        .filter { case (l, i) =>
+          i > h.row && (l.trim.nonEmpty || (!h.shape.vid && i - h.row <= h.nvtxs)) }
+        .map { case (l, i) =>
+          require(h.shape.vid || i - h.row <= h.nvtxs,
+            s"${h.path}: row ${i - h.row} is past the header's nvtxs=${h.nvtxs}")
+          (part, h.path, i - h.row, l)
+        }.toDF("part", "file", "row", "value")
+  }
+
+  /** The one METIS-family row parser (SURVEY.md §2.1 O4/O5, FIXTURES.md §A):
+    * lines of one shape → `(part, id, vweight, ns: array<struct<dst,
+    * dst_part, weight>>)`. Tokens split on whitespace runs; a blank row has
+    * no neighbours; a row fitting no `vOff + k·stride` shape fails the job
+    * through `raise_error` naming the file (lazy: no extra action).
+    * `dst_part` (null without the owner column) plays no role in placement. */
+  private def metisRows(lines: DataFrame, s: MetisShape): DataFrame = {
+    val t = col("t")
+    val n = size(t)
+    // Column j of every neighbor, one pass over the row: a lambda indexing
+    // `t` per neighbor re-splits the row per neighbor wherever Spark inlines
+    // `t` (e.g. into explode's inferred size(ns) > 0 filter), O(k²) per row.
+    def nbrCol(j: Int, tpe: String) =
+      filter(t, (_, i) => i >= s.vOff && (i - s.vOff) % s.stride === j).cast(s"array<$tpe>")
+    val k = ((n - s.vOff) / s.stride).cast("int")
+    lines
+      .select(col("part"), col("file"), col("row"), col("value"),
+        array_remove(split(col("value"), "\\s+"), "").as("t"))
+      .select(col("part"), col("row"),
+        when(t.isNull || n >= s.vOff && (n - s.vOff) % s.stride === 0, t)
+          .otherwise(raise_error(concat(col("file"), lit(s": row fits no fmt=${s.fmt} " +
+            s"shape (${s.vOff} + k*${s.stride} tokens): "), col("value")))).as("t"))
+      .select(col("part"),
+        (if (s.vid) element_at(t, 1).cast("long") else col("row")).as("id"),
+        (if (s.vwgt) element_at(t, if (s.vid) 2 else 1).cast("double") else lit(1.0))
+          .as("vweight"),
+        arrays_zip(nbrCol(0, "bigint").as("dst"),
+          (if (s.loc) nbrCol(1, "int") else array_repeat(lit(null).cast("int"), k))
+            .as("dst_part"),
+          (if (s.ewgt) nbrCol(s.stride - 1, "double") else array_repeat(lit(1.0), k))
+            .as("weight")).as("ns"))
+  }
+
+  /** [[metisRows]] records of a set of METIS-family files, `part` = the
+    * file's index in `paths`. Files of one shape are parsed as one union,
+    * so a set of position-free parts is one scan job. */
+  def metisRecords(spark: SparkSession, paths: Seq[String]): DataFrame =
+    paths.zipWithIndex.map { case (p, i) => (metisHeader(spark, p), i.toLong) }
+      .groupBy(_._1.shape).map { case (shape, hs) =>
+        metisRows(hs.map { case (h, i) => metisLines(spark, h, i) }.reduce(_ union _), shape)
+      }.reduce(_ union _)
+
+  /** `basePath.subgraph.0 .. basePath.subgraph.(parts-1)`. */
+  def subgraphFiles(basePath: String, parts: Int): Seq[String] =
+    (0 until parts).map(p => s"$basePath.subgraph.$p")
+
+  /** A2/A3: one METIS adjacency or subgraph file as `vertices(id, vweight)`
+    * and `edges(src, dst, weight, dst_part)`. Without vid and vertex-weight
+    * columns the vertex set is the header's `1..nvtxs`, with no scan
+    * (isolated vertices included — the gap-fill of `partition.h:628-642`). */
+  def metisGraph(spark: SparkSession, path: String): PropertyGraph = {
+    val h = metisHeader(spark, path)
+    val recs = metisRows(metisLines(spark, h, 0L), h.shape)
+    val vertices =
+      if (h.shape.vid || h.shape.vwgt) recs.select(col("id"), col("vweight"))
+      else spark.range(1, h.nvtxs + 1).select(col("id"), lit(1.0).as("vweight"))
+    // explode_outer + null filter, not explode: for explode Spark infers a
+    // size(ns) > 0 filter and pushes it below the parse, parsing every
+    // row twice.
+    PropertyGraph(vertices, recs.select(col("id").as("src"), explode_outer(col("ns")).as("e"))
+      .where(col("e").isNotNull)
       .select(col("src"), col("e.dst").as("dst"), col("e.weight").as("weight"),
-        col("e.dst_part").as("dst_part"))
-    PropertyGraph(vertices, edges)
+        col("e.dst_part").as("dst_part")))
   }
 
   /** A4: whitespace-separated integer files (the reference's sample-sort
@@ -146,7 +197,7 @@ object GraphLoaders {
       .where(col("tok") =!= "")
       .select(col("tok").cast("long").as("n"))
 
-  /** Writer for the pre-partitioned subgraph format [[metisSubgraph]]
+  /** Writer for the pre-partitioned subgraph format [[metisGraph]]
     * reads — the output side of the reference's partition-and-scatter
     * pre-processing (`graph.h` writes `<file>.subgraph.<p>` per rank with
     * the `sprintf("%04zu", fmt)` header, fmt = 1111: vid, vwgt, and per
@@ -180,8 +231,8 @@ object GraphLoaders {
     * `nvtxs<=0 || nedges<=0` (`graph.h:587-588`), so this writer refuses
     * to emit a file the reference's ranks cannot read — choose `parts`
     * small enough that every `id mod parts` class has vertices and edges.
-    * Round-trip proven in GraphLoadersSpec: write → [[metisSubgraph]]
-    * per part → union == original graph. */
+    * Round-trip proven in GraphLoadersSpec and GraphPropertiesSpec:
+    * write → [[metisRecords]] over every part == original graph. */
   def writeMetisSubgraphs(g: PropertyGraph, parts: Int, basePath: String,
                           assignment: Option[DataFrame] = None): Unit = {
     val spark = g.edges.sparkSession
@@ -418,48 +469,12 @@ object GraphLoaders {
               .cast("int"))).as("part"))
   }
 
-  /** One-scan reader for a SET of subgraph files PRODUCED BY
-    * [[writeMetisSubgraphs]] — the r22 fast path for the roundtrip
-    * queries (g19/g29) and [[partitionStats]], which used to pay the
-    * general [[metisSubgraph]] machinery per part per consumer: one
-    * RDD zipWithIndex job + one header `first()` job per file at
-    * CONSTRUCTION, plus a full regex-tokenized re-parse of every file
-    * for every consuming aggregate — measured as the dominant leg of
-    * g19 at sf0.1 (10.1 s of its 11.3 s band; guide §1.1/§2.4).
-    *
-    * Contract (narrower than [[metisSubgraph]], and exactly what the
-    * writer emits): fmt=1111, ncon=1, single-space separated tokens,
-    * one `nvtxs nedges 1111 1` header line per file. Data rows carry
-    * `vid vwgt (nbr nbrloc ewgt)*` = 2+3k tokens ≡ 2 (mod 3); the
-    * 4-token header ≡ 1 (mod 3), so the header is dropped structurally
-    * with no line-position bookkeeping — the whole read is ONE
-    * splittable FileScan (no zipWithIndex, no per-file `first()`), one
-    * pass, whole-stage codegen. Reference-format files with other fmt
-    * masks keep using [[metisSubgraph]].
-    *
-    * Returns one row per vertex line: (part, id, ns) with
-    * `ns: array<struct<dst, dst_part, weight>>` in file order. */
-  private[graft] def writtenSubgraphRecords(spark: SparkSession, basePath: String,
-                                            parts: Int): DataFrame = {
-    (0 until parts).map { p =>
-      spark.read.text(s"$basePath.subgraph.$p")
-        .select(lit(p.toLong).as("part"), split(trim(col("value")), " ").as("t"))
-    }.reduce(_ union _)
-      .where(size(col("t")) % 3 === 2) // data rows only; header is ≡ 1 (mod 3)
-      .select(col("part"),
-        element_at(col("t"), 1).cast("long").as("id"),
-        transform(sequence(lit(0), ((size(col("t")) - 2) / 3).cast("int") - 1), g => struct(
-          element_at(col("t"), g * 3 + 3).cast("long").as("dst"),
-          element_at(col("t"), g * 3 + 4).cast("int").as("dst_part"),
-          element_at(col("t"), g * 3 + 5).cast("double").as("weight"))).as("ns"))
-  }
-
-  /** [[partitionStats]] over an already-parsed [[writtenSubgraphRecords]]
-    * frame — callers that also read the graph back (g19) parse the files
-    * once, persist, and share the frame between the stats aggregate and
-    * the edge view. ONE aggregate produces all three counts; the
-    * per-row cut count is a single-level higher-order `filter` over the
-    * neighbor array (no nested-lambda interpretation trap, no exploded
+  /** [[partitionStats]] over an already-parsed [[metisRecords]] frame —
+    * callers that also read the graph back (g19) parse the files once,
+    * persist, and share the frame between the stats aggregate and the
+    * edge view. ONE aggregate produces all three counts; the per-row cut
+    * count is a single-level higher-order `filter` over the neighbor
+    * array (no nested-lambda interpretation trap, no exploded
     * intermediate ahead of the exchange — guide §2.3). */
   def partitionStatsFromRecords(records: DataFrame): DataFrame =
     records.groupBy(col("part")).agg(
@@ -470,20 +485,16 @@ object GraphLoaders {
           .cast("long").as("cut_edges"))
       .withColumn("cut_pct",
         round(col("cut_edges") * 100.0 / greatest(col("nedges"), lit(1L)), 2))
-      .orderBy("part")
 
-  /** Partition-quality metrics over a set of fmt=1111 subgraph files —
-    * the reference's `showGraphPartitions` analog
-    * (`/root/reference/partition.h:469-542`), which prints per-part
-    * assignment, the edge-cut count, and an object-imbalance measure.
-    * One row per part: vertex count, edge-record count, cut edge
-    * records (the file's recorded neighbor owner `dst_part` differs
-    * from the part that owns the source), and the cut fraction. Since
-    * r22 this is one aggregate over ONE shared file scan
-    * ([[writtenSubgraphRecords]] — every call site reads files this
-    * engine's writer produced); nothing per-row reaches the driver. */
+  /** Partition-quality metrics over `basePath.subgraph.0 .. parts-1`,
+    * from this engine's writer or the reference's partitioner — the
+    * reference's `showGraphPartitions` analog
+    * (`partition.h:469-542`). One row per part: vertex
+    * count, edge-record count, cut edge records (the recorded neighbor
+    * owner `dst_part` differs from the source's part), and the cut
+    * fraction — one aggregate over the [[metisRecords]] scan. */
   def partitionStats(spark: SparkSession, basePath: String, parts: Int): DataFrame =
-    partitionStatsFromRecords(writtenSubgraphRecords(spark, basePath, parts))
+    partitionStatsFromRecords(metisRecords(spark, subgraphFiles(basePath, parts)))
 
   /** The reference's imbalance measure over a [[partitionStats]] frame:
     * `max_p(nparts * count_p / sum)` — 1.0 is perfect balance, larger is

@@ -1106,13 +1106,10 @@ object GraphQueries {
     // written subgraph files back. Release it (the r8/r9 unpersist
     // discipline, VERDICT r9 item 4; the g29 fix's hash-mode twin).
     pairs.unpersist(blocking = false)
-    // r22 (guide §1.1/§2.4, the probe-named leg): parse the written
-    // files ONCE into a shared persisted frame — the stats aggregate
-    // and the read-back edge view used to re-run the general
-    // per-part reader (RDD zipWithIndex + header first() + full regex
-    // re-tokenization PER CONSUMER: 10.1 s of g19's 11.3 s band at
-    // sf0.1). Same bytes parsed, same stats/canon/triangle values.
-    val recs = graft.io.GraphLoaders.writtenSubgraphRecords(s, base, parts)
+    // Parse the written files ONCE into a persisted frame shared by the
+    // stats aggregate and the read-back edge view.
+    val recs = graft.io.GraphLoaders.metisRecords(s,
+        graft.io.GraphLoaders.subgraphFiles(base, parts))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats = graft.io.GraphLoaders.partitionStatsFromRecords(recs)
     val back = recs.select(col("id").as("src"), explode(col("ns")).as("e"))

@@ -93,7 +93,7 @@ class GmrMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (part0, _) = Gmr.run(spark, "trianglecount", s"$base.subgraph.0")
     assert(part0.columns.toSeq === orig.columns.toSeq) // shape parity
     val reunited = (0 until 3)
-      .map(p => graft.io.GraphLoaders.metisSubgraph(spark, s"$base.subgraph.$p").edges)
+      .map(p => graft.io.GraphLoaders.metisGraph(spark, s"$base.subgraph.$p").edges)
       .reduce(_ union _)
     val n = graft.graph.GraphOps.triangleCountViaIntersect(
       reunited.select(
@@ -116,7 +116,7 @@ class GmrMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     Gmr.partitionFiles(spark, s"$ref/4elt.graph", 3, base, mode = "locality")
     val src = Gmr.load(spark, s"$ref/4elt.graph")
     val reunited = (0 until 3)
-      .map(p => graft.io.GraphLoaders.metisSubgraph(spark, s"$base.subgraph.$p").edges)
+      .map(p => graft.io.GraphLoaders.metisGraph(spark, s"$base.subgraph.$p").edges)
       .reduce(_ union _)
     val canon = (df: org.apache.spark.sql.DataFrame) => df
       .select(least(col("src"), col("dst")).as("src"),

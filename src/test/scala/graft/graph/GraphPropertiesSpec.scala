@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, explode}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.BeforeAndAfterAll
@@ -66,6 +67,43 @@ class GraphPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
         val (s, d) = (e.getLong(0), e.getLong(1))
         assert(dist(d) <= dist(s) + 1.0 + 1e-9, s"edge $s->$d violates relaxation")
       }
+    }
+  }
+
+  /** A vertex count n and weighted directed edges over 1..n: self-loops,
+    * duplicate edges, fractional weights, and isolated vertices (ids no
+    * edge touches, including a tail beyond the largest endpoint). */
+  private val genWeighted: Gen[(Long, List[(Long, Long, Double)])] = for {
+    n <- Gen.choose(1L, 12L)
+    es <- Gen.nonEmptyListOf(for {
+      a <- Gen.choose(1L, n); b <- Gen.choose(1L, n)
+      w <- Gen.oneOf(Gen.const(1.0), Gen.choose(1, 40).map(_ / 4.0))
+    } yield (a, b, w))
+    dup <- Gen.someOf(es)
+    tail <- Gen.choose(0L, 3L)
+  } yield (n + tail, es ++ dup)
+
+  test("subgraph writer → reader roundtrip preserves vertex set and edge multiset") {
+    forAll(genWeighted) { case (n, es) =>
+      import spark.implicits._
+      import graft.io.GraphLoaders
+      // the most parts ≤ 3 whose every id-mod-parts class owns a vertex
+      // and an edge (the writer's non-empty-part contract)
+      val parts = (1 to 3).filter(p => (0 until p).forall(c =>
+        es.exists(_._1 % p == c))).max
+      val g = PropertyGraph(spark.range(1, n + 1).select(col("id")),
+        es.toDF("src", "dst", "weight"))
+      val base = java.nio.file.Files.createTempDirectory("graft-prop").toString + "/g"
+      GraphLoaders.writeMetisSubgraphs(g, parts, base)
+      val recs = GraphLoaders.metisRecords(spark, GraphLoaders.subgraphFiles(base, parts))
+      assert(recs.select("id").collect().map(_.getLong(0)).sorted.toSeq === (1L to n))
+      val back = recs.select(col("id"), explode(col("ns")).as("e"))
+        .select(col("id"), col("e.dst"), col("e.weight")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(back.sorted === es.sorted, s"n=$n parts=$parts")
+      val stats = GraphLoaders.partitionStats(spark, base, parts).collect()
+      assert(stats.map(_.getAs[Long]("nvtxs")).sum === n)
+      assert(stats.map(_.getAs[Long]("nedges")).sum === es.size.toLong)
     }
   }
 

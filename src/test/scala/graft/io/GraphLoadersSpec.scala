@@ -27,7 +27,7 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("METIS adjacency: line number is the vertex id") {
-    val g = GraphLoaders.metisAdjacency(spark, res("metis.graph"))
+    val g = GraphLoaders.metisGraph(spark, res("metis.graph"))
     assert(g.vertices.count() === 4)
     val e = g.edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(e === Set(
@@ -38,7 +38,7 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("METIS subgraph fmt=1111: vid/vwgt + (nbr, part, ewgt) triples") {
-    val g = GraphLoaders.metisSubgraph(spark, res("subgraph.0"))
+    val g = GraphLoaders.metisGraph(spark, res("subgraph.0"))
     assert(g.vertices.count() === 4)
     val vw = g.vertices.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(vw === Map(1L -> 1.0, 2L -> 2.0, 3L -> 1.5, 4L -> 1.0))
@@ -52,7 +52,7 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("METIS subgraph fmt=0011 auto-decoded: implicit row-order vid, no vwgt") {
-    val g = GraphLoaders.metisSubgraph(spark, res("subgraph01.0"))
+    val g = GraphLoaders.metisGraph(spark, res("subgraph01.0"))
     val vw = g.vertices.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(vw === Map(1L -> 1.0, 2L -> 1.0, 3L -> 1.0, 4L -> 1.0))
     val e = g.edges.collect()
@@ -64,15 +64,99 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
       (4L, 2L, 1.0, 1)))
   }
 
+  test("METIS adjacency: a leading % comment is not counted as a row") {
+    val g = GraphLoaders.metisGraph(spark, res("metis_comment.graph"))
+    assert(g.vertices.count() === 4)
+    val e = g.edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(e === Set(
+      (1L, 2L), (1L, 3L),
+      (2L, 1L), (2L, 3L),
+      (3L, 1L), (3L, 2L), (3L, 4L),
+      (4L, 3L)))
+  }
+
+  test("METIS subgraph fmt=0011: a blank row is an isolated vertex, later rows keep their ids") {
+    val g = GraphLoaders.metisGraph(spark, res("subgraph01_blank.0"))
+    assert(g.vertices.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L, 4L))
+    val e = g.edges.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    assert(e === Set(
+      (1L, 3L, 2.0, 0),
+      (3L, 1L, 2.0, 0), (3L, 4L, 1.0, 1),
+      (4L, 3L, 1.0, 1)))
+  }
+
+  test("a row that fits no fmt shape fails the read, naming the file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bad")
+    val base = s"$dir/bad"
+    // `2 1.0 1 0` has 4 tokens: vid, vwgt, then a neighbor missing its weight
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base.subgraph.0"),
+      "2 1 1111 1\n1 1.0 2 0 1.0\n2 1.0 1 0\n")
+    val path = s"$base.subgraph.0"
+    val e1 = intercept[Exception](GraphLoaders.partitionStats(spark, base, 1).collect())
+    assert(e1.getMessage.contains(path), e1.getMessage)
+    val e2 = intercept[Exception](GraphLoaders.metisGraph(spark, path).edges.collect())
+    assert(e2.getMessage.contains(path), e2.getMessage)
+    // adjacency (no vid column): a third non-blank row past nvtxs = 2
+    val adj = s"$dir/extra.graph"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(adj), "2 1\n2\n1\n1\n")
+    val e3 = intercept[Exception](GraphLoaders.metisGraph(spark, adj).edges.collect())
+    assert(e3.getMessage.contains(adj), e3.getMessage)
+  }
+
+  test("partstats vs a hand-partitioned reference-style 3-part fixture") {
+    // ref3.graph.subgraph.{0,1,2}: 3-token `nvtxs nedges 1111` headers,
+    // leading-space rows, one tab-separated row, isolated vertex 9.
+    // Undirected edges 1-2 1-3 2-3 3-4 4-5 5-6 6-7 7-8 5-8 2-6, owners
+    // {1,2,3} → 0, {4,5,9} → 1, {6,7,8} → 2. Hand count of edge records
+    // whose neighbor lives on another part:
+    // part 0: 2→6, 3→4 (2 of 8); part 1: 4→3, 5→6, 5→8 (3 of 5);
+    // part 2: 6→5, 6→2, 8→5 (3 of 7).
+    val stats = GraphLoaders.partitionStats(spark, res("ref3.graph.subgraph.0")
+      .stripSuffix(".subgraph.0"), 3)
+    val rows = stats.orderBy("part").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
+    assert(rows === Array((0L, 3L, 8L, 2L, 25.0), (1L, 3L, 5L, 3L, 60.0),
+      (2L, 3L, 7L, 3L, 42.86)))
+    val (vImbal, eImbal, cuts) = GraphLoaders.partitionImbalance(stats)
+    assert(math.abs(vImbal - 1.0) < 1e-9) // 3·3/9
+    assert(math.abs(eImbal - 1.2) < 1e-9) // 3·8/20
+    assert(cuts === 8L)
+    // the tab-separated row parses like the others
+    val five = GraphLoaders.metisGraph(spark, res("ref3.graph.subgraph.1")).edges
+      .where("src = 5").collect().map(r => (r.getLong(1), r.getInt(3))).toSet
+    assert(five === Set((4L, 1), (6L, 2), (8L, 2)))
+  }
+
+  test("writer → partitionStats → reader roundtrip keeps an isolated vertex") {
+    import spark.implicits._
+    // path 1-2-3-4 plus isolated vertex 5; parts 2 → {2,4} and {1,3,5}
+    val edges = Seq((1L, 2L, 1.0), (2L, 1L, 1.0), (2L, 3L, 1.0), (3L, 2L, 1.0),
+      (3L, 4L, 1.0), (4L, 3L, 1.0)).toDF("src", "dst", "weight")
+    val g = graft.graph.PropertyGraph(
+      spark.range(1, 6).select(org.apache.spark.sql.functions.col("id")), edges)
+    val base = java.nio.file.Files.createTempDirectory("graft-iso").toString + "/iso"
+    GraphLoaders.writeMetisSubgraphs(g, parts = 2, base)
+    val rows = GraphLoaders.partitionStats(spark, base, 2).orderBy("part").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(rows === Array((0L, 2L, 3L, 3L), (1L, 3L, 3L, 3L)))
+    val back = (0 until 2).map(p => GraphLoaders.metisGraph(spark, s"$base.subgraph.$p"))
+    assert(back.flatMap(_.vertices.collect().map(_.getLong(0))).sorted === Seq(1L, 2L, 3L, 4L, 5L))
+    val backE = back.flatMap(_.edges.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))).sorted
+    assert(backE === edges.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted)
+  }
+
   test("real reference fixtures load with the documented shapes") {
     // read-only inputs from /root/reference/graph (FIXTURES.md §A)
     val rd = GraphLoaders.edgeList(spark, "/root/reference/graph/rdsmall.graph")
     assert(rd.edges.count() === 24) // 24 directed lines after the 2-line header
     assert(rd.vertices.count() === 12) // vertex 11 gap-filled as isolated
-    val small = GraphLoaders.metisAdjacency(spark, "/root/reference/graph/small.graph")
+    val small = GraphLoaders.metisGraph(spark, "/root/reference/graph/small.graph")
     assert(small.vertices.count() === 10)
     assert(small.edges.count() === 20) // 10 undirected edges, both directions
-    val sub = GraphLoaders.metisSubgraph(spark, "/root/reference/graph/small.graph.subgraph.0")
+    val sub = GraphLoaders.metisGraph(spark, "/root/reference/graph/small.graph.subgraph.0")
     assert(sub.vertices.count() > 0 && sub.edges.count() > 0)
   }
 
@@ -83,7 +167,7 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
     val src = GraphLoaders.edgeList(spark, "/root/reference/graph/small.graph")
     val base = java.nio.file.Files.createTempDirectory("graft-sgw").toString + "/small"
     GraphLoaders.writeMetisSubgraphs(src, parts = 2, base)
-    val back = (0 until 2).map(p => GraphLoaders.metisSubgraph(spark, s"$base.subgraph.$p"))
+    val back = (0 until 2).map(p => GraphLoaders.metisGraph(spark, s"$base.subgraph.$p"))
     val origE = src.edges.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val backE = back.flatMap(_.edges.collect()
@@ -109,7 +193,7 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.range(1, 4).select(org.apache.spark.sql.functions.col("id")), edges)
     val base = java.nio.file.Files.createTempDirectory("graft-sgwf").toString + "/frac"
     GraphLoaders.writeMetisSubgraphs(g, parts = 1, base)
-    val back = GraphLoaders.metisSubgraph(spark, s"$base.subgraph.0")
+    val back = GraphLoaders.metisGraph(spark, s"$base.subgraph.0")
     val backE = back.edges.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(backE === edges.collect()
@@ -192,7 +276,7 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"locality cut $locCut should beat the hash baseline $hashCut")
     // the roundtrip stays exact under a custom assignment
     val backE = (0 until parts)
-      .map(p => GraphLoaders.metisSubgraph(spark, s"$tmp/loc.subgraph.$p").edges)
+      .map(p => GraphLoaders.metisGraph(spark, s"$tmp/loc.subgraph.$p").edges)
       .reduce(_ union _)
     assert(backE.count() === g.edges.count())
   }
