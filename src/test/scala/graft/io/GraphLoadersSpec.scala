@@ -160,11 +160,30 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sub.vertices.count() > 0 && sub.edges.count() > 0)
   }
 
+  test("in-repo fixtures load with the documented shapes") {
+    // rd8.graph: 2-line header `8` / `14`, then 7 undirected edges
+    // (1-2 1-3 2-3 3-4 3-5 4-5 7-8) as 14 directed lines; ids run 1..8 and
+    // vertex 6, in no edge, is gap-filled as isolated.
+    val rd = GraphLoaders.edgeList(spark, res("rd8.graph"))
+    assert(rd.edges.count() === 14) // 14 directed lines after the 2-line header
+    assert(rd.vertices.count() === 8)
+    // small10.graph: header `10 10`, one row per vertex, each of the 10
+    // undirected edges listed from both ends
+    val small = GraphLoaders.metisGraph(spark, res("small10.graph"))
+    assert(small.vertices.count() === 10)
+    assert(small.edges.count() === 20)
+    // ref3.graph.subgraph.0: 3 vertex rows holding 2 + 3 + 3 edge triples
+    val sub = GraphLoaders.metisGraph(spark, res("ref3.graph.subgraph.0"))
+    assert(sub.vertices.count() === 3 && sub.edges.count() === 8)
+  }
+
   test("subgraph writer roundtrip: write 2 parts, read back == original") {
-    // parts = 2: the one split of this fixture where every id-mod-parts
-    // class keeps both vertices and edges — at 3 parts the writer now
-    // (correctly) refuses the edgeless part 0, see the empty-part test.
-    val src = GraphLoaders.edgeList(spark, "/root/reference/graph/small.graph")
+    // small.graph is METIS adjacency (FIXTURES.md §A2), so it is read with
+    // the METIS reader: the edge-list reader would turn the `10 10` header
+    // into a self-loop and drop every 1-token row. Both id-mod-2 classes
+    // keep vertices and edges (1 and 2 are adjacent); at 3 parts the
+    // writer would accept it too, since 3 in part 0 owns edges to 1 and 2.
+    val src = GraphLoaders.metisGraph(spark, "/root/reference/graph/small.graph")
     val base = java.nio.file.Files.createTempDirectory("graft-sgw").toString + "/small"
     GraphLoaders.writeMetisSubgraphs(src, parts = 2, base)
     val back = (0 until 2).map(p => GraphLoaders.metisGraph(spark, s"$base.subgraph.$p"))
