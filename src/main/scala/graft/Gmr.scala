@@ -36,7 +36,10 @@ object Gmr {
         .where(!(col("value").startsWith("#") || col("value").startsWith("%") ||
           trim(col("value")) === ""))
         .where(size(split(trim(col("value")), "\\s+")) > 3)
-        .limit(1).count() > 0) GraphLoaders.metisGraph(spark, path)
+        // head(1) is one job with no generated `limit` counter; that
+        // counter's field is renamed on every call, so a plan holding it
+        // is compiled afresh each time
+        .head(1).nonEmpty) GraphLoaders.metisGraph(spark, path)
     else GraphLoaders.edgeList(spark, path)
 
   /** One algorithm run → (result DataFrame, iterations). Exposed

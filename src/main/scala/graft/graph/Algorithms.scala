@@ -611,9 +611,8 @@ object GraphOps {
   private val FrontierBroadcastBytesDefault = 64L << 20
 
   /** Semi-join filter `edges[keyCol ∈ ids]`, broadcasting the id set
-    * when `nIds` fits the frontier budget (ids is always O(V) and
-    * already materialized, so the count is a cheap cached-scan action
-    * paid by the caller). */
+    * when `nIds` fits the frontier budget (ids is always O(V); the
+    * caller counts it in the job that materializes it). */
   private def frontierSemi(edges: DataFrame, keyCol: String,
                            ids: DataFrame, nIds: Long): DataFrame = {
     val budget = edges.sparkSession.conf
@@ -689,9 +688,9 @@ object GraphOps {
       val active = frontier match {
         case None => edges
         case Some((f, n)) =>
-          val dirty = frontierSemi(edges, "src", f, n)
-            .select(col("dst").as("id")).distinct().materialize()
-          frontierSemi(edges, "dst", dirty, dirty.count())
+          val (dirty, nDirty) = frontierSemi(edges, "src", f, n)
+            .select(col("dst").as("id")).distinct().materializeCounted()
+          frontierSemi(edges, "dst", dirty, nDirty)
       }
       val votes = active
         .join(hint(labels), col("src") === col("id"))
@@ -722,12 +721,11 @@ object GraphOps {
         // one (coalesce keeps it everywhere else), so diff PICK against
         // the old labels — |pick| rows, not an O(V) next ⋈ labels
         // self-join.
-        val changed = hint(pick.as("n"))
+        val (changed, n) = hint(pick.as("n"))
           .join(labels.as("p"), col("n.id") === col("p.id"))
           .where(col("n.new_label") =!= col("p.label"))
           .select(col("n.id").as("id"))
-          .materialize()
-        val n = changed.count()
+          .materializeCounted()
         if (edges.sparkSession.conf.getOption("spark.graft.lpa.debug")
             .exists(_.toBoolean))
           println(s"[lpa] round $i changed=$n of $nVerts" +

@@ -71,8 +71,10 @@ trait VertexProgram {
   * `graph.h:755-921`, `MPI_Alltoallv` at `gmr.cpp:267`) has no analog —
   * the message `groupBy` IS the exchange, sized and routed by Spark's
   * shuffle service. Termination consensus (`gmr.cpp:222-232` piggybacks
-  * convergence on an `MPI_Allgather`) is the driver-side `max(delta)`
-  * aggregate that also materializes the superstep.
+  * convergence on an `MPI_Allgather`) rides the superstep's checkpoint
+  * job the same way: `max(_delta)` and the count of changed vertices are
+  * observed ([[Materialize.observed]]) while the new state is written,
+  * so the consensus costs no job of its own.
   *
   * Scale notes (100 TB design):
   *  - callers should persist `edges` (it is re-joined every superstep);
@@ -86,8 +88,9 @@ trait VertexProgram {
   *    switches every loop in the engine to reliable `checkpoint()`
   *    against a checkpoint dir so executor loss cannot kill a
   *    long-running BSP job at cluster scale.
-  *  - every superstep is one checkpoint action; convergence mode adds
-  *    the consensus aggregate (inherent: BSP).
+  *  - every superstep is one checkpoint action, in both modes: the
+  *    consensus aggregate, the fixed-mode empty-frontier probe and the
+  *    initial state count are all observed by a checkpoint job.
   */
 object GmrRunner {
 
@@ -126,7 +129,8 @@ object GmrRunner {
     * reference's per-iteration deviation report (`gmr.h:127-128`)
     * surfaced as data: exactly `iterations` supersteps (no early stop,
     * so the trace length is deterministic and oracle-unrollable), each
-    * paying the same one max(_delta) action convergence mode pays. */
+    * residual observed by the superstep's checkpoint job as in
+    * convergence mode. */
   def runTraced(graph: PropertyGraph, program: VertexProgram,
                 iterations: Int): RunResult =
     loop(graph, program, iterations, convergenceCheck = true, earlyStop = false)
@@ -139,23 +143,23 @@ object GmrRunner {
     // Break lineage into the (possibly self-referential) source plan so the
     // edges-derived vertex set can be re-joined against edges without
     // ambiguous-self-join resolution issues.
-    var state = program.initial(graph.vertices)
+    val (state0, stateRows) = program.initial(graph.vertices)
       .withColumn("_delta", lit(Double.MaxValue)) // everything is frontier at iter 0
-      .materialize()
+      .materializeCounted()
+    var state = state0
     // Superstep join strategy, decided ONCE per run from the materialized
-    // state's row count (a cheap cached-scan action — state is O(V) and
-    // just checkpointed). When the state fits the broadcast budget
-    // (guide §3.1: broadcast the side that fits), both per-superstep
-    // joins hint the O(V) side — the message join broadcasts the sender
-    // state against the O(E) edge frame and the update join broadcasts
-    // the aggregated messages — so the whole superstep has exactly ONE
-    // exchange (the message groupBy) and ZERO sorts, measured ×3-7
-    // faster per superstep at sf0.1 (Probe superstep, A-B-A-B). Without
-    // the hints the update join plans as a SortMergeJoin that exchanges
-    // + sorts the state and sorts the aggregate EVERY superstep.
+    // state's row count (counted by the checkpoint job itself). When the
+    // state fits the broadcast budget (guide §3.1: broadcast the side that
+    // fits), both per-superstep joins hint the O(V) side — the message
+    // join broadcasts the sender state against the O(E) edge frame and the
+    // update join broadcasts the aggregated messages — so the whole
+    // superstep has exactly ONE exchange (the message groupBy) and ZERO
+    // sorts, measured ×3-7 faster per superstep at sf0.1 (Probe
+    // superstep, A-B-A-B). Without the hints the update join plans as a
+    // SortMergeJoin that exchanges + sorts the state and sorts the
+    // aggregate EVERY superstep.
     // Beyond the budget (cluster-scale V) everything falls back to the
     // pre-r21 shape: edges hash-partitioned by src once, shuffle joins.
-    val stateRows = state.count()
     val bcastState = GraphOps.stateBroadcastFits(spark, stateRows)
     // Static side of every superstep join. Broadcast mode streams the
     // cached frame map-side (partitioning is irrelevant to a broadcast
@@ -192,9 +196,11 @@ object GmrRunner {
           program.delta(col("value"), program.updated(col("value"), col("_agg"))).as("_delta") +:
           staticCols.map(col): _*)
       iter += 1
-      val next = stepped.materialize()
+      val (next, m) = Materialize.observed(stepped,
+        coalesce(max(col("_delta")), lit(0.0)).as("max_delta"),
+        count_if(col("_delta") > 0.0).as("changed"))
       if (convergenceCheck) {
-        lastDelta = next.agg(max(col("_delta"))).first().getDouble(0)
+        lastDelta = m("max_delta").asInstanceOf[Double]
         residuals += lastDelta
         converged = earlyStop && lastDelta < program.tolerance
       } else if (earlyStop && program.frontierOnly && iter < maxIter) {
@@ -206,11 +212,10 @@ object GmrRunner {
         // is an exact no-op that still pays the full per-superstep
         // scheduler/checkpoint floor. Exit early: bit-identical result
         // (the oracle's extra unrolled rounds are no-ops on its side
-        // too). One cheap isEmpty (take-1 over the just-checkpointed
-        // O(V) frame) per superstep buys back every no-op round — the
-        // dup-cluster quotient CCs converge in 2-3 hops of their 8
-        // contract rounds.
-        converged = next.where(col("_delta") > 0.0).isEmpty
+        // too). The changed-vertex count observed by the checkpoint job
+        // buys back every no-op round at no extra job — the dup-cluster
+        // quotient CCs converge in 2-3 hops of their 8 contract rounds.
+        converged = m("changed") == 0L
       }
       state = next
       timings += (System.nanoTime() - tickStart) / 1e9

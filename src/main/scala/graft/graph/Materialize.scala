@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Superstep/state materialization with a pluggable durability mode.
   *
@@ -68,8 +69,24 @@ object Materialize {
     } else df.localCheckpoint(true)
   }
 
+  /** [[apply]] that also returns aggregates over the rows it writes,
+    * keyed by their names (`max(x).as("m")`). `Dataset.observe` computes
+    * them inside the checkpoint job, so a loop's convergence or size
+    * probe costs no action of its own. */
+  def observed(df: DataFrame, metric: Column, more: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val out = apply(df.observe(obs, metric, more: _*))
+    (out, obs.get)
+  }
+
   /** `df.materialize()` — chainable form of [[Materialize.apply]]. */
   implicit class MaterializeOps(private val df: DataFrame) extends AnyVal {
     def materialize(): DataFrame = Materialize(df)
+
+    /** [[materialize]] and the row count, counted by the same job. */
+    def materializeCounted(): (DataFrame, Long) = {
+      val (out, m) = observed(df, count(lit(1)).as("rows"))
+      (out, m("rows").asInstanceOf[Long])
+    }
   }
 }

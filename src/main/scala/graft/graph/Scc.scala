@@ -66,27 +66,29 @@ object Scc {
                        localFinishLimit: Long = 100000L): DataFrame = {
     val spark = directedEdges.sparkSession
     import spark.implicits._
-    var activeEdges = directedEdges.select(col("src"), col("dst")).materialize()
-    var active = activeEdges.select(col("src").as("id"))
+    // The active frames' sizes steer the loop (exit, local finish,
+    // broadcast gate); each is counted by the job that materializes it.
+    var (activeEdges, nActiveEdges) =
+      directedEdges.select(col("src"), col("dst")).materializeCounted()
+    var (active, nActive) = activeEdges.select(col("src").as("id"))
       .union(activeEdges.select(col("dst").as("id")))
-      .distinct().materialize()
+      .distinct().materializeCounted()
     var result = Seq.empty[(Long, Long)].toDF("id", "scc")
     var round = 0
     var finished = false
-    while (round < maxRounds && !finished && !active.isEmpty) {
-      val nActive = active.count()
-      if (nActive <= localFinishLimit && activeEdges.count() <= localFinishLimit) {
+    while (round < maxRounds && !finished && nActive > 0) {
+      if (nActive <= localFinishLimit && nActiveEdges <= localFinishLimit) {
         val verts = active.collect().map(_.getLong(0))
         val edgeArr = activeEdges.collect().map(r => (r.getLong(0), r.getLong(1)))
         result = result.union(localTarjan(verts, edgeArr).toSeq.toDF("id", "scc"))
         finished = true
       } else {
       // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): the
-      // color and surviving-vertex frames are O(|active|) — the loop
-      // guard already paid the count, so the broadcast-budget gate is
-      // free. When they fit, the per-round labeling/filter joins
-      // broadcast them and the edge frame streams map-side; beyond the
-      // budget the pre-r21 shuffle joins. Results identical either way.
+      // color and surviving-vertex frames are O(|active|) — the
+      // observed count makes the broadcast-budget gate free. When they
+      // fit, the per-round labeling/filter joins broadcast them and the
+      // edge frame streams map-side; beyond the budget the pre-r21
+      // shuffle joins. Results identical either way.
       val fits = GraphOps.stateBroadcastFits(spark, nActive)
       def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
       // r22: the round's own frames skip AQE replanning when broadcast-fit
@@ -113,11 +115,13 @@ object Scc {
       result = result
         .union(marked.where(col("m")).select(col("id"), col("color").as("scc")))
         .materialize()
-      active = marked.where(!col("m")).select("id").materialize()
-      activeEdges = activeEdges
-        .join(hint(active.select(col("id").as("src"))), "src")
-        .join(hint(active.select(col("id").as("dst"))), "dst")
-        .select("src", "dst").materialize()
+      val (nextActive, n) = marked.where(!col("m")).select("id").materializeCounted()
+      val (nextEdges, nEdges) = activeEdges
+        .join(hint(nextActive.select(col("id").as("src"))), "src")
+        .join(hint(nextActive.select(col("id").as("dst"))), "dst")
+        .select("src", "dst").materializeCounted()
+      active = nextActive; nActive = n
+      activeEdges = nextEdges; nActiveEdges = nEdges
       }
       }
       round += 1

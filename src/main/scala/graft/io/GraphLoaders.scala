@@ -41,14 +41,14 @@ object GraphLoaders {
         element_at(col("t"), 2).cast("long").as("dst"),
         coalesce(try_element_at(col("t"), lit(3)).cast("double"), lit(1.0)).as("weight"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-    val edges =
-      if (renumberZeroBased) {
-        val minId = toks.agg(least(min(col("src")), min(col("dst")))).first().getLong(0)
-        if (minId == 0L)
-          toks.select((col("src") + 1).as("src"), (col("dst") + 1).as("dst"), col("weight"))
-        else toks
-      } else toks
-    val maxId = edges.agg(greatest(max(col("src")), max(col("dst")))).first().getLong(0)
+    // min and max id in one job over the parse
+    val bounds = toks.agg(least(min(col("src")), min(col("dst"))),
+      greatest(max(col("src")), max(col("dst")))).first()
+    val zeroBased = renumberZeroBased && bounds.getLong(0) == 0L
+    val edges = if (zeroBased)
+        toks.select((col("src") + 1).as("src"), (col("dst") + 1).as("dst"), col("weight"))
+      else toks
+    val maxId = bounds.getLong(1) + (if (zeroBased) 1 else 0)
     PropertyGraph(spark.range(1, maxId + 1).select(col("id")), edges)
   }
 

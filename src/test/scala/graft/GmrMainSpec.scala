@@ -374,4 +374,31 @@ class GmrMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.toMap === Map(1L -> 2L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 1L, 6L -> 2L, 7L -> 2L, 8L -> 3L, 9L -> 3L))
   }
+
+  test("a warm second pass over every Gmr.run algorithm and Gmr.load compiles nothing") {
+    // Spark caches each generated class by its source, so a repeated op
+    // whose plans are the same must find every class it needs already
+    // compiled. Two ways to break this: a cache smaller than one pass's
+    // working set (each class is evicted before its next use), and a plan
+    // whose generated source differs on every call (a `limit`'s counter
+    // field is renamed per call).
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val algorithms = Seq("pagerank", "sssp", "bfs", "cc", "mst", "scc", "ppr",
+      "labelprop", "trianglecount")
+    // every algorithm on a METIS adjacency file and a headed edge list;
+    // loads also of a 0-based edge list and a METIS subgraph file
+    val runFiles = Seq("small10.graph", "rd8.graph").map(res)
+    val loadFiles = runFiles ++ Seq("edgelist0.graph", "ref3.graph.subgraph.0").map(res)
+    def pass(): Unit = {
+      loadFiles.foreach { f =>
+        val g = Gmr.load(spark, f)
+        g.vertices.collect(); g.edges.collect()
+      }
+      for (f <- runFiles; a <- algorithms) Gmr.run(spark, a, f)._1.collect()
+    }
+    pass()
+    val warm = METRIC_COMPILATION_TIME.getCount
+    pass()
+    assert(METRIC_COMPILATION_TIME.getCount - warm === 0L)
+  }
 }

@@ -57,4 +57,31 @@ class ReliableCheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(rel === local)
   }
+
+  test("GmrRunner residuals and iterations, observed by the checkpoint job, under Reliable == Local") {
+    // Each superstep's residual and changed-vertex count come from the
+    // job that checkpoints the new state, so both checkpoint kinds must
+    // deliver them. A zero state budget forces the shuffle-join superstep,
+    // which runs with AQE on; the default budget runs it with AQE off.
+    val path = getClass.getResource("/graphs/small10.graph").getPath
+    def runs() = {
+      val pr = PageRank.compat(graft.Gmr.load(spark, path))
+      val traced = GmrRunner.runTraced(pr.graph, pr.program, 6)
+      val conv = pr.converged()
+      val cc = GmrRunner.runFixed(pr.graph, ConnectedComponentsProgram, 8)
+      (traced.residuals, traced.iterations, conv.iterations, conv.lastDelta,
+        traced.vertices.orderBy("id").collect().toSeq,
+        cc.orderBy("id").collect().toSeq)
+    }
+    for (budget <- Seq(None, Some("0"))) {
+      budget.foreach(spark.conf.set(GraphOps.StateBroadcastBytesKey, _))
+      try {
+        val local = runs()
+        assert(local._1.length === 6 && local._2 === 6)
+        assert(local._1.head > local._1.last)
+        assert(local._4 < 1e-4)
+        assert(withReliable(runs()) === local)
+      } finally spark.conf.unset(GraphOps.StateBroadcastBytesKey)
+    }
+  }
 }
