@@ -30,8 +30,8 @@ import graft.functions.Portable
   * §6.2.1). At (bits=60, h=4) the floor is N²/2 × C(60,≤4)/2⁶⁰ ≈
   * N²/2 × 4.5e-13 — ~0.06 pairs at the same N, gone for any corpus the
   * banding itself can hold. The hamming threshold re-derivation is
-  * proportional (2/30 → 4/60 — the same per-bit noise fraction; the
-  * `Probe simham` histogram shows the population is smooth, so the
+  * proportional (2/30 → 4/60 — the same per-bit noise fraction: the
+  * all-pairs hamming histogram of the population is smooth, so the
   * fraction, not an absolute gap, is the invariant); bands follow
   * pigeonhole: 5 bands of 12 bits catch every pair with hamming ≤ 4.
   */

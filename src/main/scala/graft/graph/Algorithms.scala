@@ -119,71 +119,65 @@ object ConnectedComponentsProgram extends VertexProgram {
 /** Non-iterative whole-graph operators. */
 object GraphOps {
 
-  /** Broadcast budget for iterative-loop VERTEX STATE frames (r21, guide
-    * §3.1) — the adjacencyBroadcastBytes discipline applied to the BSP
-    * family: one deliberate bounded broadcast per superstep replaces the
-    * state-side exchange AND the per-superstep sort-merge sorts of both
-    * join sides (the superstep then has exactly one exchange — the
-    * message groupBy — which is the first-principles minimum for BSP).
-    * Estimated at a conservative 64 B per state row (id + value + delta
-    * + a static column or two, plus row overhead); 256 MB ≈ 4M vertices,
-    * routine executor memory on a real cluster. Larger vertex sets fall
-    * back to the pre-r21 shuffle-join shape automatically, so the knob
-    * is a latency optimization, never a correctness or OOM hazard. Set
-    * to 0 to force the shuffle shape (the A/B instrument the
-    * before/after plans in plans/r21/ were captured with). */
+  /** The engine's one budget for deliberate broadcasts: every frame the
+    * engine hints for broadcast on its own (loop vertex state, LPA's
+    * frontier id sets, the triangle kernels' adjacency table, the
+    * locality writer's assignment) is broadcast only when its estimated
+    * size fits, and takes the shuffle shape otherwise — a latency
+    * optimization, never a correctness or OOM hazard; both shapes give
+    * identical results (GraphPropertiesSpec). 256 MB is routine executor
+    * memory on a real cluster; `0` forces every shuffle path. */
   val StateBroadcastBytesKey = "spark.graft.stateBroadcastBytes"
   val StateBroadcastBytesDefault: Long = 256L << 20
   val StateBytesPerRow = 64L
 
-  /** Does an O(V) state frame of `rows` rows fit the state-broadcast
-    * budget? Shared by every iterative loop in the engine (GmrRunner,
-    * LPA, Luby MIS, k-core/k-truss peeling, multi-source BFS, Borůvka,
-    * SCC, semi-naive reachability, Lloyd assignment). */
-  def stateBroadcastFits(spark: org.apache.spark.sql.SparkSession,
-                         rows: Long): Boolean = {
+  /** Does a frame estimated at `bytes` fit the broadcast budget? */
+  def broadcastFits(spark: org.apache.spark.sql.SparkSession, bytes: Long): Boolean = {
     val budget = spark.conf.getOption(StateBroadcastBytesKey).map(_.toLong)
       .getOrElse(StateBroadcastBytesDefault)
-    budget > 0 && rows * StateBytesPerRow <= budget
+    budget > 0 && bytes <= budget
   }
+
+  /** [[broadcastFits]] for an O(V) frame of `rows` rows, at a
+    * conservative 64 B per row (id + value + delta + a static column or
+    * two, plus row overhead): 4M rows at the default. Shared by every
+    * iterative loop in the engine (GmrRunner, LPA, Luby MIS, k-core/
+    * k-truss peeling, multi-source BFS, Borůvka, SCC, semi-naive
+    * reachability, Lloyd assignment). When the state fits, each
+    * superstep broadcasts it and has one exchange (the message groupBy)
+    * and no sorts. */
+  def stateBroadcastFits(spark: org.apache.spark.sql.SparkSession,
+                         rows: Long): Boolean =
+    broadcastFits(spark, rows * StateBytesPerRow)
 
   /** [[stateBroadcastFits]] as a hint: `df` marked for broadcast when its
     * O(V)/O(frontier) row count fits the budget, unchanged otherwise. */
   def broadcastIfFits(df: DataFrame, rows: Long): DataFrame =
     if (stateBroadcastFits(df.sparkSession, rows)) broadcast(df) else df
 
-  /** r22: per-round AQE replanning latency in BROADCAST-FIT loops.
+  /** Runs `f` with `spark.sql.adaptive.enabled` off when `disable` (the
+    * loop's state fits the broadcast budget), restoring the previous
+    * value afterwards and on failure.
     *
-    * When a loop's state fits the broadcast budget, every per-round join
-    * is hint-pinned to a broadcast build of a dimension-sized frame and
-    * the round's only exchange is a map-combinable aggregate whose
-    * reduce input is dimension-sized — there is nothing left for AQE to
-    * re-decide (no join-strategy switches, no skew to split: no
-    * sort-merge join exists in these plans), but each materialized round
-    * still pays AQE's stage-by-stage re-optimization round trips.
-    * Measured at sf0.1 (Probe ab, warm pairs): g1 2.42/2.57 AQE-off vs
-    * 2.94/3.19 on; g27 3.10/3.45 vs 3.41/3.85 — 10-20% of whole-query
-    * time, pure driver latency. So broadcast-fit loop bodies run with
-    * AQE disabled, RESTORING the previous value afterwards (and on
-    * failure). This is deliberately NOT a blanket/local-mode tune:
-    * beyond the budget the loops keep the AQE shuffle shape with skew
-    * splitting and partition coalescing fully active, and everything
-    * outside loop bodies (scans, one-shot joins, finish assemblies)
-    * keeps AQE unconditionally. `spark.graft.loopAqeOff=false` is the
-    * kill switch / A/B instrument. */
-  val LoopAqeOffKey = "spark.graft.loopAqeOff"
+    * In a broadcast-fit loop every per-round join is hint-pinned to a
+    * broadcast build and the round's only exchange is a map-combinable
+    * aggregate with a dimension-sized reduce input, so AQE has nothing
+    * to re-decide, yet each materialized round still pays its
+    * stage-by-stage re-optimization. Measured on `gmr_cli`
+    * (perfbench, traced, 4 alternating pairs): AQE kept on inside loops
+    * makes pagerank 1.31 → 1.47 s, lpa 2.45 → 2.71 s and
+    * `graph.jobs_per_superstep` 4.29 → 5.74. Beyond the budget loops
+    * keep AQE (skew splitting, coalescing), as does everything outside
+    * loop bodies. The switch is session-global while `f` runs. */
   def withLoopAqe[T](spark: org.apache.spark.sql.SparkSession,
-                     disable: Boolean)(f: => T): T = {
-    val enabled = disable &&
-      spark.conf.getOption(LoopAqeOffKey).forall(_.toBoolean)
-    if (!enabled) f
+                     disable: Boolean)(f: => T): T =
+    if (!disable) f
     else {
       val key = "spark.sql.adaptive.enabled"
       val prev = spark.conf.get(key)
       spark.conf.set(key, "false")
       try f finally spark.conf.set(key, prev)
     }
-  }
 
   /** Priority composite shift for [[lubyMis]]: hash ∈ [0, P) with
     * P = 1e9+7, so hash·2³¹ + id is a strict total order in BIGINT for
@@ -375,16 +369,14 @@ object GraphOps {
 
   def triangleCount(canonicalEdges: DataFrame): Long = triangles(canonicalEdges).count()
 
-  /** Skew knobs for the id-oriented wedge fallback ([[trianglesSalted]]):
-    * a middle vertex whose `in·out` wedge product meets the threshold
-    * has its wedge set spread over `wedgeSalts` join keys. The default
-    * threshold (~4M pairs) marks only vertices whose single-key wedge
-    * set would dominate a task; the hot set is bounded by
-    * Σ(in·out)/threshold rows — broadcastable by construction. */
-  private val WedgeSaltsKey = "spark.graft.wedgeSalts"
-  private val WedgeSaltsDefault = 16
-  private val WedgeSaltThresholdKey = "spark.graft.wedgeSaltThreshold"
-  private val WedgeSaltThresholdDefault = 1L << 22
+  /** Skew constants of the id-oriented wedge fallback
+    * ([[trianglesSalted]]): a middle vertex whose `in·out` wedge product
+    * meets the threshold has its wedge set spread over `WedgeSalts` join
+    * keys. The threshold (~4M pairs) marks only vertices whose
+    * single-key wedge set would dominate a task; the hot set is bounded
+    * by Σ(in·out)/threshold rows — broadcastable by construction. */
+  private val WedgeSalts = 16
+  private val WedgeSaltThreshold = 1L << 22
 
   /** Wedge enumeration of the id-oriented formulation with HOT-MIDDLE
     * salting (VERDICT r8 item 3). The a<b<c wedge join keys on the
@@ -401,25 +393,20 @@ object GraphOps {
     * exist — only degree-orientation shrinks the count, and that
     * re-keys triangles away from the min-vertex attribution the grouped
     * contract needs); what the salt fixes is the per-task bound:
-    * `in·out` → `in·out / salts`. */
-  private[graph] def saltedWedges(canonicalEdges: DataFrame): DataFrame = {
-    val spark = canonicalEdges.sparkSession
-    // Clamp to ≥ 1: salts = 0 would explode hot b→c rows into an EMPTY
-    // salt array and silently drop their triangles.
-    val salts = math.max(1, spark.conf.getOption(WedgeSaltsKey).map(_.toInt)
-      .getOrElse(WedgeSaltsDefault))
-    val thr = spark.conf.getOption(WedgeSaltThresholdKey).map(_.toLong)
-      .getOrElse(WedgeSaltThresholdDefault)
+    * `in·out` → `in·out / salts`. `saltThreshold` is lowered only by
+    * tests, to salt small fixtures. */
+  private[graph] def saltedWedges(canonicalEdges: DataFrame,
+                                  saltThreshold: Long): DataFrame = {
     val e = canonicalEdges.select("src", "dst")
     val hot = e.groupBy(col("dst").as("b")).agg(count(lit(1)).as("ind"))
       .join(e.groupBy(col("src").as("b")).agg(count(lit(1)).as("outd")), "b")
-      .where(col("ind") * col("outd") >= thr)
+      .where(col("ind") * col("outd") >= saltThreshold)
       .select(col("b"), lit(true).as("hot"))
     val ab = e.join(broadcast(hot), e("dst") === hot("b"), "left_outer")
       .select(col("src"), col("dst"),
-        when(col("hot"), pmod(xxhash64(col("src")), lit(salts.toLong)))
+        when(col("hot"), pmod(xxhash64(col("src")), lit(WedgeSalts.toLong)))
           .otherwise(lit(0L)).as("salt"))
-    val saltArr = array((0 until salts).map(i => lit(i.toLong)): _*)
+    val saltArr = array((0 until WedgeSalts).map(i => lit(i.toLong)): _*)
     val bc = e.join(broadcast(hot), e("src") === hot("b"), "left_outer")
       .select(col("src"), col("dst"),
         explode(when(col("hot"), saltArr).otherwise(array(lit(0L)))).as("salt"))
@@ -435,9 +422,10 @@ object GraphOps {
     * key. The closing-edge join is unsalted: its key (a, c) is an edge
     * lookup bounded by the true pair list, with no per-key
     * amplification. */
-  private[graph] def trianglesSalted(canonicalEdges: DataFrame): DataFrame = {
+  private[graph] def trianglesSalted(canonicalEdges: DataFrame,
+                                     saltThreshold: Long): DataFrame = {
     val e = canonicalEdges.select("src", "dst")
-    saltedWedges(e)
+    saltedWedges(e, saltThreshold)
       .join(e.select(col("src").as("a"), col("dst").as("c")), Seq("a", "c"))
       .select(col("a"), col("b"), col("c"))
   }
@@ -465,33 +453,22 @@ object GraphOps {
       .cast("long").as("n_triangles"))
   }
 
-  /** Broadcast budget for the intersect kernel's adjacency table —
-    * deliberately its OWN knob, not `autoBroadcastJoinThreshold`: the
-    * 10 MB join default guards against broadcasting a join side per
-    * probe row, while this is ONE broadcast per query that replaces
-    * shuffling the Σdeg² wedge set (the r7 measurement: 1.5 s intersect
-    * vs ~9 s wedge at a 10 MB adjacency). 256 MB default — routine
-    * executor-memory territory on any real cluster; the wedge fallback
-    * covers everything beyond. */
-  private val AdjacencyBroadcastBytesKey = "spark.graft.adjacencyBroadcastBytes"
-  private val AdjacencyBroadcastBytesDefault = 256L << 20
-
   /** Kernel selector (VERDICT r7 item 3): does the canonical adjacency
-    * table fit the broadcast budget? Estimated honestly from one
-    * aggregate pass over the (usually already persisted) edge frame:
-    * 8 bytes per edge entry (the packed long arrays) + ~48 per distinct
-    * source row (row + array headers), with `approx_count_distinct`
-    * for the row term — a budget decision, not arithmetic that needs
-    * exactness. */
+    * table fit the broadcast budget ([[broadcastFits]])? The budget is
+    * the engine's, not `autoBroadcastJoinThreshold`: the 10 MB join
+    * default guards against broadcasting a join side per probe row,
+    * while this is ONE broadcast per query that replaces shuffling the
+    * Σdeg² wedge set (the r7 measurement: 1.5 s intersect vs ~9 s wedge
+    * at a 10 MB adjacency). Estimated from one aggregate pass over the
+    * (usually already persisted) edge frame: 8 bytes per edge entry
+    * (the packed long arrays) + ~48 per distinct source row (row +
+    * array headers), with `approx_count_distinct` for the row term — a
+    * budget decision, not arithmetic that needs exactness. */
   def adjacencyFitsBroadcast(canonicalEdges: DataFrame): Boolean = {
-    val budget = canonicalEdges.sparkSession.conf
-      .getOption(AdjacencyBroadcastBytesKey).map(_.toLong)
-      .getOrElse(AdjacencyBroadcastBytesDefault)
-    if (budget <= 0) return false
     val r = canonicalEdges
       .agg(count(lit(1)).as("e"), approx_count_distinct(col("src")).as("v"))
       .first()
-    8L * r.getLong(0) + 48L * r.getLong(1) <= budget
+    broadcastFits(canonicalEdges.sparkSession, 8L * r.getLong(0) + 48L * r.getLong(1))
   }
 
   /** Global triangle count with data-driven kernel choice: the
@@ -517,7 +494,13 @@ object GraphOps {
     * broadcast budget cannot concentrate its in·out wedge set in one
     * straggler task. */
   def triangleCountByGroup(canonicalEdges: DataFrame,
-                           group: Column => Column): DataFrame = {
+                           group: Column => Column): DataFrame =
+    triangleCountByGroup(canonicalEdges, group, WedgeSaltThreshold)
+
+  /** [[triangleCountByGroup]] with the fallback's salt threshold given. */
+  private[graph] def triangleCountByGroup(canonicalEdges: DataFrame,
+                                          group: Column => Column,
+                                          saltThreshold: Long): DataFrame = {
     // Uniform output contract for BOTH kernels: one row per group value
     // present among the edges' min-vertices, zero-triangle groups
     // included. Neither kernel supplies that on its own — the wedge
@@ -535,7 +518,7 @@ object GraphOps {
               col("asrc"), col("adst"))), lit(0L))
             .cast("long").as("n_triangles"))
       else
-        trianglesSalted(canonicalEdges)
+        trianglesSalted(canonicalEdges, saltThreshold)
           .groupBy(group(col("a")).as("part"))
           .agg(count(lit(1)).cast("long").as("n_triangles"))
     groups.join(sums, Seq("part"), "left_outer")
@@ -595,33 +578,14 @@ object GraphOps {
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_triangles"))
 
-  /** Kill switch for the frontier-incremental LPA plan (r10): `false`
-    * forces the full per-round recompute. Exists for the equivalence
-    * spec (GraphAlgoSpec proves frontier ≡ full per round) and as an
-    * operational escape hatch; results are identical either way. */
-  private val LpaFrontierKey = "spark.graft.lpa.frontier"
-
-  /** Broadcast budget for LPA's per-round frontier / dirty-vertex id
-    * sets — the adjacencyBroadcastBytes discipline: a deliberate
-    * bounded broadcast that turns both semi-joins into map-side
-    * filters (no edge-side shuffle), falling back to shuffle semi-joins
-    * beyond the budget. 64 MB ≈ 2M ids at the conservative 32 B/row
-    * estimate — routine executor memory at cluster scale. */
-  private val FrontierBroadcastBytesKey = "spark.graft.frontierBroadcastBytes"
-  private val FrontierBroadcastBytesDefault = 64L << 20
-
   /** Semi-join filter `edges[keyCol ∈ ids]`, broadcasting the id set
-    * when `nIds` fits the frontier budget (ids is always O(V); the
-    * caller counts it in the job that materializes it). */
+    * when `nIds` fits the broadcast budget, which turns the semi-join
+    * into a map-side filter with no edge-side shuffle (ids is always
+    * O(V); the caller counts it in the job that materializes it). */
   private def frontierSemi(edges: DataFrame, keyCol: String,
-                           ids: DataFrame, nIds: Long): DataFrame = {
-    val budget = edges.sparkSession.conf
-      .getOption(FrontierBroadcastBytesKey).map(_.toLong)
-      .getOrElse(FrontierBroadcastBytesDefault)
-    val keyed = ids.select(col("id").as(keyCol))
-    edges.join(if (nIds * 32L <= budget) broadcast(keyed) else keyed,
+                           ids: DataFrame, nIds: Long): DataFrame =
+    edges.join(broadcastIfFits(ids.select(col("id").as(keyCol)), nIds),
       Seq(keyCol), "left_semi")
-  }
 
   /** Label propagation (community detection), fixed supersteps. Each
     * step a vertex adopts the most frequent label among its in-neighbors
@@ -659,11 +623,16 @@ object GraphOps {
     * after a disengage. Same
     * fixed-iteration result as the full recompute, bit for bit
     * (GraphAlgoSpec proves equality at every iteration count). */
-  def labelPropagation(g: PropertyGraph, iters: Int): DataFrame = {
+  def labelPropagation(g: PropertyGraph, iters: Int): DataFrame =
+    labelPropagation(g, iters, frontierOn = true)
+
+  /** [[labelPropagation]]; `frontierOn = false` forces the full
+    * per-round recompute, the reference the equivalence tests compare
+    * the frontier plan against. */
+  private[graph] def labelPropagation(g: PropertyGraph, iters: Int,
+                                      frontierOn: Boolean): DataFrame = {
     val edges = g.edges.select(col("src"), col("dst"))
     var labels = g.vertices.select(col("id"), col("id").as("label"))
-    val frontierOn = edges.sparkSession.conf
-      .getOption(LpaFrontierKey).forall(_.toBoolean)
     // Full-round cutoff denominator AND the r21 broadcast-budget gate's
     // row bound; one O(V) count over the (small, usually parquet-backed)
     // vertex frame.
@@ -726,11 +695,6 @@ object GraphOps {
           .where(col("n.new_label") =!= col("p.label"))
           .select(col("n.id").as("id"))
           .materializeCounted()
-        if (edges.sparkSession.conf.getOption("spark.graft.lpa.debug")
-            .exists(_.toBoolean))
-          println(s"[lpa] round $i changed=$n of $nVerts" +
-            s" (next round ${if (n == 0) "fixpoint"
-              else if (2 * n >= nVerts) "full" else "frontier"})")
         if (n == 0) fixed = true
         val wasFrontier = frontier.isDefined
         frontier = if (2 * n >= nVerts) None else Some((changed, n))

@@ -94,13 +94,10 @@ trait VertexProgram {
   */
 object GmrRunner {
 
-  /** `supersteps(i)` = wall-clock seconds of superstep i+1 — the engine's
-    * analog of the reference's per-phase timing report
-    * (`/root/reference/gmr.h:369-380`); here one superstep is one fused
-    * Catalyst plan, so per-phase (map/sort/reduce/update) splits don't
-    * exist separately. */
+  /** The final vertex state, the supersteps run, the last observed
+    * max-abs delta, and (convergence and traced modes) every
+    * superstep's residual in order. */
   final case class RunResult(vertices: DataFrame, iterations: Int, lastDelta: Double,
-                             supersteps: Seq[Double] = Nil,
                              residuals: Seq[Double] = Nil)
 
   /** Run to convergence (max-abs-delta < tolerance, `gmr.h:125`) or the
@@ -120,11 +117,6 @@ object GmrRunner {
   def runFixed(graph: PropertyGraph, program: VertexProgram, iterations: Int): DataFrame =
     loop(graph, program, iterations, convergenceCheck = false).vertices
 
-  /** [[runFixed]] keeping the per-superstep timings (builder-side
-    * instrumentation; `graft.Probe g1`). */
-  def loopTimed(graph: PropertyGraph, program: VertexProgram, iterations: Int): RunResult =
-    loop(graph, program, iterations, convergenceCheck = false)
-
   /** [[runFixed]] with per-superstep residual recording — the
     * reference's per-iteration deviation report (`gmr.h:127-128`)
     * surfaced as data: exactly `iterations` supersteps (no early stop,
@@ -135,9 +127,12 @@ object GmrRunner {
                 iterations: Int): RunResult =
     loop(graph, program, iterations, convergenceCheck = true, earlyStop = false)
 
-  private def loop(graph: PropertyGraph, program: VertexProgram, maxIter: Int,
-                   convergenceCheck: Boolean,
-                   earlyStop: Boolean = true): RunResult = {
+  /** The superstep loop behind every mode: at most `maxIter`
+    * supersteps, stopping early on convergence (`convergenceCheck`) or,
+    * in fixed mode, on an emptied frontier, unless `earlyStop` is off. */
+  private[graph] def loop(graph: PropertyGraph, program: VertexProgram, maxIter: Int,
+                          convergenceCheck: Boolean,
+                          earlyStop: Boolean = true): RunResult = {
     val spark = graph.edges.sparkSession
     val nShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // Break lineage into the (possibly self-referential) source plan so the
@@ -154,10 +149,10 @@ object GmrRunner {
     // join broadcasts the sender state against the O(E) edge frame and the
     // update join broadcasts the aggregated messages — so the whole
     // superstep has exactly ONE exchange (the message groupBy) and ZERO
-    // sorts, measured ×3-7 faster per superstep at sf0.1 (Probe
-    // superstep, A-B-A-B). Without the hints the update join plans as a
-    // SortMergeJoin that exchanges + sorts the state and sorts the
-    // aggregate EVERY superstep.
+    // sorts, measured ×3-7 faster per superstep at sf0.1 (A-B-A-B
+    // against the shuffle shape). Without the hints the update join
+    // plans as a SortMergeJoin that exchanges + sorts the state and
+    // sorts the aggregate EVERY superstep.
     // Beyond the budget (cluster-scale V) everything falls back to the
     // pre-r21 shape: edges hash-partitioned by src once, shuffle joins.
     val bcastState = GraphOps.stateBroadcastFits(spark, stateRows)
@@ -176,14 +171,12 @@ object GmrRunner {
     var iter = 0
     var lastDelta = Double.MaxValue
     var converged = false
-    val timings = Seq.newBuilder[Double]
     val residuals = Seq.newBuilder[Double]
     // r22: broadcast-fit supersteps skip AQE's per-round replanning
     // (see GraphOps.withLoopAqe — hint-pinned plans, dimension-sized
     // exchanges; AQE stays on for the shuffle fallback shape).
     GraphOps.withLoopAqe(spark, bcastState) {
     while (iter < maxIter && !converged) {
-      val tickStart = System.nanoTime()
       val senders = if (program.frontierOnly) state.where(col("_delta") > 0.0) else state
       val msgs = program.messages(
         if (bcastState) broadcast(senders) else senders, edges)
@@ -218,11 +211,9 @@ object GmrRunner {
         converged = m("changed") == 0L
       }
       state = next
-      timings += (System.nanoTime() - tickStart) / 1e9
     }
     }
     edges.unpersist(blocking = false)
-    RunResult(state.drop("_delta"), iter, lastDelta, timings.result(),
-      residuals.result())
+    RunResult(state.drop("_delta"), iter, lastDelta, residuals.result())
   }
 }

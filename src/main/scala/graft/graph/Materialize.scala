@@ -39,19 +39,9 @@ object Materialize {
   def reliable(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption(ReliableKey).contains("true")
 
-  /** Builder-side plan capture (r21): `spark.graft.explainMaterialize=true`
-    * prints the formatted physical plan of every frame right before it is
-    * checkpointed. Loop-round plans are invisible in the final query's
-    * explain (checkpointing truncates lineage), so this is the instrument
-    * that captures a loop's per-round join/exchange shape; never set by
-    * the driver (one string conf lookup per materialize when off). */
-  private val ExplainKey = "spark.graft.explainMaterialize"
-
   /** Eagerly materialize `df` and truncate its lineage, honoring the
     * session's durability mode. */
   def apply(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf.getOption(ExplainKey).contains("true"))
-      df.explain("formatted")
     if (reliable(df)) {
       val sc = df.sparkSession.sparkContext
       val want = df.sparkSession.conf.getOption(DirKey).getOrElse(

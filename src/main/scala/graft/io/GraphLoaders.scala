@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.PropertyGraph
+import graft.graph.{GraphOps, PropertyGraph}
 
 /** Loaders for the reference's text graph formats (SURVEY.md §2.1
   * O1/O4/O5/O6, FIXTURES.md §A): [[edgeList]] for edge lists, and ONE
@@ -238,22 +238,19 @@ object GraphLoaders {
     val spark = g.edges.sparkSession
     // The assignment is consumed twice (edge dst ownership + vertex
     // ownership) and its plan is the LPA/LPT pipeline — persist it once.
-    // It is O(V) two-long rows, so when it fits the broadcast budget
-    // (same discipline as spark.graft.adjacencyBroadcastBytes — one
-    // deliberate broadcast per write replacing an O(E) shuffle exchange
-    // on the edge side, which the sf10 decomposition named as the write
-    // leg's dominant cost term; VERDICT r9 item 2) the ownership joins
-    // broadcast; beyond the budget they fall back to the shuffle join.
+    // It is O(V) two-long rows, so when it fits the engine's broadcast
+    // budget (GraphOps.broadcastFits) the ownership joins broadcast it:
+    // one deliberate broadcast per write replacing an O(E) shuffle
+    // exchange on the edge side, which the sf10 decomposition named as
+    // the write leg's dominant cost term (VERDICT r9 item 2). Beyond the
+    // budget they fall back to the shuffle join.
     val assignPersisted = assignment.map(_
       .select(col("id"), col("part").cast("long").as("part"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val assignBroadcasts = assignPersisted.exists { a =>
-      val budget = spark.conf.getOption(AssignmentBroadcastBytesKey)
-        .map(_.toLong).getOrElse(AssignmentBroadcastBytesDefault)
-      // 16 payload bytes + ~16 row overhead per (id, part) row; the
-      // count also materializes the persisted frame exactly once.
-      budget > 0 && 32L * a.count() <= budget
-    }
+    // 16 payload bytes + ~16 row overhead per (id, part) row; the count
+    // also materializes the persisted frame exactly once.
+    val assignBroadcasts = assignPersisted.exists(a =>
+      GraphOps.broadcastFits(spark, 32L * a.count()))
     // Owner of vertex v: the assignment frame's part when provided (the
     // locality path, SURVEY §2.1 O8), else `id mod parts` (the reference's
     // random/hash convention, O7 — also the fallback for ids the
@@ -374,16 +371,6 @@ object GraphLoaders {
       assignPersisted.foreach(_.unpersist(blocking = false))
     }
   }
-
-  /** Broadcast budget for the locality writer's `(id, part)` assignment
-    * frame — the adjacencyBroadcastBytes discipline (Algorithms.scala):
-    * a deliberate one-per-write broadcast that deletes the edge-side
-    * shuffle exchange from the ownership join, NOT the per-join
-    * autoBroadcastJoinThreshold guard. 256 MB ≈ 8M vertices of
-    * assignment — routine executor memory on a real cluster; larger
-    * assignments fall back to the shuffle join automatically. */
-  private val AssignmentBroadcastBytesKey = "spark.graft.assignmentBroadcastBytes"
-  private val AssignmentBroadcastBytesDefault = 256L << 20
 
   /** Locality-aware part assignment — the engine's analog of the
     * reference's Zoltan/METIS "minimize inter-node traffic" partitioner

@@ -252,7 +252,7 @@ object DedupQueries {
     * fingerprint, hamming ≤ 4 (r10; was 3 × 10 / ≤ 2 over 30 bits — the
     * threshold re-derivation is proportional, 2/30 → 4/60, the same
     * per-bit noise fraction; see [[graft.dedup.SimHash]] for the floor
-    * math and `Probe simham` for the calibration histogram). maxHamming
+    * math). maxHamming
     * ≤ bands-1 is what makes the banding lossless (pigeonhole: ≤4
     * flipped bits can dirty at most 4 of the 5 slices). The wider
     * slices also SHRINK the candidate volume: chance band collisions
@@ -583,24 +583,6 @@ object DedupQueries {
         coalesce(col("comp"), col("rep"), col("doc_id")).as("canonical_id"))
       .withColumn("is_dup", col("doc_id") =!= col("canonical_id"))
       .orderBy("doc_id")
-  }
-
-  /** Builder-probe helpers (`Probe d18`): the d18 pipeline's first two
-    * phases in isolation, for wall-time decomposition. Not part of the
-    * query surface. */
-  def d18RepOnly(s: SparkSession, d: String): DataFrame =
-    simhashFingerprints(s, d)
-      .groupBy(col("simhash")).agg(min(col("id")).as("rep"))
-      .join(simhashFingerprints(s, d), "simhash")
-      .select(col("id"), col("rep"))
-  def d18QedgesOnly(s: SparkSession, d: String): DataFrame = {
-    val rep = d18RepOnly(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    simhashPairs(s, d)
-      .join(rep.select(col("id").as("doc_a"), col("rep").as("src")), "doc_a")
-      .join(rep.select(col("id").as("doc_b"), col("rep").as("dst")), "doc_b")
-      .where(col("src") =!= col("dst"))
-      .select("src", "dst").distinct()
   }
 
   /** d7 shingle width: 4-word n-grams — long enough that incidental

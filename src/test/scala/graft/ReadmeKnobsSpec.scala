@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** README's "Tuning knobs" table must list every `spark.graft.*` conf the
-  * engine reads: each `"spark.graft.` string literal under `src/main`
-  * needs a table row. */
+/** README's "Tuning knobs" table must list exactly the `spark.graft.*`
+  * confs the engine reads: each `"spark.graft.` string literal under
+  * `src/main` needs a table row, and each row must name such a literal,
+  * so a deleted knob cannot linger in the table. */
 class ReadmeKnobsSpec extends AnyFunSuite {
 
   test("README's knob table lists every spark.graft.* key read in src/main") {
@@ -19,5 +20,6 @@ class ReadmeKnobsSpec extends AnyFunSuite {
     val rows = "(?m)^\\| `(spark\\.graft\\.[A-Za-z0-9.]+)` \\|".r
       .findAllMatchIn(readme).map(_.group(1)).toSet
     assert((keys -- rows).isEmpty, s"keys missing from README's knob table: ${keys -- rows}")
+    assert((rows -- keys).isEmpty, s"README knob rows no key in src/main reads: ${rows -- keys}")
   }
 }

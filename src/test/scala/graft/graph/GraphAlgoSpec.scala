@@ -48,10 +48,11 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fixed mode early-exits on an emptied frontier, result identical (r21)") {
     // Line 1-2-3: CC converges in 2 hops; frontier empties at superstep 3.
-    // loopTimed is fixed mode (convergenceCheck=false) — with the r21
-    // early exit it must stop well short of the requested 10 supersteps
-    // and still produce the exact fixpoint labels.
-    val r = GmrRunner.loopTimed(lineGraph, ConnectedComponentsProgram, 10)
+    // Fixed mode (convergenceCheck=false) — with the r21 early exit it
+    // must stop well short of the requested 10 supersteps and still
+    // produce the exact fixpoint labels.
+    val r = GmrRunner.loop(lineGraph, ConnectedComponentsProgram, 10,
+      convergenceCheck = false)
     assert(r.iterations < 10, s"expected early exit, ran ${r.iterations}")
     val labels = r.vertices.collect()
       .map(x => x.getLong(0) -> x.getDouble(1)).toMap
@@ -59,7 +60,7 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Non-frontier programs must NOT early-exit in fixed mode (PageRank
     // needs every contribution every round).
     val pr = PageRank(lineGraph)
-    val r2 = GmrRunner.loopTimed(pr.graph, pr.program, 4)
+    val r2 = GmrRunner.loop(pr.graph, pr.program, 4, convergenceCheck = false)
     assert(r2.iterations === 4)
   }
 
@@ -103,7 +104,7 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions.{col, pmod, lit}
     val e = edgeDf(1L -> 2L, 1L -> 3L, 2L -> 3L, 2L -> 4L, 3L -> 4L, 4L -> 5L,
       3L -> 5L, 1L -> 5L)
-    val key = "spark.graft.adjacencyBroadcastBytes"
+    val key = GraphOps.StateBroadcastBytesKey
     def grouped(): Map[Long, Long] =
       GraphOps.triangleCountByGroup(e, x => pmod(x, lit(2L))).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -158,21 +159,20 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val high = (0L until 300L).map(h => (hub, 1001L + h))
     val closing = Seq((0L, 1001L), (1L, 1002L), (2L, 1003L))
     val e = (low ++ high ++ closing).toDF("src", "dst")
-    val budgetKey = "spark.graft.adjacencyBroadcastBytes"
-    val thrKey = "spark.graft.wedgeSaltThreshold"
+    val budgetKey = GraphOps.StateBroadcastBytesKey
     // Restore whatever AQE setting the suite session runs with, not a
     // hardcoded "true" (ADVICE r9: the hardcode leaked config if the
     // session ever ran with AQE off by default).
     val aqePrior = spark.conf.getOption("spark.sql.adaptive.enabled")
     try {
-      spark.conf.set(thrKey, "1000") // 90,000 ≥ 1000 → the hub is hot
+      val thr = 1000L // 90,000 ≥ 1000 → the hub is hot
       // forced fallback == intersect kernel on the star fixture
       spark.conf.set(budgetKey, "1")
       assert(!GraphOps.adjacencyFitsBroadcast(e))
-      val fb = GraphOps.triangleCountByGroup(e, x => pmod(x, lit(3L))).collect()
+      val fb = GraphOps.triangleCountByGroup(e, x => pmod(x, lit(3L)), thr).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       spark.conf.set(budgetKey, "10485760")
-      val bc = GraphOps.triangleCountByGroup(e, x => pmod(x, lit(3L))).collect()
+      val bc = GraphOps.triangleCountByGroup(e, x => pmod(x, lit(3L)), thr).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fb === bc, "salted fallback must equal the intersect kernel")
       assert(fb.values.sum === 3L)
@@ -183,7 +183,7 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
       // at real scale the hot partitions are nowhere near the advisory
       // size, so coalescing would never merge them.
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val sizes = GraphOps.saltedWedges(e).rdd
+      val sizes = GraphOps.saltedWedges(e, thr).rdd
         .mapPartitions(it => Iterator(it.size.toLong)).collect().filter(_ > 0)
       val total = sizes.sum
       assert(total >= 90000L, s"expected the hub's wedge set, saw $total")
@@ -193,7 +193,6 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"straggler partition: max ${sizes.max} vs mean $mean (sizes: ${sizes.toSeq})")
     } finally {
       spark.conf.unset(budgetKey)
-      spark.conf.unset(thrKey)
       aqePrior match {
         case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
         case None => spark.conf.unset("spark.sql.adaptive.enabled")
@@ -215,23 +214,18 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
       a <- 0L until n; b <- (a + 1) until n
       if rnd.nextDouble() < 0.15
     } yield (a, b)).toDF("src", "dst")
-    val budgetKey = "spark.graft.adjacencyBroadcastBytes"
-    val thrKey = "spark.graft.wedgeSaltThreshold"
+    val budgetKey = GraphOps.StateBroadcastBytesKey
     try {
-      spark.conf.set(thrKey, "1")
       spark.conf.set(budgetKey, "1")
-      val fb = GraphOps.triangleCountByGroup(edges, x => pmod(x, lit(4L))).collect()
+      val fb = GraphOps.triangleCountByGroup(edges, x => pmod(x, lit(4L)), 1L).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       spark.conf.set(budgetKey, "10485760")
-      val bc = GraphOps.triangleCountByGroup(edges, x => pmod(x, lit(4L))).collect()
+      val bc = GraphOps.triangleCountByGroup(edges, x => pmod(x, lit(4L)), 1L).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fb === bc, "fully-salted fallback must equal the intersect kernel")
       assert(fb.values.sum === GraphOps.triangleCount(edges))
       assert(fb.values.sum > 0, "fixture must contain triangles")
-    } finally {
-      spark.conf.unset(budgetKey)
-      spark.conf.unset(thrKey)
-    }
+    } finally spark.conf.unset(budgetKey)
   }
 
   test("per-vertex triangle counts credit all corners") {
@@ -302,18 +296,14 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val bridge = Seq((11L, 20L), (40L, 41L), (41L, 42L), (42L, 43L))
     val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(
       (e1 ++ e2 ++ bridge).toDF("src", "dst")))
-    def labelsAt(k: Int, frontier: Boolean): Map[Long, Long] = {
-      spark.conf.set("spark.graft.lpa.frontier", frontier.toString)
-      GraphOps.labelPropagation(g, k).collect()
+    def labelsAt(k: Int, frontier: Boolean): Map[Long, Long] =
+      GraphOps.labelPropagation(g, k, frontier).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    try {
-      // Per-round equality: equal final labels at EVERY iteration count
-      // k pins every intermediate round (round k is some run's last).
-      for (k <- 1 to 6)
-        assert(labelsAt(k, frontier = true) === labelsAt(k, frontier = false),
-          s"frontier and full recompute diverged at round $k")
-    } finally spark.conf.unset("spark.graft.lpa.frontier")
+    // Per-round equality: equal final labels at EVERY iteration count
+    // k pins every intermediate round (round k is some run's last).
+    for (k <- 1 to 6)
+      assert(labelsAt(k, frontier = true) === labelsAt(k, frontier = false),
+        s"frontier and full recompute diverged at round $k")
   }
 
   test("frontier LPA early-exits at the fixpoint with the exact fixed-iter result") {
@@ -324,17 +314,13 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     // early exit only fires on a genuinely empty frontier.
     val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(
       edgeDf(1L -> 2L, 2L -> 3L, 1L -> 3L, 7L -> 8L)))
-    def labelsAt(k: Int, frontier: Boolean): Map[Long, Long] = {
-      spark.conf.set("spark.graft.lpa.frontier", frontier.toString)
-      GraphOps.labelPropagation(g, k).collect()
+    def labelsAt(k: Int, frontier: Boolean): Map[Long, Long] =
+      GraphOps.labelPropagation(g, k, frontier).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    try {
-      val full = labelsAt(20, frontier = false)
-      assert(labelsAt(20, frontier = true) === full)
-      assert(full.view.filterKeys(Set(1L, 2L, 3L)).values.toSet.size === 1,
-        "triangle must agree on one label at the fixpoint")
-    } finally spark.conf.unset("spark.graft.lpa.frontier")
+    val full = labelsAt(20, frontier = false)
+    assert(labelsAt(20, frontier = true) === full)
+    assert(full.view.filterKeys(Set(1L, 2L, 3L)).values.toSet.size === 1,
+      "triangle must agree on one label at the fixpoint")
   }
 
   test("partition invariance: same SSSP result with 1 and 4 shuffle partitions") {

@@ -1,7 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, explode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, explode, lit, pmod}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.BeforeAndAfterAll
@@ -189,6 +189,87 @@ class GraphPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(r => r.getLong(0) -> ((r.getBoolean(1), r.getBoolean(2), r.getLong(3))))
         .toMap
       assert(got === want, s"pairs=$canon")
+    }
+  }
+
+  /** A vertex count, a hub, and weighted directed edges over 1..n:
+    * self-loops, duplicate edges, one hub wired to at least half the
+    * vertices, and isolated ids beyond n. */
+  private val genMixed: Gen[(Long, Long, List[(Long, Long, Double)])] = for {
+    n <- Gen.choose(4L, 14L)
+    es <- Gen.listOf(for {
+      a <- Gen.choose(1L, n); b <- Gen.choose(1L, n)
+      w <- Gen.choose(1, 8).map(_ / 2.0)
+    } yield (a, b, w))
+    dup <- Gen.someOf(es)
+    hub <- Gen.choose(1L, n)
+    spokes <- Gen.pick((n / 2).toInt, 1L to n)
+    tail <- Gen.choose(1L, 3L)
+  } yield (n + tail, hub, es ++ dup ++ spokes.map(s => (hub, s, 1.0)))
+
+  /** `f` at the default broadcast budget and at budget 0, which forces
+    * the shuffle side of every gate. */
+  private def atBothBudgets[A](f: => A): (A, A) = {
+    val atDefault = f
+    spark.conf.set(GraphOps.StateBroadcastBytesKey, "0")
+    try (atDefault, f) finally spark.conf.unset(GraphOps.StateBroadcastBytesKey)
+  }
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("broadcast and shuffle paths agree: default budget vs stateBroadcastBytes=0") {
+    forAll(genMixed) { case (n, hub, es) =>
+      import spark.implicits._
+      import graft.io.GraphLoaders
+      val ctx = s"n=$n hub=$hub es=$es"
+      val vertices = spark.range(1, n + 1).select(col("id"))
+      val directed = es.toDF("src", "dst", "weight")
+      val sym = PropertyGraph.symmetrize(directed)
+      val g = PropertyGraph(vertices, directed)
+      val ug = PropertyGraph(vertices, sym)
+      val canon = es.collect { case (a, b, _) if a != b => (math.min(a, b), math.max(a, b)) }
+        .distinct.toDF("src", "dst")
+      def same(what: String)(df: => DataFrame): Unit = {
+        val (bc, sh) = atBothBudgets(rowsOf(df))
+        assert(bc === sh, s"$what: $ctx")
+      }
+      same("sssp")(GmrRunner.run(g, new Sssp(hub)).vertices)
+      same("cc")(GmrRunner.run(ug, ConnectedComponentsProgram).vertices)
+      val (prB, prS) = atBothBudgets(PageRank(g).fixed(5).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+      assert(prB.keySet === prS.keySet, s"pagerank: $ctx")
+      prB.foreach { case (v, x) => assert(math.abs(x - prS(v)) < 1e-9, s"pagerank $v: $ctx") }
+      for (frontier <- Seq(true, false))
+        same(s"lpa frontier=$frontier")(GraphOps.labelPropagation(ug, 5, frontier))
+      same("lubyMis")(GraphOps.lubyMis(vertices, sym, 3))
+      same("kCore")(GraphOps.kCore(sym, 2, 6))
+      same("kTruss")(GraphOps.kTruss(canon, 3, 4))
+      same("triangleCountByGroup")(GraphOps.triangleCountByGroup(canon, x => pmod(x, lit(3L))))
+      // Locality write → read: an LPA-community assignment at the most
+      // parts ≤ 3 whose every part owns a vertex and an edge (the
+      // writer's non-empty-part contract).
+      val labels = GraphOps.labelPropagation(ug, 3)
+      val (parts, assign) = (3 to 1 by -1).iterator.map { p =>
+        p -> GraphLoaders.localityAssignment(labels, p).collect()
+          .map(r => r.getLong(0) -> r.getAs[Number]("part").longValue).toMap
+      }.find { case (p, a) =>
+        (0L until p).forall(c => a.values.exists(_ == c) && es.exists(e => a(e._1) == c))
+      }.get
+      val assignDf = assign.toSeq.toDF("id", "part")
+      val (written, writtenShuffled) = atBothBudgets {
+        val base = java.nio.file.Files.createTempDirectory("graft-prop").toString + "/g"
+        GraphLoaders.writeMetisSubgraphs(g, parts, base, Some(assignDf))
+        val recs = GraphLoaders.metisRecords(spark, GraphLoaders.subgraphFiles(base, parts))
+        val ids = recs.select("id").collect().map(_.getLong(0)).sorted.toSeq
+        val back = recs.select(col("id"), explode(col("ns")).as("e"))
+          .select(col("id"), col("e.dst"), col("e.weight")).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+        (rowsOf(recs), ids, back)
+      }
+      assert(written === writtenShuffled, s"locality write, parts=$parts: $ctx")
+      assert(written._2 === (1L to n), s"locality roundtrip vertices: $ctx")
+      assert(written._3 === es.sorted, s"locality roundtrip edges, parts=$parts: $ctx")
     }
   }
 }
