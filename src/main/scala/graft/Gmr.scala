@@ -28,18 +28,14 @@ import graft.io.GraphLoaders
 object Gmr {
 
   /** Load a graph file, auto-detecting the reference's formats:
-    * `.subgraph.N` or any data line with >3 tokens → the METIS-family
-    * reader (its header's fmt mask decides the columns); otherwise edge
-    * list with optional single-token header lines. */
+    * `.subgraph.N` files and METIS adjacency files
+    * ([[GraphLoaders.isMetisAdjacency]]: the header's vertex and edge
+    * counts match the rows) → the METIS-family reader (its header's fmt
+    * mask decides the columns); anything else → edge list with optional
+    * single-token header lines. */
   def load(spark: SparkSession, path: String): PropertyGraph =
-    if (path.matches(".*\\.subgraph\\.\\d+$") || spark.read.text(path)
-        .where(!(col("value").startsWith("#") || col("value").startsWith("%") ||
-          trim(col("value")) === ""))
-        .where(size(split(trim(col("value")), "\\s+")) > 3)
-        // head(1) is one job with no generated `limit` counter; that
-        // counter's field is renamed on every call, so a plan holding it
-        // is compiled afresh each time
-        .head(1).nonEmpty) GraphLoaders.metisGraph(spark, path)
+    if (path.matches(".*\\.subgraph\\.\\d+$") || GraphLoaders.isMetisAdjacency(spark, path))
+      GraphLoaders.metisGraph(spark, path)
     else GraphLoaders.edgeList(spark, path)
 
   /** One algorithm run → (result DataFrame, iterations). Exposed

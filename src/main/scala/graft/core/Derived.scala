@@ -63,11 +63,10 @@ object Derived {
 
   /** Delete every derive-once cache entry (`target/graft_derived/
     * <family>/<tag>/…`) whose tag keys on one of `dirs` — the
-    * both-sides-cold guarantee for recorded measurements (the GScale
-    * sf10 probes since r8; the per-round Bench since r11, which wipes
-    * at start so every driver artifact is cold-comparable instead of
-    * silently mixing warm-cache and cold-build runs, VERDICT r10
-    * item 3). Bounded work: the derived root holds one small parquet
+    * both-sides-cold guarantee for recorded measurements (Bench and
+    * perfbench wipe at start, so every recorded run is cold-comparable
+    * instead of silently mixing warm-cache and cold-build runs, VERDICT
+    * r10 item 3). Bounded work: the derived root holds one small parquet
     * tree per (family, source-dir). */
   def wipeFor(dirs: Seq[String]): Unit = {
     val root = new java.io.File(s"${sys.props("user.dir")}/target/graft_derived")

@@ -26,8 +26,8 @@ import graft.functions.Portable
   * unrelated fingerprints collide at hamming ≤ h by pure chance with
   * probability C(bits, ≤h)/2^bits. At the old (bits=30, h=2) the dedup
   * FALSE-POSITIVE FLOOR was ≈ N²/2 × 466/2³⁰ — ~39k chance pairs
-  * measured on 500k content-independent docs (GScale sf10, SURVEY
-  * §6.2.1). At (bits=60, h=4) the floor is N²/2 × C(60,≤4)/2⁶⁰ ≈
+  * measured on 500k content-independent docs (a 100× replica of
+  * sf0.1, SURVEY §6.2.1). At (bits=60, h=4) the floor is N²/2 × C(60,≤4)/2⁶⁰ ≈
   * N²/2 × 4.5e-13 — ~0.06 pairs at the same N, gone for any corpus the
   * banding itself can hold. The hamming threshold re-derivation is
   * proportional (2/30 → 4/60 — the same per-bit noise fraction: the

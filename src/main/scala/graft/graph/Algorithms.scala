@@ -129,7 +129,6 @@ object GraphOps {
     * memory on a real cluster; `0` forces every shuffle path. */
   val StateBroadcastBytesKey = "spark.graft.stateBroadcastBytes"
   val StateBroadcastBytesDefault: Long = 256L << 20
-  val StateBytesPerRow = 64L
 
   /** Does a frame estimated at `bytes` fit the broadcast budget? */
   def broadcastFits(spark: org.apache.spark.sql.SparkSession, bytes: Long): Boolean = {
@@ -137,47 +136,6 @@ object GraphOps {
       .getOrElse(StateBroadcastBytesDefault)
     budget > 0 && bytes <= budget
   }
-
-  /** [[broadcastFits]] for an O(V) frame of `rows` rows, at a
-    * conservative 64 B per row (id + value + delta + a static column or
-    * two, plus row overhead): 4M rows at the default. Shared by every
-    * iterative loop in the engine (GmrRunner, LPA, Luby MIS, k-core/
-    * k-truss peeling, multi-source BFS, Borůvka, SCC, semi-naive
-    * reachability, Lloyd assignment). When the state fits, each
-    * superstep broadcasts it and has one exchange (the message groupBy)
-    * and no sorts. */
-  def stateBroadcastFits(spark: org.apache.spark.sql.SparkSession,
-                         rows: Long): Boolean =
-    broadcastFits(spark, rows * StateBytesPerRow)
-
-  /** [[stateBroadcastFits]] as a hint: `df` marked for broadcast when its
-    * O(V)/O(frontier) row count fits the budget, unchanged otherwise. */
-  def broadcastIfFits(df: DataFrame, rows: Long): DataFrame =
-    if (stateBroadcastFits(df.sparkSession, rows)) broadcast(df) else df
-
-  /** Runs `f` with `spark.sql.adaptive.enabled` off when `disable` (the
-    * loop's state fits the broadcast budget), restoring the previous
-    * value afterwards and on failure.
-    *
-    * In a broadcast-fit loop every per-round join is hint-pinned to a
-    * broadcast build and the round's only exchange is a map-combinable
-    * aggregate with a dimension-sized reduce input, so AQE has nothing
-    * to re-decide, yet each materialized round still pays its
-    * stage-by-stage re-optimization. Measured on `gmr_cli`
-    * (perfbench, traced, 4 alternating pairs): AQE kept on inside loops
-    * makes pagerank 1.31 → 1.47 s, lpa 2.45 → 2.71 s and
-    * `graph.jobs_per_superstep` 4.29 → 5.74. Beyond the budget loops
-    * keep AQE (skew splitting, coalescing), as does everything outside
-    * loop bodies. The switch is session-global while `f` runs. */
-  def withLoopAqe[T](spark: org.apache.spark.sql.SparkSession,
-                     disable: Boolean)(f: => T): T =
-    if (!disable) f
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try f finally spark.conf.set(key, prev)
-    }
 
   /** Priority composite shift for [[lubyMis]]: hash ∈ [0, P) with
     * P = 1e9+7, so hash·2³¹ + id is a strict total order in BIGINT for
@@ -201,49 +159,37 @@ object GraphOps {
   def lubyMis(vertices: DataFrame, symEdges: DataFrame, rounds: Int): DataFrame = {
     val edges = symEdges.select("src", "dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var state = vertices
-      .select(col("id"), lit("a").as("st"), lit(-1L).as("round_joined"))
-      .materialize()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): every
-    // per-round frame here — priorities, winners, knockouts — is bounded
-    // by the (shrinking) active vertex set, so when V fits the
-    // state-broadcast budget all five per-round joins become broadcast
-    // joins against the cached edge frame / the O(V) state, leaving the
-    // max-neighbor groupBy and the knockout distinct as the round's only
-    // exchanges. Shuffle shape beyond the budget, results identical.
-    val fits = stateBroadcastFits(edges.sparkSession, state.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    withLoopAqe(edges.sparkSession, fits) {
-    for (r <- 1 to rounds) {
+    // Priorities, winners and knockouts are bounded by |V|, the gate.
+    val mis = Superstep.fold(vertices
+        .select(col("id"), lit("a").as("st"), lit(-1L).as("round_joined")),
+        rounds) { gate => (state, r) =>
       val pri = state.where(col("st") === "a")
         .select(col("id"),
           (graft.functions.Portable.charHash(
             concat(col("id").cast("string"), lit("mis"), lit(r.toString)))
             * lit(MisShift) + col("id")).as("key"))
       val nbrMax = edges
-        .join(hint(pri.select(col("id").as("src"), col("key").as("skey"))), "src")
-        .join(hint(pri.select(col("id").as("dst"))), "dst")
+        .join(gate.hint(pri.select(col("id").as("src"), col("key").as("skey"))), "src")
+        .join(gate.hint(pri.select(col("id").as("dst"))), "dst")
         .groupBy(col("dst").as("id")).agg(max(col("skey")).as("mk"))
-      val win = pri.join(hint(nbrMax), Seq("id"), "left_outer")
+      val win = pri.join(gate.hint(nbrMax), Seq("id"), "left_outer")
         .where(col("mk").isNull || col("key") > col("mk"))
         .select(col("id"))
         .materialize()
-      val out = edges.join(hint(win.select(col("id").as("src"))), "src")
+      val out = edges.join(gate.hint(win.select(col("id").as("src"))), "src")
         .select(col("dst").as("id")).distinct()
-      state = state
-        .join(hint(win.withColumn("w", lit(true))), Seq("id"), "left_outer")
-        .join(hint(out.withColumn("o", lit(true))), Seq("id"), "left_outer")
+      state
+        .join(gate.hint(win.withColumn("w", lit(true))), Seq("id"), "left_outer")
+        .join(gate.hint(out.withColumn("o", lit(true))), Seq("id"), "left_outer")
         .select(col("id"),
           when(col("w"), lit("m"))
             .when(col("o") && col("st") === "a", lit("o"))
             .otherwise(col("st")).as("st"),
           when(col("w"), lit(r.toLong)).otherwise(col("round_joined"))
             .as("round_joined"))
-        .materialize()
-    }
-    }
+    }.state
     edges.unpersist(blocking = false)
-    state.select(col("id"), (col("st") === "m").as("in_mis"),
+    mis.select(col("id"), (col("st") === "m").as("in_mis"),
       (col("st") =!= "a").as("decided"), col("round_joined"))
   }
 
@@ -260,26 +206,18 @@ object GraphOps {
   def kCore(symEdges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val e2 = symEdges.select("src", "dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val s0 = e2.select(col("src").as("id")).distinct().materialize()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): the
-    // survivor set is O(V) and only shrinks — when V fits the
-    // state-broadcast budget both per-round semi-filters broadcast it and
-    // the cached edge frame streams map-side, leaving the degree groupBy
-    // as the round's only exchange. Shuffle shape beyond the budget.
-    val fits = stateBroadcastFits(e2.sparkSession, s0.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    var surv = s0
+    // The survivor set is O(V) and only shrinks: gated on |V|.
     val snapshots = Seq.newBuilder[DataFrame]
-    withLoopAqe(e2.sparkSession, fits) {
-    for (_ <- 1 to rounds) {
-      val deg = e2
-        .join(hint(surv.select(col("id").as("src"))), "src")
-        .join(hint(surv.select(col("id").as("dst"))), "dst")
+    val run = Superstep.fold(e2.select(col("src").as("id")).distinct(), rounds) {
+        gate => (surv, r) =>
+      if (r > 1) snapshots += surv // the last round's survivors, materialized
+      e2.join(gate.hint(surv.select(col("id").as("src"))), "src")
+        .join(gate.hint(surv.select(col("id").as("dst"))), "dst")
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      surv = deg.where(col("deg") >= k).select("id").materialize()
-      snapshots += surv
+        .where(col("deg") >= k).select("id")
     }
-    }
+    if (rounds > 0) snapshots += run.state
+    val s0 = run.initial
     val mc = snapshots.result().reduce(_ union _)
       .groupBy("id").agg(count(lit(1)).as("m"))
     e2.unpersist(blocking = false)
@@ -310,25 +248,14 @@ object GraphOps {
     // trivially in-truss. Pin the supported domain rather than pay a
     // left join + coalesce on the hot path for a degenerate k.
     require(k >= 3, s"kTruss is defined for k >= 3 (k=$k is the whole graph)")
-    val e0 = canonEdges.select("src", "dst").materialize()
-    var e = e0
-    // r22 (the GmrRunner superstep discipline, guide §2.4/§3.1): the
-    // edge frame is O(E) and only shrinks — when it fits the
-    // state-broadcast budget every per-round join (both wedge joins, the
-    // closing-edge join, the support filter join) hints the broadcast
-    // side, leaving the support groupBy as the round's only exchange.
-    // Pre-r22 each round planned checkpointed frames with default size
-    // stats, so the 3-way triangle join re-planned as sort-merge with
-    // fresh exchanges+sorts every cascade round. Shuffle shape beyond
-    // the budget, identical results (the gate bounds on the INITIAL
-    // edge count — an upper bound for every later round).
-    val fits = stateBroadcastFits(e0.sparkSession, e0.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
+    // The edge frame only shrinks, so the initial edge count gates every
+    // round. Checkpointed frames carry default size stats: unhinted, the
+    // 3-way triangle join re-plans as sort-merge every cascade round.
     val snapshots = Seq.newBuilder[DataFrame]
-    withLoopAqe(e0.sparkSession, fits) {
-    for (_ <- 1 to rounds) {
-      val tri = e.as("ab").join(hint(e.as("bc")), col("ab.dst") === col("bc.src"))
-        .join(hint(e.as("ac")),
+    val run = Superstep.fold(canonEdges.select("src", "dst"), rounds) { gate => (e, r) =>
+      if (r > 1) snapshots += e // the last round's survivors, materialized
+      val tri = e.as("ab").join(gate.hint(e.as("bc")), col("ab.dst") === col("bc.src"))
+        .join(gate.hint(e.as("ac")),
           col("ac.src") === col("ab.src") && col("ac.dst") === col("bc.dst"))
         .select(col("ab.src").as("a"), col("ab.dst").as("b"), col("bc.dst").as("c"))
       val sup = tri.select(explode(array(
@@ -337,12 +264,12 @@ object GraphOps {
           struct(col("a").as("src"), col("c").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .groupBy("src", "dst").agg(count(lit(1)).as("support"))
-      e = e.join(hint(sup), Seq("src", "dst"))
+      e.join(gate.hint(sup), Seq("src", "dst"))
         .where(col("support") >= k - 2)
-        .select("src", "dst").materialize()
-      snapshots += e
+        .select("src", "dst")
     }
-    }
+    if (rounds > 0) snapshots += run.state
+    val e0 = run.initial
     val mc = snapshots.result().reduce(_ union _)
       .groupBy("src", "dst").agg(count(lit(1)).as("m"))
     e0.join(mc, Seq("src", "dst"), "left_outer")
@@ -582,9 +509,9 @@ object GraphOps {
     * when `nIds` fits the broadcast budget, which turns the semi-join
     * into a map-side filter with no edge-side shuffle (ids is always
     * O(V); the caller counts it in the job that materializes it). */
-  private def frontierSemi(edges: DataFrame, keyCol: String,
+  private def frontierSemi(gate: Superstep.Gate, edges: DataFrame, keyCol: String,
                            ids: DataFrame, nIds: Long): DataFrame =
-    edges.join(broadcastIfFits(ids.select(col("id").as(keyCol)), nIds),
+    edges.join(gate.hint(ids.select(col("id").as(keyCol)), nIds),
       Seq(keyCol), "left_semi")
 
   /** Label propagation (community detection), fixed supersteps. Each
@@ -633,18 +560,8 @@ object GraphOps {
                                       frontierOn: Boolean): DataFrame = {
     val edges = g.edges.select(col("src"), col("dst"))
     var labels = g.vertices.select(col("id"), col("id").as("label"))
-    // Full-round cutoff denominator AND the r21 broadcast-budget gate's
-    // row bound; one O(V) count over the (small, usually parquet-backed)
-    // vertex frame.
+    // Full-round cutoff denominator, and the gate (labels and pick are O(V)).
     val nVerts = g.vertices.count()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): labels
-    // and pick are O(V) — when V fits the state-broadcast budget the vote
-    // join broadcasts the label side (the edge view streams map-side with
-    // no exchange) and the update/diff joins broadcast the pick side,
-    // leaving the two vote aggregates as the round's only exchanges.
-    // Shuffle shape beyond the budget, bit-identical labels either way.
-    val bcFits = stateBroadcastFits(edges.sparkSession, nVerts)
-    def hint(df: DataFrame): DataFrame = if (bcFits) broadcast(df) else df
     // None = recompute every vertex this round.
     var frontier: Option[(DataFrame, Long)] = None
     // Next full-mode round whose changed set we pay to measure, and the
@@ -652,17 +569,17 @@ object GraphOps {
     var nextCheck = 2
     var checkStep = 2
     var fixed = false
-    withLoopAqe(edges.sparkSession, bcFits) {
+    Superstep.gated(edges.sparkSession, nVerts) { gate =>
     for (i <- 1 to iters if !fixed) {
       val active = frontier match {
         case None => edges
         case Some((f, n)) =>
-          val (dirty, nDirty) = frontierSemi(edges, "src", f, n)
+          val (dirty, nDirty) = frontierSemi(gate, edges, "src", f, n)
             .select(col("dst").as("id")).distinct().materializeCounted()
-          frontierSemi(edges, "dst", dirty, nDirty)
+          frontierSemi(gate, edges, "dst", dirty, nDirty)
       }
       val votes = active
-        .join(hint(labels), col("src") === col("id"))
+        .join(gate.hint(labels), col("src") === col("id"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
       // argmax(c, ties -> min label) as a hash aggregate: max of the
       // lexicographic struct (c, -label) — map-side combinable, no
@@ -681,7 +598,7 @@ object GraphOps {
       // materialize so the vote pipeline runs once; non-check rounds
       // keep the lazy plan (next's materialize executes it).
       val pick = if (check) pickPlan.materialize() else pickPlan
-      val next = labels.join(hint(pick), Seq("id"), "left_outer")
+      val next = labels.join(gate.hint(pick), Seq("id"), "left_outer")
         .select(col("id"),
           coalesce(col("new_label"), col("label")).as("label"))
         .materialize()
@@ -690,7 +607,7 @@ object GraphOps {
         // one (coalesce keeps it everywhere else), so diff PICK against
         // the old labels — |pick| rows, not an O(V) next ⋈ labels
         // self-join.
-        val (changed, n) = hint(pick.as("n"))
+        val (changed, n) = gate.hint(pick.as("n"))
           .join(labels.as("p"), col("n.id") === col("p.id"))
           .where(col("n.new_label") =!= col("p.label"))
           .select(col("n.id").as("id"))

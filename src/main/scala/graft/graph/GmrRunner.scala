@@ -76,21 +76,11 @@ trait VertexProgram {
   * observed ([[Materialize.observed]]) while the new state is written,
   * so the consensus costs no job of its own.
   *
-  * Scale notes (100 TB design):
-  *  - callers should persist `edges` (it is re-joined every superstep);
-  *    [[run]] repartitions it once by `src` so the per-superstep join
-  *    co-locates without re-shuffling the static side.
-  *  - vertex state is checkpointed ([[Materialize]]) every superstep
-  *    to truncate lineage — unbounded lineage is the classic
-  *    iterative-Spark failure mode. The durability mode is session
-  *    conf: default `localCheckpoint`
-  *    (right for local[*]), `spark.graft.checkpoint.reliable=true`
-  *    switches every loop in the engine to reliable `checkpoint()`
-  *    against a checkpoint dir so executor loss cannot kill a
-  *    long-running BSP job at cluster scale.
-  *  - every superstep is one checkpoint action, in both modes: the
-  *    consensus aggregate, the fixed-mode empty-frontier probe and the
-  *    initial state count are all observed by a checkpoint job.
+  * The loop policy (broadcast gate, join hints, AQE scope, materialize
+  * cadence) is the superstep kernel's: [[loop]] is one
+  * [[Superstep.fold]], so every superstep is one checkpoint action
+  * ([[Materialize]], which truncates lineage and makes the state as
+  * durable as the session's checkpoint mode asks).
   */
 object GmrRunner {
 
@@ -127,93 +117,57 @@ object GmrRunner {
                 iterations: Int): RunResult =
     loop(graph, program, iterations, convergenceCheck = true, earlyStop = false)
 
-  /** The superstep loop behind every mode: at most `maxIter`
-    * supersteps, stopping early on convergence (`convergenceCheck`) or,
-    * in fixed mode, on an emptied frontier, unless `earlyStop` is off. */
+  /** The superstep loop behind every mode, a [[Superstep.fold]] over
+    * the vertex state: at most `maxIter` supersteps, stopping early on
+    * convergence (`convergenceCheck`) or, in fixed mode, on an emptied
+    * frontier, unless `earlyStop` is off. */
   private[graph] def loop(graph: PropertyGraph, program: VertexProgram, maxIter: Int,
                           convergenceCheck: Boolean,
                           earlyStop: Boolean = true): RunResult = {
     val spark = graph.edges.sparkSession
     val nShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Break lineage into the (possibly self-referential) source plan so the
-    // edges-derived vertex set can be re-joined against edges without
-    // ambiguous-self-join resolution issues.
-    val (state0, stateRows) = program.initial(graph.vertices)
+    val init = program.initial(graph.vertices)
       .withColumn("_delta", lit(Double.MaxValue)) // everything is frontier at iter 0
-      .materializeCounted()
-    var state = state0
-    // Superstep join strategy, decided ONCE per run from the materialized
-    // state's row count (counted by the checkpoint job itself). When the
-    // state fits the broadcast budget (guide §3.1: broadcast the side that
-    // fits), both per-superstep joins hint the O(V) side — the message
-    // join broadcasts the sender state against the O(E) edge frame and the
-    // update join broadcasts the aggregated messages — so the whole
-    // superstep has exactly ONE exchange (the message groupBy) and ZERO
-    // sorts, measured ×3-7 faster per superstep at sf0.1 (A-B-A-B
-    // against the shuffle shape). Without the hints the update join
-    // plans as a SortMergeJoin that exchanges + sorts the state and
-    // sorts the aggregate EVERY superstep.
-    // Beyond the budget (cluster-scale V) everything falls back to the
-    // pre-r21 shape: edges hash-partitioned by src once, shuffle joins.
-    val bcastState = GraphOps.stateBroadcastFits(spark, stateRows)
-    // Static side of every superstep join. Broadcast mode streams the
-    // cached frame map-side (partitioning is irrelevant to a broadcast
-    // join probe side — skipping the upfront repartition saves its
-    // one-off O(E) shuffle); shuffle mode partitions once by src so the
-    // per-superstep sort-merge join co-locates without re-shuffling the
-    // static side.
-    val edges = (if (bcastState) graph.edges
-                 else graph.edges.repartition(nShuffle, col("src")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val staticCols = state.columns
+    val staticCols = init.columns.toSeq
       .filterNot(c => c == "id" || c == "value" || c == "_delta")
-
-    var iter = 0
-    var lastDelta = Double.MaxValue
-    var converged = false
-    val residuals = Seq.newBuilder[Double]
-    // r22: broadcast-fit supersteps skip AQE's per-round replanning
-    // (see GraphOps.withLoopAqe — hint-pinned plans, dimension-sized
-    // exchanges; AQE stays on for the shuffle fallback shape).
-    GraphOps.withLoopAqe(spark, bcastState) {
-    while (iter < maxIter && !converged) {
-      val senders = if (program.frontierOnly) state.where(col("_delta") > 0.0) else state
-      val msgs = program.messages(
-        if (bcastState) broadcast(senders) else senders, edges)
-      val agg = msgs.groupBy("id").agg(program.combiner.as("_agg"))
-      val stepped = state.join(
-          if (bcastState) broadcast(agg) else agg, Seq("id"), "left_outer")
-        .select(
-          col("id") +:
-          program.updated(col("value"), col("_agg")).as("value") +:
-          program.delta(col("value"), program.updated(col("value"), col("_agg"))).as("_delta") +:
-          staticCols.map(col): _*)
-      iter += 1
-      val (next, m) = Materialize.observed(stepped,
-        coalesce(max(col("_delta")), lit(0.0)).as("max_delta"),
-        count_if(col("_delta") > 0.0).as("changed"))
-      if (convergenceCheck) {
-        lastDelta = m("max_delta").asInstanceOf[Double]
-        residuals += lastDelta
-        converged = earlyStop && lastDelta < program.tolerance
-      } else if (earlyStop && program.frontierOnly && iter < maxIter) {
-        // r21 (guide §1.2: don't compute what you throw away): in FIXED
-        // mode a frontier-pruned monotone program whose frontier has
-        // emptied can never change again — no senders means no messages,
-        // and updated(old, null) is absorbing (the same invariant
-        // frontierOnly already requires) — so every remaining superstep
-        // is an exact no-op that still pays the full per-superstep
-        // scheduler/checkpoint floor. Exit early: bit-identical result
-        // (the oracle's extra unrolled rounds are no-ops on its side
-        // too). The changed-vertex count observed by the checkpoint job
-        // buys back every no-op round at no extra job — the dup-cluster
-        // quotient CCs converge in 2-3 hops of their 8 contract rounds.
-        converged = m("changed") == 0L
+    def maxDelta(m: Map[String, Any]) = m("max_delta").asInstanceOf[Double]
+    // In fixed mode a frontier-pruned monotone program whose frontier has
+    // emptied can never change again: no senders means no messages, and
+    // updated(old, null) is absorbing (the invariant frontierOnly already
+    // requires), so every remaining superstep is an exact no-op that
+    // still pays the per-superstep floor. The oracle's extra unrolled
+    // rounds are no-ops on its side too; the dup-cluster quotient CCs
+    // converge in 2-3 hops of their 8 contract rounds.
+    def exit(m: Map[String, Any]): Boolean = earlyStop &&
+      (if (convergenceCheck) maxDelta(m) < program.tolerance
+       else program.frontierOnly && m("changed") == 0L)
+    var edges = graph.edges
+    val run = Superstep.fold(init, maxIter,
+        Seq(coalesce(max(col("_delta")), lit(0.0)).as("max_delta"),
+          count_if(col("_delta") > 0.0).as("changed")), exit) { gate =>
+      // Static side of every superstep join. Broadcast mode streams the
+      // cached frame map-side (partitioning is irrelevant to a broadcast
+      // join probe side, so the upfront O(E) repartition is skipped);
+      // shuffle mode partitions once by src so the per-superstep
+      // sort-merge join co-locates without re-shuffling the static side.
+      edges = (if (gate.fits) graph.edges
+               else graph.edges.repartition(nShuffle, col("src")))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (state, _) => {
+        val senders = if (program.frontierOnly) state.where(col("_delta") > 0.0) else state
+        val agg = program.messages(gate.hint(senders), edges)
+          .groupBy("id").agg(program.combiner.as("_agg"))
+        state.join(gate.hint(agg), Seq("id"), "left_outer")
+          .select(
+            col("id") +:
+            program.updated(col("value"), col("_agg")).as("value") +:
+            program.delta(col("value"), program.updated(col("value"), col("_agg"))).as("_delta") +:
+            staticCols.map(col): _*)
       }
-      state = next
-    }
     }
     edges.unpersist(blocking = false)
-    RunResult(state.drop("_delta"), iter, lastDelta, residuals.result())
+    val residuals = if (convergenceCheck) run.rounds.map(maxDelta) else Nil
+    RunResult(run.state.drop("_delta"), run.rounds.size,
+      residuals.lastOption.getOrElse(Double.MaxValue), residuals)
   }
 }

@@ -23,6 +23,10 @@ import org.apache.spark.sql.functions.{count, lit}
   *    reference's equivalent "durability" is rerunning the MPI binary,
   *    `/root/reference/gmr.cpp:202-317` assumes restartability).
   *
+  * When a loop materializes and what it observes on the way is the
+  * superstep kernel's decision ([[Superstep]]); this object only says
+  * how a frame is made durable.
+  *
   * Mode is per-session Spark conf (runtime-settable, no code change):
   * {{{
   * spark.conf.set("spark.graft.checkpoint.reliable", "true")

@@ -39,15 +39,12 @@ object Mst {
     import spark.implicits._
     val edges = canonicalEdges.select("src", "dst", "weight")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var comp = edges.select(col("src").as("id")).union(edges.select(col("dst").as("id")))
+    // The component-label frame is O(V), the gate.
+    val (comp0, nComp) = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id")))
       .distinct().select(col("id"), col("id").as("comp"))
-      .materialize()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): the
-    // component-label frame is O(V) — when V fits the state-broadcast
-    // budget both labeling joins broadcast it and the persisted edge list
-    // streams map-side; beyond the budget the pre-r21 shuffle joins.
-    val fits = GraphOps.stateBroadcastFits(spark, comp.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
+      .materializeCounted()
+    var comp = comp0
     var forest = Seq.empty[(Long, Long, Double)].toDF("src", "dst", "weight")
     // Edges inside one component can never be picked again — merging only
     // grows components, so filtering on the current labels is sound and
@@ -55,15 +52,13 @@ object Mst {
     var liveEdges = edges
     var round = 0
     var done = false
-    // r22: broadcast-fit rounds skip AQE's per-round replanning (see
-    // GraphOps.withLoopAqe); the nested CC fallback manages its own.
-    GraphOps.withLoopAqe(spark, fits) {
+    Superstep.gated(spark, nComp) { gate =>
     while (round < maxRounds && !done) {
-      val labeled = liveEdges
-        .join(hint(comp.select(col("id").as("src"), col("comp").as("csrc"))), "src")
-        .join(hint(comp.select(col("id").as("dst"), col("comp").as("cdst"))), "dst")
+      val (labeled, nLabeled) = liveEdges
+        .join(gate.hint(comp.select(col("id").as("src"), col("comp").as("csrc"))), "src")
+        .join(gate.hint(comp.select(col("id").as("dst"), col("comp").as("cdst"))), "dst")
         .where(col("csrc") =!= col("cdst"))
-        .materialize()
+        .materializeCounted()
       liveEdges = labeled.select("src", "dst", "weight")
       // Local finish (the standard distributed-MST endgame): the
       // contracted inter-component graph shrinks geometrically per round;
@@ -71,7 +66,7 @@ object Mst {
       // labels replaces the remaining O(log V) rounds of cluster actions.
       // The perturbed edge order (weight, src, dst) has a unique MSF, so
       // Kruskal here and further Borůvka rounds produce identical edges.
-      if (labeled.count() <= localFinishLimit) {
+      if (nLabeled <= localFinishLimit) {
         val rest = localKruskal(labeled)
         if (rest.nonEmpty) forest = forest.union(rest.toDF("src", "dst", "weight"))
         done = true
@@ -82,30 +77,27 @@ object Mst {
           col("weight"), col("cdst"))
         .union(labeled.select(col("cdst").as("c"), col("src"), col("dst"),
           col("weight"), col("csrc")))
-      // r21 (guide §2.3 "aggregate before you shuffle"): the per-component
-      // lightest-edge pick is an argmin — the row_number window it
-      // replaces sorted the FULL candidate list inside each partition
-      // with no partial aggregation; min(struct(...)) hash-aggregates
-      // map-side so only one row per component crosses the exchange.
-      // Identical pick: within a component, (weight, src, dst) is unique
-      // (csrc ≠ cdst means an edge appears at most once per side), so the
-      // lexicographic struct-min is exactly the window's ORDER BY head,
-      // and cdst rides along functionally determined by (c, src, dst).
-      val picked = cand.groupBy(col("c"))
+      // The per-component lightest-edge pick is an argmin: min(struct(...))
+      // hash-aggregates map-side, so only one row per component crosses
+      // the exchange (a row_number window would sort the full candidate
+      // list). Within a component (weight, src, dst) is unique (csrc ≠
+      // cdst means an edge appears at most once per side), so the
+      // lexicographic struct-min is the unique lightest edge, and cdst
+      // rides along functionally determined by (c, src, dst).
+      val (picked, nPicked) = cand.groupBy(col("c"))
         .agg(min(struct(col("weight"), col("src"), col("dst"), col("cdst")))
           .as("m"))
         .select(col("c"), col("m.src").as("src"), col("m.dst").as("dst"),
           col("m.weight").as("weight"), col("m.cdst").as("cdst"))
-        .materialize()
-      if (picked.isEmpty) done = true
+        .materializeCounted()
+      if (nPicked == 0) done = true
       else {
         forest = forest.union(picked.select("src", "dst", "weight").distinct())
           .materialize()
         // contract the components linked by the picked edges
-        val links = picked.select(least(col("c"), col("cdst")).as("src"),
+        val (links, nLinks) = picked.select(least(col("c"), col("cdst")).as("src"),
           greatest(col("c"), col("cdst")).as("dst")).distinct()
-          .materialize()
-        val nLinks = links.count()
+          .materializeCounted()
         val mapping =
           if (nLinks <= driverMergeLimit) driverUnionFind(links)
           else {

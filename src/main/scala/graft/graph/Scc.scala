@@ -83,25 +83,17 @@ object Scc {
         result = result.union(localTarjan(verts, edgeArr).toSeq.toDF("id", "scc"))
         finished = true
       } else {
-      // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): the
-      // color and surviving-vertex frames are O(|active|) — the
-      // observed count makes the broadcast-budget gate free. When they
-      // fit, the per-round labeling/filter joins broadcast them and the
-      // edge frame streams map-side; beyond the budget the pre-r21
-      // shuffle joins. Results identical either way.
-      val fits = GraphOps.stateBroadcastFits(spark, nActive)
-      def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-      // r22: the round's own frames skip AQE replanning when broadcast-fit
-      // (GraphOps.withLoopAqe); the nested GmrRunner loops manage theirs.
-      GraphOps.withLoopAqe(spark, fits) {
+      // Color and survivor frames are O(|active|), the gate; the nested
+      // GmrRunner loops gate on the same active set.
+      Superstep.gated(spark, nActive) { gate =>
       val colors = GmrRunner.run(
           PropertyGraph(active, activeEdges.withColumn("weight", lit(1.0))),
           ConnectedComponentsProgram).vertices
         .select(col("id"), col("value").cast("long").as("color"))
         .materialize()
       val ec = activeEdges
-        .join(hint(colors.select(col("id").as("src"), col("color").as("csrc"))), "src")
-        .join(hint(colors.select(col("id").as("dst"), col("color").as("cdst"))), "dst")
+        .join(gate.hint(colors.select(col("id").as("src"), col("color").as("csrc"))), "src")
+        .join(gate.hint(colors.select(col("id").as("dst"), col("color").as("cdst"))), "dst")
         .where(col("csrc") === col("cdst"))
       // Eager checkpoint severs colors' attribute ids from the edge plan:
       // BackwardMark's vertex state ALSO passes colors' attrs through, and
@@ -117,8 +109,8 @@ object Scc {
         .materialize()
       val (nextActive, n) = marked.where(!col("m")).select("id").materializeCounted()
       val (nextEdges, nEdges) = activeEdges
-        .join(hint(nextActive.select(col("id").as("src"))), "src")
-        .join(hint(nextActive.select(col("id").as("dst"))), "dst")
+        .join(gate.hint(nextActive.select(col("id").as("src"))), "src")
+        .join(gate.hint(nextActive.select(col("id").as("dst"))), "dst")
         .select("src", "dst").materializeCounted()
       active = nextActive; nActive = n
       activeEdges = nextEdges; nActiveEdges = nEdges

@@ -69,6 +69,8 @@ object GraphLoaders {
   private final case class MetisHeader(path: String, line: String, row: Long) {
     private val t = line.trim.split("\\s+")
     val nvtxs: Long = t(0).toLong
+    val nedges: Long = if (t.length >= 2) t(1).toLong else 0L
+    val tokens: Int = t.length
     private val fmt = if (t.length >= 3) t(2).toInt else 0
     require(fmt <= 1111, s"$path: Cannot read this type of file format $fmt") // graph.h:590
     val shape: MetisShape = MetisShape(fmt, // ncon 0 reads as 1, graph.h:599
@@ -97,6 +99,25 @@ object GraphLoaders {
       .getOrElse(throw new IllegalArgumentException(s"$path: no METIS header line"))
     finally in.close()
   }
+
+  /** Is `path` a METIS adjacency file? Its first line must read as a
+    * header `nvtxs nedges [fmt [ncon]]`, and its data rows must number
+    * nvtxs (a blank row is an isolated vertex) and hold 2·nedges
+    * adjacency entries. The header is read on the driver, the rows and
+    * their tokens are counted by one scan job. An edge list fails: its
+    * first edge read as a header claims far fewer vertices than it has
+    * rows. */
+  def isMetisAdjacency(spark: SparkSession, path: String): Boolean =
+    scala.util.Try(metisHeader(spark, path)).toOption.exists { h =>
+      val (lines, tokens) = spark.sparkContext.textFile(path, 1)
+        .filter(l => !isMetisComment(l))
+        .aggregate((0L, 0L))((acc, l) =>
+          (acc._1 + 1, acc._2 + l.trim.split("\\s+").count(_.nonEmpty)),
+          (a, b) => (a._1 + b._1, a._2 + b._2))
+      val rows = lines - h.row - 1
+      rows == h.nvtxs &&
+        tokens - h.tokens == rows * h.shape.vOff + 2 * h.nedges * h.shape.stride
+    }
 
   /** A file's vertex rows `(part, file, row, value)`, `row` = 1-based row
     * position. A position-free file (all [[writeMetisSubgraphs]] output) is

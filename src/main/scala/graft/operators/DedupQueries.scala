@@ -234,20 +234,6 @@ object DedupQueries {
         round(col("jaccard"), 6).as("jaccard"))
       .orderBy("doc_a", "doc_b")
 
-  /** Builder-probe helper (GScale generator-health check, not a gated
-    * query): verified d3 pairs whose endpoints lie in DIFFERENT replica
-    * copies of a synthetic scale dir (`copy = doc_id / copySpan`, the
-    * GScale id-offset convention). Zero under the per-copy WORD-BIJECTION
-    * replication convention (r9 — every word of copy k gets a leading
-    * `c${k}_` marker, so cross-copy shingle sets are disjoint and the
-    * exact-jaccard verify can never pass a straddling pair) — a nonzero
-    * count means the probe is measuring workload density, not plan
-    * scaling (the r8 finding). */
-  def d3CrossCopyPairs(s: SparkSession, d: String, copySpan: Long): Long =
-    lshPairsMaterialized(s, d)
-      .where(expr(s"id_a DIV $copySpan") =!= expr(s"id_b DIV $copySpan"))
-      .count()
-
   /** Band/hamming parameters for d4: 5 bands × 12 bits over the 60-bit
     * fingerprint, hamming ≤ 4 (r10; was 3 × 10 / ≤ 2 over 30 bits — the
     * threshold re-derivation is proportional, 2/30 → 4/60, the same
@@ -310,17 +296,6 @@ object DedupQueries {
 
   def d4Simhash(s: SparkSession, d: String): DataFrame =
     simhashPairs(s, d).orderBy("doc_a", "doc_b")
-
-  /** Builder-probe helper, [[d3CrossCopyPairs]]'s SimHash twin: verified
-    * d4 pairs straddling replica copies of a synthetic scale dir. Must
-    * be ≈ 0 under the per-copy word-bijection convention (a trailing
-    * copy marker left polynomial word hashes correlated across copies —
-    * 395k cross-copy pairs at sf1 — while the leading marker measures
-    * independent fingerprints; see the GScale generator comment). */
-  def d4CrossCopyPairs(s: SparkSession, d: String, copySpan: Long): Long =
-    simhashPairs(s, d)
-      .where(expr(s"doc_a DIV $copySpan") =!= expr(s"doc_b DIV $copySpan"))
-      .count()
 
   /** d5: embedding-cosine near-dup pairs (cos ≥ 0.4) with hyperplane-LSH
     * candidate generation — s2's bit-exact 6-bit signature

@@ -589,80 +589,65 @@ object GraphQueries {
     * and ONE materialize — the old shape paid a second materialize per
     * level in the σ chain and relaxed from ALL reached rows instead of
     * the frontier (strictly more join input every level). The per-level
-    * frames keep the r21 budget-gated broadcast hints: the frontier
-    * into the edge join (it is the small side against the O(E) edge
-    * view), the reached set into the freshness anti-join. Shuffle
-    * shape beyond the budget, identical results. */
-  private def bfsLevels(se: DataFrame, verts: DataFrame, srcs: DataFrame,
-      depth: Int): DataFrame = {
-    var state = srcs
-      .select(col("q"), col("q").as("id"), lit(0L).as("v"), lit(1L).as("sg"))
-      .materialize()
-    // Budget gate on the state's MAXIMUM size |srcs|·|V| (the old code
-    // counted the materialized cross-join of the same cardinality).
-    val fits = GraphOps.stateBroadcastFits(se.sparkSession,
-      srcs.count() * math.max(1L, verts.count()))
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    GraphOps.withLoopAqe(se.sparkSession, fits) {
-    for (l <- 1 to depth) {
-      val cand = hint(state.where(col("v") === (l - 1)))
+    * frames are bounded by |srcs|·|V| rows, the state's maximum size, and
+    * the loop is gated on that bound: the frontier is hinted into the edge
+    * join (it is the small side against the O(E) edge view), the reached
+    * set into the freshness anti-join. The returned fold carries the
+    * bound, so a caller can gate its own phases on it without counting
+    * again. */
+  private def bfsLevels(se: DataFrame, nVerts: Long, srcs: DataFrame,
+      depth: Int): Superstep.Folded =
+    Superstep.fold(srcs
+        .select(col("q"), col("q").as("id"), lit(0L).as("v"), lit(1L).as("sg")),
+        depth, bound = _ * math.max(1L, nVerts)) { gate => (state, l) =>
+      val cand = gate.hint(state.where(col("v") === (l - 1)))
         .join(se, col("id") === col("src"))
         .groupBy(col("q"), col("dst")).agg(sum(col("sg")).as("sg"))
         .select(col("q"), col("dst").as("id"), col("sg"))
       val fresh = cand
-        .join(hint(state.select(col("q"), col("id"))), Seq("q", "id"), "left_anti")
+        .join(gate.hint(state.select(col("q"), col("id"))), Seq("q", "id"), "left_anti")
         .select(col("q"), col("id"), lit(l.toLong).as("v"), col("sg"))
-      state = state.union(fresh).materialize()
+      state.union(fresh)
     }
-    }
-    state
-  }
 
   def g14Betweenness(s: SparkSession, d: String): DataFrame = {
     val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
       .select("src", "dst")
     val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = se.select(col("src").as("id")).distinct().materialize()
+    val (verts, nVerts) = se.select(col("src").as("id")).distinct().materializeCounted()
     val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
     // (1)+(2) fused (r22): one frontier BFS carries both the level AND
     // the shortest-path count σ — the separate per-level σ chain (13
     // more materialize jobs over the same frames) is gone; levels(l) is
     // now a cheap filter over the ONE checkpointed state frame.
-    val state = bfsLevels(se, verts, srcs, BcDepth)
-    // r21: every σ/δ frame below is bounded by |srcs|·|V| rows — the
-    // same budget gate as the BFS phase; hinted frames turn the
-    // per-level joins against the cached O(E) edge view and against each
-    // other into broadcast joins (one groupBy exchange per level, no
-    // sorts). Identical results; shuffle shape beyond the budget.
-    val bcFits = GraphOps.stateBroadcastFits(s,
-      srcs.count() * math.max(1L, verts.count()))
-    def hint(df: DataFrame): DataFrame = if (bcFits) broadcast(df) else df
+    val bfs = bfsLevels(se, nVerts, srcs, BcDepth)
     // The δ chain below is linear, so a sparser checkpoint cadence is
     // SEMANTICALLY safe — but measured SLOWER: every level is referenced
     // 2-3× downstream (δ contrib, δ join, final union), and at cadence 3
     // the re-evaluated join segments cost 13.0 s vs 5.8 s per-level at
     // sf0.1. Per-level it stays.
-    def mat(df: DataFrame, l: Int): DataFrame = { val _ = l; df.materialize() }
     def levels(l: Int): DataFrame =
-      state.where(col("v") === l).select(col("q"), col("id"), col("sg"))
-    // (3) δ back-propagation: deepest level first, σ-ratio weights
+      bfs.state.where(col("v") === l).select(col("q"), col("id"), col("sg"))
+    // (3) δ back-propagation: deepest level first, σ-ratio weights. Every
+    // σ/δ frame is bounded by |srcs|·|V| rows: the BFS phase's gate.
     val deltas = new Array[DataFrame](BcDepth + 1)
     deltas(BcDepth) = levels(BcDepth)
       .select(col("q"), col("id"), col("sg"), lit(0.0).as("dl"))
-    GraphOps.withLoopAqe(s, bcFits) {
+    Superstep.gated(s, bfs.bound) { gate =>
     for (l <- (BcDepth - 1) to 0 by -1) {
       val succ = deltas(l + 1)
         .select(col("q").as("wq"), col("id").as("wid"),
           col("sg").as("wsg"), col("dl").as("wdl"))
-      val contrib = hint(levels(l)).join(se, col("id") === col("src"))
-        .join(hint(succ), col("wq") === col("q") && col("wid") === col("dst"))
+      val contrib = gate.hint(levels(l)).join(se, col("id") === col("src"))
+        .join(gate.hint(succ), col("wq") === col("q") && col("wid") === col("dst"))
         .groupBy(col("q"), col("id"))
         .agg(sum(col("sg").cast("double") / col("wsg") * (lit(1.0) + col("wdl")))
           .as("c"))
-      deltas(l) = mat(levels(l).join(hint(contrib), Seq("q", "id"), "left_outer")
+      deltas(l) = levels(l).join(gate.hint(contrib), Seq("q", "id"), "left_outer")
         .select(col("q"), col("id"), col("sg"),
-          coalesce(col("c"), lit(0.0)).as("dl")), l)
+          coalesce(col("c"), lit(0.0)).as("dl"))
+        .materialize()
     }
     }
     val bc = (1 to BcDepth).map(deltas(_).select(col("id"), col("dl")))
@@ -688,11 +673,11 @@ object GraphQueries {
       .select("src", "dst")
     val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = se.select(col("src").as("id")).distinct().materialize()
+    val (verts, nVerts) = se.select(col("src").as("id")).distinct().materializeCounted()
     val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
     // r22: reached rows only (unreached pairs were null-valued before
     // and filtered out right here — bfsLevels simply never carries them)
-    val hc = bfsLevels(se, verts, srcs, BcDepth).where(col("v") > 0)
+    val hc = bfsLevels(se, nVerts, srcs, BcDepth).state.where(col("v") > 0)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_reached"),
         sum(expr("1000000L div v")).as("harmonic_ppm"))
@@ -717,9 +702,9 @@ object GraphQueries {
       .select("src", "dst")
     val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = se.select(col("src").as("id")).distinct().materialize()
+    val (verts, nVerts) = se.select(col("src").as("id")).distinct().materializeCounted()
     val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
-    bfsLevels(se, verts, srcs, BcDepth)
+    bfsLevels(se, nVerts, srcs, BcDepth).state
       .where(col("v") > 0)
       .groupBy(col("q"))
       .agg(max(col("v")).as("ecc"), count(lit(1)).as("n_reached"),
@@ -743,32 +728,25 @@ object GraphQueries {
   def g20Hits(s: SparkSession, d: String): DataFrame = {
     val e = partPairsMaterialized(s, d).select("src", "dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = vertexDegMaterialized(s, d).select(col("id")).materialize()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): hub and
-    // authority frames are O(V) — when V fits the state-broadcast budget,
-    // the score join broadcasts the score side (the cached edge view
-    // streams map-side) and the rejoin against the vertex dimension
-    // broadcasts the normalized sums, so each half-step has exactly one
-    // exchange (the raw groupBy). Shuffle shape beyond the budget.
-    val fits = GraphOps.stateBroadcastFits(s, verts.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
+    // Hub and authority frames are O(V), the gate.
+    val (verts, nVerts) = vertexDegMaterialized(s, d).select(col("id")).materializeCounted()
+    var hub = verts.select(col("id"), lit(HitsScale).as("h"))
+    var auth = verts.select(col("id"), lit(0L).as("a"))
+    Superstep.gated(s, nVerts) { gate =>
     // raw = Σ over in-(out-)edges; normalized = raw·scale div max(raw):
     // vertices missing from the sum side score 0 (no in-/out-edges).
     def step(scores: DataFrame, scoreCol: String, fromCol: String,
         toCol: String, outName: String): DataFrame = {
-      val raw = e.join(hint(scores.withColumnRenamed("id", fromCol)), fromCol)
+      val raw = e.join(gate.hint(scores.withColumnRenamed("id", fromCol)), fromCol)
         .groupBy(col(toCol).as("id"))
         .agg(sum(col(scoreCol)).as("r"))
       val mx = raw.agg(max(col("r")).as("mx"))
       val norm = raw.crossJoin(broadcast(mx))
         .selectExpr("id", s"(r * $HitsScale) div mx AS $outName")
-      verts.join(hint(norm), Seq("id"), "left_outer")
+      verts.join(gate.hint(norm), Seq("id"), "left_outer")
         .select(col("id"), coalesce(col(outName), lit(0L)).as(outName))
         .materialize()
     }
-    var hub = verts.select(col("id"), lit(HitsScale).as("h"))
-    var auth = verts.select(col("id"), lit(0L).as("a"))
-    GraphOps.withLoopAqe(s, fits) {
     for (_ <- 1 to HitsIters) {
       auth = step(hub, "h", "src", "dst", "a")
       hub = step(auth, "a", "dst", "src", "h")

@@ -389,8 +389,8 @@ object RelationalQueries {
       .crossJoin(tot)
       // lift from the already-floored confidence (conf·N / 10³·cnt_c),
       // not 10³·cnt·N/(cnt_a·cnt_c): the direct product overflows BIGINT
-      // once cnt and N both grow with the corpus (the q65 GScale
-      // lesson); conf ≤ 10⁶ bounds this form to N ≤ 9.2e12 orders.
+      // once cnt and N both grow with the corpus (as q65's did on a 10×
+      // replica); conf ≤ 10⁶ bounds this form to N ≤ 9.2e12 orders.
       .withColumn("support_ppm", expr("(1000000 * cnt) DIV n_orders"))
       .withColumn("confidence_ppm", expr("(1000000 * cnt) DIV cnt_a"))
       .withColumn("lift_milli",
@@ -412,9 +412,9 @@ object RelationalQueries {
     * fact table), THEN rank — the window runs over the supplier
     * DIMENSION, never the raw lineitem; total is a broadcast scalar.
     * The share divides by the PRE-SCALED total (total DIV 10⁶, floored
-    * at 1) instead of multiplying the numerator by 10⁶ — at the 10×
-    * probe's revenue volume `10⁶ · cum_cents` already overflows BIGINT
-    * (caught by GScale, ANSI mode), and cum ≤ total ≤ 2⁶³ can never;
+    * at 1) instead of multiplying the numerator by 10⁶ — at a 10×
+    * replica's revenue volume `10⁶ · cum_cents` already overflows BIGINT
+    * (an ANSI-mode error), and cum ≤ total ≤ 2⁶³ can never;
     * the ≤1-ppm floor error is identical in both engines. */
   def q65ParetoSuppliers(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

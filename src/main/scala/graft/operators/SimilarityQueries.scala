@@ -249,9 +249,10 @@ object SimilarityQueries {
       .orderBy("src_id", "rank")
   }
 
-  /** Builder-side probe (GScale): the number of candidate pairs s9's
-    * multi-probe bucket join generates — the quantity the derived width
-    * must keep O(N) (it was ~O(N²/2^6) with the fixed 6-bit width). */
+  /** The number of candidate pairs s9's multi-probe bucket join
+    * generates — the quantity the derived width must keep O(N) (it was
+    * ~O(N²/2^6) with the fixed 6-bit width); SimilarityScaleSpec pins
+    * it. */
   def knnCandidateCount(s: SparkSession, d: String): Long = {
     val planes = derivedPlanes(Tables.embeddings(s, d).count())
     val n = vecsWithNorm(s, d).withColumn("sig", signature(col("v"), planes))

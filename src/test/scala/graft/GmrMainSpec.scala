@@ -74,6 +74,20 @@ class GmrMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.first().getLong(0) === 1L)
   }
 
+  test("Gmr.load reads metis.graph as METIS adjacency: edges 1-2, 1-3, 2-3, 3-4") {
+    // Header `4 4`, then 4 data rows holding 2+2+3+1 = 8 = 2·4 entries, so
+    // the header's counts match the rows; no row has more than 3 tokens.
+    val g = Gmr.load(spark, res("metis.graph"))
+    val pairs = g.edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.map { case (a, b) => (a min b, a max b) }.toSet ===
+      Set((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)))
+    assert(pairs.length === 8) // each undirected edge in both directions
+    assert(g.vertices.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L, 4L))
+    // edge lists whose first line parses as a header stay edge lists
+    for (f <- Seq("3line.graph", "edgelist0.graph", "edgelist.graph"))
+      assert(!graft.io.GraphLoaders.isMetisAdjacency(spark, res(f)), f)
+  }
+
   test("trianglecount on rdsmall.graph (edge list with header, default file) = 2") {
     val (df, _) = Gmr.run(spark, "trianglecount", s"$ref/rdsmall.graph")
     assert(df.first().getLong(0) === 2L)

@@ -48,9 +48,8 @@ class DerivedSpec extends AnyFunSuite {
   }
 
   test("wipeFor removes exactly the tag dirs keyed on the given sources") {
-    // Guards the cold-measurement invariant the per-round Bench (r11) and
-    // the GScale sf10 probe both rely on: wiping one source's derive-once
-    // caches must not touch a sibling source's.
+    // Guards the cold-measurement invariant Bench and perfbench rely on:
+    // wiping one source's derive-once caches must not touch a sibling's.
     val src = tmpDirWith("wipe-me")
     val other = tmpDirWith("keep-me")
     val root = new java.io.File(

@@ -64,6 +64,38 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r2.iterations === 4)
   }
 
+  test("the superstep kernel scopes AQE off to fitting loops and restores it") {
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(key)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val init = spark.range(1, 4).toDF("id")
+    def run(fail: Boolean): Superstep.Folded =
+      Superstep.fold(init, 2) { _ => (s, r) =>
+        seen += spark.conf.get(key)
+        if (fail && r == 2) throw new IllegalStateException("step failed")
+        s
+      }
+    assert(run(fail = false).rounds.size === 2)
+    assert(seen === Seq("false", "false"))
+    assert(spark.conf.get(key) === before)
+    intercept[IllegalStateException](run(fail = true))
+    assert(spark.conf.get(key) === before)
+    // at budget 0 nothing fits, and the kernel never touches the setting
+    spark.conf.set(GraphOps.StateBroadcastBytesKey, "0")
+    try {
+      for (v <- Seq("true", "false")) {
+        spark.conf.set(key, v)
+        seen.clear()
+        run(fail = false)
+        assert(seen === Seq(v, v))
+        assert(spark.conf.get(key) === v)
+      }
+    } finally {
+      spark.conf.unset(GraphOps.StateBroadcastBytesKey)
+      spark.conf.set(key, before)
+    }
+  }
+
   test("unreached vertices stay null") {
     val g = PropertyGraph.fromEdges(edgeDf(1L -> 2L, 3L -> 4L))
     val r = GmrRunner.run(g, new Sssp(1L))

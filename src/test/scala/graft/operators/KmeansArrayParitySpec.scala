@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * derived k collapse to KmK=4 at testdata size, so this spec is the
   * proof for the k > 4 path: both formulations must agree cell-for-cell
   * and distance-for-distance — at k = 4 on the raw testdata AND at a
-  * derived k > 4 on a replicated corpus (the GScale convention:
+  * derived k > 4 on a replicated corpus (the scale-replica convention:
   * dimension-rotated copies, so copies decorrelate instead of forming
   * exact dup groups). */
 class KmeansArrayParitySpec extends AnyFunSuite with BeforeAndAfterAll {

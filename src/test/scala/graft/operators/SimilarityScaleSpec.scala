@@ -23,7 +23,7 @@ class SimilarityScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SimilarityQueries.derivedPlanes(1) === 6)
     assert(SimilarityQueries.derivedPlanes(500) === 6)   // sf0.01: gate geometry
     assert(SimilarityQueries.derivedPlanes(2000) === 8)  // sf0.1
-    assert(SimilarityQueries.derivedPlanes(20000) === 12) // GScale sf1
+    assert(SimilarityQueries.derivedPlanes(20000) === 12) // sf1
     assert(SimilarityQueries.derivedPlanes(1L << 30) === 27)
     // monotone: more data never narrows the signature
     val widths = Seq(512L, 4096L, 65536L, 1L << 20, 1L << 40)
