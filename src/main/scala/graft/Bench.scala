@@ -111,7 +111,7 @@ object Bench {
     // that the scan/hash/shuffle warmup above never touches, so in
     // sorted order it landed on whichever g-query built lpa_labels
     // first. A 3-superstep micro-LPA on a 1k-vertex synthetic ring
-    // compiles the vote/pick/diff/materialize path once, off the bill.
+    // compiles the vote/pick/materialize path once, off the bill.
     locally {
       import org.apache.spark.sql.functions._
       val ids = spark.range(0, 1000).select(col("id"))

@@ -120,9 +120,9 @@ object ConnectedComponentsProgram extends VertexProgram {
 object GraphOps {
 
   /** The engine's one budget for deliberate broadcasts: every frame the
-    * engine hints for broadcast on its own (loop vertex state, LPA's
-    * frontier id sets, the triangle kernels' adjacency table, the
-    * locality writer's assignment) is broadcast only when its estimated
+    * engine hints for broadcast on its own (loop vertex state, the
+    * triangle kernels' adjacency table, the locality writer's
+    * assignment) is broadcast only when its estimated
     * size fits, and takes the shuffle shape otherwise — a latency
     * optimization, never a correctness or OOM hazard; both shapes give
     * identical results (GraphPropertiesSpec). 256 MB is routine executor
@@ -505,132 +505,41 @@ object GraphOps {
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_triangles"))
 
-  /** Semi-join filter `edges[keyCol ∈ ids]`, broadcasting the id set
-    * when `nIds` fits the broadcast budget, which turns the semi-join
-    * into a map-side filter with no edge-side shuffle (ids is always
-    * O(V); the caller counts it in the job that materializes it). */
-  private def frontierSemi(gate: Superstep.Gate, edges: DataFrame, keyCol: String,
-                           ids: DataFrame, nIds: Long): DataFrame =
-    edges.join(gate.hint(ids.select(col("id").as(keyCol)), nIds),
-      Seq(keyCol), "left_semi")
-
-  /** Label propagation (community detection), fixed supersteps. Each
-    * step a vertex adopts the most frequent label among its in-neighbors
-    * (ties → smallest label; isolated vertices keep their own), so the
-    * run is fully deterministic. State is localCheckpointed per step
-    * (lazy superstep chains are 2^k recompute trees). Returns (id, label).
+  /** Label propagation (community detection): at most `iters`
+    * synchronous supersteps. Each step a vertex adopts the most frequent
+    * label among its in-neighbors (ties → smallest label; a vertex with
+    * no in-edges keeps its own), so the run is fully deterministic.
+    * Returns (id, label).
     *
-    * FRONTIER-INCREMENTAL (r10, VERDICT r9 item 3): a vertex's
-    * mode-vote over its in-neighbors' labels can change in round i only
-    * if some in-neighbor's label changed in round i−1 — for every other
-    * vertex the vote multiset is unchanged, so its argmax (and hence
-    * its label) is provably the round-(i−1) value. A round with a known
-    * (small) changed set therefore restricts the O(|E|) vote shuffle to
-    * the in-edges of DIRTY vertices (those with a changed in-neighbor),
-    * and `coalesce` keeps every other vertex's label; an EMPTY changed
-    * set is the fixpoint — remaining rounds are exact no-ops and the
-    * loop exits early.
-    *
-    * When the tracking runs is churn-adaptive (r10 follow-up, measured
-    * on the co-purchase graph): LPA churn stays ABOVE half the vertices
-    * for several rounds (where the semi-join machinery is pure
-    * overhead — round 1 changes everything by construction) and then
-    * COLLAPSES (20k-vertex run: 20000/15005/14588/13730/751/1/0), so
-    * full-mode rounds check the changed count only on an
-    * exponential-backoff schedule (rounds 2, 4, 8, …) — a non-check
-    * round is plan-identical to the frontier=false path, zero extra
-    * jobs — while frontier-mode rounds check every round (the frames
-    * are changed-set-sized, so the checks are cheap there). A check
-    * costs one pick materialization + one dimension-sized diff; the
-    * backoff bounds that to O(log iters) on never-collapsing runs and
-    * engages within 2× of the true crossover on MONOTONE churn; an
-    * engage-then-disengage (churn dips then rises back) resets the
-    * ladder to step 2, so oscillating churn re-engages within 2× of
-    * each later crossover too, at the cost of denser checks right
-    * after a disengage. Same
-    * fixed-iteration result as the full recompute, bit for bit
-    * (GraphAlgoSpec proves equality at every iteration count). */
-  def labelPropagation(g: PropertyGraph, iters: Int): DataFrame =
-    labelPropagation(g, iters, frontierOn = true)
-
-  /** [[labelPropagation]]; `frontierOn = false` forces the full
-    * per-round recompute, the reference the equivalence tests compare
-    * the frontier plan against. */
-  private[graph] def labelPropagation(g: PropertyGraph, iters: Int,
-                                      frontierOn: Boolean): DataFrame = {
+    * The rounds run on [[Superstep.fold]] over (id, label, changed); each
+    * round's checkpoint job also counts the labels it changed, and the
+    * loop stops after the first round that changes none. Every later
+    * round would be an exact no-op (each vertex's vote multiset is
+    * unchanged), so the result equals the full `iters`-round run. Sync
+    * LPA need not reach a fixpoint (a bipartite pair swaps labels
+    * forever), and such runs take all `iters` rounds. */
+  def labelPropagation(g: PropertyGraph, iters: Int): DataFrame = {
     val edges = g.edges.select(col("src"), col("dst"))
-    var labels = g.vertices.select(col("id"), col("id").as("label"))
-    // Full-round cutoff denominator, and the gate (labels and pick are O(V)).
-    val nVerts = g.vertices.count()
-    // None = recompute every vertex this round.
-    var frontier: Option[(DataFrame, Long)] = None
-    // Next full-mode round whose changed set we pay to measure, and the
-    // doubling step to the one after that.
-    var nextCheck = 2
-    var checkStep = 2
-    var fixed = false
-    Superstep.gated(edges.sparkSession, nVerts) { gate =>
-    for (i <- 1 to iters if !fixed) {
-      val active = frontier match {
-        case None => edges
-        case Some((f, n)) =>
-          val (dirty, nDirty) = frontierSemi(gate, edges, "src", f, n)
-            .select(col("dst").as("id")).distinct().materializeCounted()
-          frontierSemi(gate, edges, "dst", dirty, nDirty)
-      }
-      val votes = active
+    // Labels and picks are O(V): the vertex count gates the loop.
+    Superstep.fold(
+        g.vertices.select(col("id"), col("id").as("label"), lit(true).as("changed")),
+        iters, Seq(count_if(col("changed")).as("changed")),
+        exit = _("changed") == 0L) { gate => (state, _) =>
+      val labels = state.select(col("id"), col("label"))
+      val votes = edges
         .join(gate.hint(labels), col("src") === col("id"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
       // argmax(c, ties -> min label) as a hash aggregate: max of the
       // lexicographic struct (c, -label) — map-side combinable, no
       // per-dst sort the way a row_number window would do it.
-      val pickPlan = votes
+      val pick = votes
         .groupBy(col("dst"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("dst").as("id"), (-col("m.nl")).as("new_label"))
-      // Measure this round's churn? Frontier mode: always (cheap, and
-      // next round NEEDS the changed set). Full mode: only on the
-      // backoff schedule — and never on the last round (no next round
-      // to steer).
-      val check = frontierOn && i < iters &&
-        (frontier.isDefined || i >= nextCheck)
-      // Two consumers on check rounds (next + the changed diff below) —
-      // materialize so the vote pipeline runs once; non-check rounds
-      // keep the lazy plan (next's materialize executes it).
-      val pick = if (check) pickPlan.materialize() else pickPlan
-      val next = labels.join(gate.hint(pick), Seq("id"), "left_outer")
+      labels.join(gate.hint(pick), Seq("id"), "left_outer")
         .select(col("id"),
-          coalesce(col("new_label"), col("label")).as("label"))
-        .materialize()
-      if (check) {
-        // A label can differ from last round's only where pick proposed
-        // one (coalesce keeps it everywhere else), so diff PICK against
-        // the old labels — |pick| rows, not an O(V) next ⋈ labels
-        // self-join.
-        val (changed, n) = gate.hint(pick.as("n"))
-          .join(labels.as("p"), col("n.id") === col("p.id"))
-          .where(col("n.new_label") =!= col("p.label"))
-          .select(col("n.id").as("id"))
-          .materializeCounted()
-        if (n == 0) fixed = true
-        val wasFrontier = frontier.isDefined
-        frontier = if (2 * n >= nVerts) None else Some((changed, n))
-        if (frontier.isEmpty) {
-          // Disengaging (churn rose back above half V) restarts the
-          // backoff ladder: the doubled step was calibrated to the
-          // EARLIER full-mode phase, and carrying it over would defer
-          // the next churn check — hence any fixpoint exit or
-          // re-engagement — many rounds on oscillating churn (ADVICE
-          // r10). Results are bit-exact either way (non-check rounds
-          // are full recomputes); this only bounds how stale the
-          // mode decision can get.
-          if (wasFrontier) checkStep = 2
-          nextCheck = i + checkStep; checkStep *= 2
-        }
-      }
-      labels = next
-    }
-    }
-    labels
+          coalesce(col("new_label"), col("label")).as("label"),
+          coalesce(col("new_label") =!= col("label"), lit(false)).as("changed"))
+    }.state.select(col("id"), col("label"))
   }
 }

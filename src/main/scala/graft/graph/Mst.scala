@@ -30,9 +30,12 @@ import org.apache.spark.sql.functions._
   */
 object Mst {
 
+  /** Cap on the Borůvka rounds (components at least halve per round). */
+  private val MaxRounds = 40
+
   /** Minimum spanning forest of a canonical (src<dst, weight) edge list.
     * Returns the forest edges `(src, dst, weight)`. */
-  def minimumSpanningForest(canonicalEdges: DataFrame, maxRounds: Int = 40,
+  def minimumSpanningForest(canonicalEdges: DataFrame,
                             driverMergeLimit: Long = 1000000L,
                             localFinishLimit: Long = 100000L): DataFrame = {
     val spark = canonicalEdges.sparkSession
@@ -53,7 +56,7 @@ object Mst {
     var round = 0
     var done = false
     Superstep.gated(spark, nComp) { gate =>
-    while (round < maxRounds && !done) {
+    while (round < MaxRounds && !done) {
       val (labeled, nLabeled) = liveEdges
         .join(gate.hint(comp.select(col("id").as("src"), col("comp").as("csrc"))), "src")
         .join(gate.hint(comp.select(col("id").as("dst"), col("comp").as("cdst"))), "dst")

@@ -34,6 +34,9 @@ import org.apache.spark.sql.functions._
   */
 object Scc {
 
+  /** Cap on the distributed coloring rounds. */
+  private val MaxRounds = 40
+
   /** Backward-reachability marker. Vertices carry a static `color`;
     * value 0.0 = "reaches its color root via same-color vertices"
     * (monotone null→0.0 absorption, so frontier pruning is sound). */
@@ -62,7 +65,7 @@ object Scc {
     * buffer (`localFinishLimit` rows), one iterative Tarjan pass replaces
     * the remaining O(chain length) rounds of cluster actions. Same unique
     * result either way — set the limit to 0 to force pure-distributed. */
-  def strongComponents(directedEdges: DataFrame, maxRounds: Int = 40,
+  def strongComponents(directedEdges: DataFrame,
                        localFinishLimit: Long = 100000L): DataFrame = {
     val spark = directedEdges.sparkSession
     import spark.implicits._
@@ -76,7 +79,7 @@ object Scc {
     var result = Seq.empty[(Long, Long)].toDF("id", "scc")
     var round = 0
     var finished = false
-    while (round < maxRounds && !finished && nActive > 0) {
+    while (round < MaxRounds && !finished && nActive > 0) {
       if (nActive <= localFinishLimit && nActiveEdges <= localFinishLimit) {
         val verts = active.collect().map(_.getLong(0))
         val edgeArr = activeEdges.collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
 /** The superstep kernel: the one owner of the engine's loop policy.
-  * [[GmrRunner]], Luby MIS, k-core, k-truss and the multi-source BFS run
-  * their rounds through [[fold]]; label propagation, Borůvka MST, SCC,
+  * [[GmrRunner]], label propagation, Luby MIS, k-core, k-truss and the
+  * multi-source BFS run their rounds through [[fold]]; Borůvka MST, SCC,
   * HITS and the Brandes δ chain run theirs inside a [[gated]] scope.
   *
   * '''Broadcast gate.''' A loop's per-round frames that scale with its
@@ -47,9 +47,6 @@ object Superstep {
   private def stateBroadcastFits(spark: SparkSession, rows: Long): Boolean =
     GraphOps.broadcastFits(spark, rows * StateBytesPerRow)
 
-  private def broadcastIfFits(df: DataFrame, rows: Long): DataFrame =
-    if (stateBroadcastFits(df.sparkSession, rows)) broadcast(df) else df
-
   private def withLoopAqe[T](spark: SparkSession, disable: Boolean)(f: => T): T =
     if (!disable) f
     else {
@@ -64,11 +61,6 @@ object Superstep {
     /** `df`, a frame bounded by the loop's state, marked for broadcast
       * when the state fits the budget. */
     def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-
-    /** `df` marked for broadcast when its own row bound `rows` fits the
-      * budget, for a frame counted apart from the state (LPA's frontier
-      * id sets). */
-    def hint(df: DataFrame, rows: Long): DataFrame = broadcastIfFits(df, rows)
   }
 
   /** Runs `body` under the gate of a loop whose state frames are bounded

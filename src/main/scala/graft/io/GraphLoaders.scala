@@ -30,8 +30,7 @@ object GraphLoaders {
     * dense 1..max — the reference's gap-fill behavior
     * (`partition.h:628-642`; e.g. rdsmall.graph declares 12 vertices but
     * vertex 11 appears in no edge). */
-  def edgeList(spark: SparkSession, path: String,
-               renumberZeroBased: Boolean = true): PropertyGraph = {
+  def edgeList(spark: SparkSession, path: String): PropertyGraph = {
     val toks = spark.read.text(path)
       .where(!isComment(col("value")))
       .select(split(trim(col("value")), "\\s+").as("t"))
@@ -44,7 +43,7 @@ object GraphLoaders {
     // min and max id in one job over the parse
     val bounds = toks.agg(least(min(col("src")), min(col("dst"))),
       greatest(max(col("src")), max(col("dst")))).first()
-    val zeroBased = renumberZeroBased && bounds.getLong(0) == 0L
+    val zeroBased = bounds.getLong(0) == 0L
     val edges = if (zeroBased)
         toks.select((col("src") + 1).as("src"), (col("dst") + 1).as("dst"), col("weight"))
       else toks
@@ -393,6 +392,8 @@ object GraphLoaders {
     }
   }
 
+  private val HeavyFactor = 8
+
   /** Locality-aware part assignment — the engine's analog of the
     * reference's Zoltan/METIS "minimize inter-node traffic" partitioner
     * (`/root/reference/gmr.cpp:107-167`, `partition.h:271-364`;
@@ -405,7 +406,7 @@ object GraphLoaders {
     * community larger than one part's capacity ⌈N/parts⌉ is split into
     * ⌈sz/cap⌉ hash sub-buckets first — otherwise one giant LPA community
     * (the common fixpoint on dense graphs) starves every other part.
-    * The TOP `parts × heavyFactor` placement units by member count (a
+    * The TOP `parts × HeavyFactor` placement units by member count (a
     * bounded collect — parts is a user constant) are then placed
     * greedily largest-first onto the least-loaded part (the LPT
     * bin-packing heuristic; greedy fills every part once before
@@ -428,8 +429,7 @@ object GraphLoaders {
     * slot so whole tail communities stay unsplit. The residual
     * quantization bounds the added tail skew at 1/1024 of the tail
     * mass per part. */
-  def localityAssignment(labels: DataFrame, parts: Int,
-                         heavyFactor: Int = 8): DataFrame = {
+  def localityAssignment(labels: DataFrame, parts: Int): DataFrame = {
     val spark = labels.sparkSession
     import spark.implicits._
     val total = labels.count()
@@ -441,7 +441,7 @@ object GraphLoaders {
           greatest(expr(s"(sz + ${cap - 1}) DIV $cap"), lit(1L))).as("bucket"))
     val units = sized.groupBy(col("label"), col("bucket")).agg(count(lit(1)).as("sz"))
     val heavy = units.orderBy(col("sz").desc, col("label"), col("bucket"))
-      .limit(parts * heavyFactor).collect()
+      .limit(parts * HeavyFactor).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val loads = Array.fill(parts)(0L)
     val heavyAssign = heavy.map { case (lbl, b, sz) =>

@@ -610,18 +610,30 @@ object GraphQueries {
       state.union(fresh)
     }
 
-  def g14Betweenness(s: SparkSession, d: String): DataFrame = {
+  /** The strong-tie BFS that g14, g21 and g23 share: the weight ≥
+    * [[LinkMinWeight]] pairs symmetrized into `se`, their vertex set, and
+    * [[bfsLevels]] from the [[BcSources]] smallest ids. `finish` gets
+    * `se`, the vertices and the BFS; `se` is unpersisted once it returns,
+    * so the plan it returns must read only materialized frames. */
+  private def strongTieBfs(s: SparkSession, d: String)(
+      finish: (DataFrame, DataFrame, Superstep.Folded) => DataFrame): DataFrame = {
     val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
       .select("src", "dst")
     val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (verts, nVerts) = se.select(col("src").as("id")).distinct().materializeCounted()
-    val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
+    try {
+      val (verts, nVerts) = se.select(col("src").as("id")).distinct().materializeCounted()
+      val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
+      finish(se, verts, bfsLevels(se, nVerts, srcs, BcDepth))
+    } finally se.unpersist(blocking = false)
+  }
+
+  def g14Betweenness(s: SparkSession, d: String): DataFrame =
+    strongTieBfs(s, d) { (se, verts, bfs) =>
     // (1)+(2) fused (r22): one frontier BFS carries both the level AND
     // the shortest-path count σ — the separate per-level σ chain (13
     // more materialize jobs over the same frames) is gone; levels(l) is
     // now a cheap filter over the ONE checkpointed state frame.
-    val bfs = bfsLevels(se, nVerts, srcs, BcDepth)
     // The δ chain below is linear, so a sparser checkpoint cadence is
     // SEMANTICALLY safe — but measured SLOWER: every level is referenced
     // 2-3× downstream (δ contrib, δ join, final union), and at cadence 3
@@ -668,16 +680,11 @@ object GraphQueries {
     * sample size is the knob (Eppstein-Wang: O(log V / ε²) sources), and
     * the per-source cost is the g14 phase-1 BFS — O(depth) shuffles over
     * a frame of |sources|·|V| rows. */
-  def g21Harmonic(s: SparkSession, d: String): DataFrame = {
-    val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
-      .select("src", "dst")
-    val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (verts, nVerts) = se.select(col("src").as("id")).distinct().materializeCounted()
-    val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
+  def g21Harmonic(s: SparkSession, d: String): DataFrame =
+    strongTieBfs(s, d) { (_, verts, bfs) =>
     // r22: reached rows only (unreached pairs were null-valued before
     // and filtered out right here — bfsLevels simply never carries them)
-    val hc = bfsLevels(se, nVerts, srcs, BcDepth).state.where(col("v") > 0)
+    val hc = bfs.state.where(col("v") > 0)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_reached"),
         sum(expr("1000000L div v")).as("harmonic_ppm"))
@@ -697,14 +704,9 @@ object GraphQueries {
     * aggregate over the already-computed distance table, O(sources·V)
     * like g21; the farthest-vertex pick is the q33 `max(struct)` hash
     * aggregate, no window. */
-  def g23Eccentricity(s: SparkSession, d: String): DataFrame = {
-    val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
-      .select("src", "dst")
-    val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (verts, nVerts) = se.select(col("src").as("id")).distinct().materializeCounted()
-    val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
-    bfsLevels(se, nVerts, srcs, BcDepth).state
+  def g23Eccentricity(s: SparkSession, d: String): DataFrame =
+    strongTieBfs(s, d) { (_, _, bfs) =>
+    bfs.state
       .where(col("v") > 0)
       .groupBy(col("q"))
       .agg(max(col("v")).as("ecc"), count(lit(1)).as("n_reached"),
@@ -1287,17 +1289,15 @@ object GraphQueries {
     * perturbed MSF unique, so the oracle ([[mstSql]]) may run its own
     * Borůvka unrolling and must land on the identical forest. */
   def g7Mst(s: SparkSession, d: String): DataFrame =
-    Mst.summary(partPairsMaterialized(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Mst.summary(partPairsMaterialized(s, d))
 
   /** g8: label propagation (community detection) — the classic LPA over
     * the same co-occurrence graph. Each superstep a vertex adopts the
     * most frequent label among its neighbors, ties broken by smallest
     * label, so the fixed-superstep run is fully deterministic and the
     * oracle unrolls the same supersteps as CTEs. Per step: one shuffle
-    * to count (dst, label) votes, one per-dst window to pick the mode —
-    * both O(|E|); state is localCheckpointed per step (lazy chains are
-    * 2^k recompute trees). */
+    * to count (dst, label) votes and a map-combinable per-dst aggregate
+    * to pick the mode ([[GraphOps.labelPropagation]]). */
   def g8LabelProp(s: SparkSession, d: String): DataFrame =
     lpaLabelsMaterialized(s, d)
       .select(col("id"), col("label").as("community")).orderBy("id")
@@ -1350,9 +1350,7 @@ object GraphQueries {
     * the oracle ([[sccSql]]) unrolls the same forward-backward coloring
     * with fixed upper-bound counts — identical at fixpoint. */
   def g9Scc(s: SparkSession, d: String): DataFrame =
-    Scc.strongComponents(
-        directedPairs(s, d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      .orderBy("id")
+    Scc.strongComponents(directedPairs(s, d)).orderBy("id")
 
   /** Customer cap for g10 — bounds the output matrix to ~CapI×|suppliers|
     * rows so the gate compares a readable result, without changing the

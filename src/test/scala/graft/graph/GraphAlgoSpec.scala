@@ -313,46 +313,92 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     pr.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-4))
   }
 
-  test("frontier-incremental LPA equals full recompute at every round count") {
-    import spark.implicits._
-    // Seeded graph shaped so frontiers SHRINK: two dense communities, a
-    // bridge, and a pendant chain — round 1 is always full, round 2's
-    // frontier typically exceeds the half-of-V cutoff (full again), and
-    // the tail rounds engage the incremental path with a frontier
-    // collapsed to the community boundary. Both code paths exercised.
+  /** Plain-Scala synchronous LPA over directed `edges`: each round a
+    * vertex takes the most frequent label among its in-neighbors (ties →
+    * the smaller label); a vertex with no in-edges keeps its own. */
+  private def lpaReplay(edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+    val ids = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val inNbrs = edges.groupBy(_._2).map { case (v, es) => v -> es.map(_._1) }
+    (1 to rounds).foldLeft(ids.map(v => v -> v).toMap) { (lab, _) =>
+      lab.map { case (v, l) =>
+        v -> inNbrs.get(v).fold(l) { ns =>
+          -ns.groupBy(lab).iterator.map { case (x, vs) => (vs.size, -x) }.max._2
+        }
+      }
+    }
+  }
+
+  private def symmetric(pairs: Seq[(Long, Long)]) = pairs ++ pairs.map(_.swap)
+
+  private def lpaLabels(pairs: Seq[(Long, Long)], rounds: Int): Map[Long, Long] =
+    GraphOps.labelPropagation(
+        PropertyGraph.fromEdges(PropertyGraph.symmetrize(edgeDf(pairs: _*))), rounds)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Jobs `body` starts, as a SparkListener sees them: `body` runs in a
+    * job group of its own, and a marker job in another group runs after
+    * it; one listener queue delivers events in order, so once the
+    * marker's start arrives, every start of `body` has been counted. */
+  private def jobsStarted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => n.incrementAndGet()
+          case `marker` => seen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      n.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("LPA equals a local replay at every round count") {
+    // Seeded graph: two dense communities, a bridge, and a pendant chain,
+    // so labels keep changing for several rounds at the boundaries.
     val rnd = new scala.util.Random(42)
     val e1 = for { a <- 0L until 12L; b <- 0L until 12L
                    if a < b && rnd.nextDouble() < 0.5 } yield (a, b)
     val e2 = for { a <- 20L until 32L; b <- 20L until 32L
                    if a < b && rnd.nextDouble() < 0.5 } yield (a, b)
-    val bridge = Seq((11L, 20L), (40L, 41L), (41L, 42L), (42L, 43L))
-    val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(
-      (e1 ++ e2 ++ bridge).toDF("src", "dst")))
-    def labelsAt(k: Int, frontier: Boolean): Map[Long, Long] =
-      GraphOps.labelPropagation(g, k, frontier).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // Per-round equality: equal final labels at EVERY iteration count
-    // k pins every intermediate round (round k is some run's last).
+    val pairs = e1 ++ e2 ++ Seq((11L, 20L), (40L, 41L), (41L, 42L), (42L, 43L))
+    // Equal labels at EVERY round count k pin every intermediate round
+    // (round k is some run's last).
     for (k <- 1 to 6)
-      assert(labelsAt(k, frontier = true) === labelsAt(k, frontier = false),
-        s"frontier and full recompute diverged at round $k")
+      assert(lpaLabels(pairs, k) === lpaReplay(symmetric(pairs), k),
+        s"LPA diverged from the replay at round $k")
   }
 
-  test("frontier LPA early-exits at the fixpoint with the exact fixed-iter result") {
-    // A triangle + isolated vertex converges (all-1 by round 3); the
-    // frontier run's empty-frontier exit must still equal a full 20-round
-    // recompute (remaining rounds are provable no-ops). Note sync LPA
-    // does NOT converge on every graph (bipartite label swaps) — the
-    // early exit only fires on a genuinely empty frontier.
-    val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(
-      edgeDf(1L -> 2L, 2L -> 3L, 1L -> 3L, 7L -> 8L)))
-    def labelsAt(k: Int, frontier: Boolean): Map[Long, Long] =
-      GraphOps.labelPropagation(g, k, frontier).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = labelsAt(20, frontier = false)
-    assert(labelsAt(20, frontier = true) === full)
+  test("LPA early-exits at the fixpoint with the exact fixed-iter result") {
+    // A triangle + a 7-8 pair: the pair swaps labels forever (sync LPA
+    // does not converge on every graph), so this run takes all 20 rounds.
+    val pairs = Seq(1L -> 2L, 2L -> 3L, 1L -> 3L, 7L -> 8L)
+    val full = lpaLabels(pairs, 20)
+    assert(full === lpaReplay(symmetric(pairs), 20))
     assert(full.view.filterKeys(Set(1L, 2L, 3L)).values.toSet.size === 1,
       "triangle must agree on one label at the fixpoint")
+    // The triangle alone is at its fixpoint after round 2, so round 3
+    // changes nothing and the loop stops: a 20-round request costs no
+    // more jobs than a 4-round one, and gives the same labels.
+    val tri = pairs.take(3)
+    val triLabels = lpaLabels(tri, 20)
+    assert(triLabels === lpaReplay(symmetric(tri), 20))
+    assert(triLabels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    val long = jobsStarted(lpaLabels(tri, 20))
+    val short = jobsStarted(lpaLabels(tri, 4))
+    assert(long <= short, s"20 rounds started $long jobs, 4 rounds $short")
   }
 
   test("partition invariance: same SSSP result with 1 and 4 shuffle partitions") {

@@ -240,8 +240,7 @@ class GraphPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
       assert(prB.keySet === prS.keySet, s"pagerank: $ctx")
       prB.foreach { case (v, x) => assert(math.abs(x - prS(v)) < 1e-9, s"pagerank $v: $ctx") }
-      for (frontier <- Seq(true, false))
-        same(s"lpa frontier=$frontier")(GraphOps.labelPropagation(ug, 5, frontier))
+      same("lpa")(GraphOps.labelPropagation(ug, 5))
       same("lubyMis")(GraphOps.lubyMis(vertices, sym, 3))
       same("kCore")(GraphOps.kCore(sym, 2, 6))
       same("kTruss")(GraphOps.kTruss(canon, 3, 4))
