@@ -86,12 +86,13 @@ object Gmr {
           .select(col("id"), col("label").as("community")).orderBy("id"), 5)
       case "trianglecount" | _ =>
         // canonical undirected pair set, as the reference's (min,max) key
-        // canonicalization produces (`algorithms.h:118-126`)
+        // canonicalization produces (`algorithms.h:118-126`); the count
+        // broadcasts the adjacency only within the engine's budget
         val pairs = g.edges
           .select(least(col("src"), col("dst")).as("src"),
             greatest(col("src"), col("dst")).as("dst"))
           .where(col("src") =!= col("dst")).distinct()
-        (GraphOps.triangleCountViaIntersect(pairs), 1)
+        (GraphOps.triangleCountAuto(pairs), 1)
     }
   }
 

@@ -520,9 +520,11 @@ object GraphOps {
     * forever), and such runs take all `iters` rounds. */
   def labelPropagation(g: PropertyGraph, iters: Int): DataFrame = {
     val edges = g.edges.select(col("src"), col("dst"))
-    // Labels and picks are O(V): the vertex count gates the loop.
+    // Labels and picks are O(V): the vertex count gates the loop. The
+    // seed label is -(-id), not an alias of id: an alias would carry the
+    // vertices' partitioning on `id` over to `label`, which round 1 replaces.
     Superstep.fold(
-        g.vertices.select(col("id"), col("id").as("label"), lit(true).as("changed")),
+        g.vertices.select(col("id"), (-(-col("id"))).as("label"), lit(true).as("changed")),
         iters, Seq(count_if(col("changed")).as("changed")),
         exit = _("changed") == 0L) { gate => (state, _) =>
       val labels = state.select(col("id"), col("label"))

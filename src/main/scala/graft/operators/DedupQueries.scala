@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 import graft.dedup.{MinHashLsh, SimHash}
 import graft.functions.Portable
 import graft.graph.{ConnectedComponentsProgram, GmrRunner, PropertyGraph}
@@ -53,6 +53,60 @@ object DedupQueries {
     * oracle replicates cap and recovery, so the gate stays exact. */
   private val DfCap = 64L
 
+
+  /** The exploded shingle postings (id, lang, h) materialized to parquet
+    * once per sfDir — d2 and d14 both start here (same derive-once rule
+    * as the g-family's pair/degree tables: first caller pays, the rest
+    * read a scan-only plan; Verify/Bench clear in-memory caches between
+    * queries, the parquet survives). The dedup entries live in
+    * [[Derived]] family `v1`: bump it when the shingling or the d2 pair
+    * statistics change. */
+  def postingsMaterialized(s: SparkSession, d: String): DataFrame =
+    Derived.parquet(s, d, "v1", "dedup_postings") {
+      docs(s, d).select(col("id"), col("lang"),
+          Portable.shingleHashes(col("text"), cfg.shingleWords).as("sh"))
+        .where(size(col("sh")) > 0)
+        .select(col("id"), col("lang"), explode(col("sh")).as("h"))
+    }
+
+  /** The capped-index pair statistics both near-dup queries consume:
+    * `sizes` (id, ntot, nhot — full vs df-capped shingle counts per doc),
+    * `pairs` (doc_a, doc_b, c — same-lang pair co-occurrence counts
+    * over the capped index, the expensive bounded self-join), and the
+    * `hot` shingle list (df > cap — the recovery passes' anchor, small by
+    * construction). Built once per sfDir from [[postingsMaterialized]];
+    * d2 layers its jaccard bound + hot-recovery on top, d14 its
+    * containment prefilter — the self-join itself never re-runs. */
+  def pairStatsMaterialized(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    // One build writes all three tables, guarded on the pairs entry
+    // (written last).
+    val szsPath = Derived.path(d, "v1", "dedup_sizes")
+    val hotPath = Derived.path(d, "v1", "dedup_hot")
+    val prPath = Derived.entry(d, "v1", "dedup_pairs") { path =>
+      val ex = postingsMaterialized(s, d)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val dfc = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      dfc.where(col("df") > DfCap).select("h")
+        .write.mode("overwrite").parquet(hotPath)
+      val hot = broadcast(s.read.parquet(hotPath))
+      val cex = ex.join(hot, Seq("h"), "left_anti")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      ex.groupBy(col("id")).agg(count(lit(1)).as("ntot"))
+        .join(cex.groupBy(col("id")).agg(count(lit(1)).as("nkept")), Seq("id"), "left_outer")
+        .select(col("id"), col("ntot"),
+          (col("ntot") - coalesce(col("nkept"), lit(0L))).as("nhot"))
+        .write.mode("overwrite").parquet(szsPath)
+      val a = cex.as("a"); val b = cex.as("b")
+      a.join(b, col("a.h") === col("b.h") && col("a.lang") === col("b.lang") &&
+          col("a.id") < col("b.id"))
+        .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
+        .agg(count(lit(1)).as("c"))
+        .write.mode("overwrite").parquet(path)
+      ex.unpersist(); cex.unpersist()
+    }
+    (s.read.parquet(szsPath), s.read.parquet(prPath), s.read.parquet(hotPath))
+  }
+
   /** d2: n-gram (3-word shingle) jaccard near-dup pairs — df-capped
     * candidate generation, a bounded recovery pass for hot-only overlap,
     * and an exact FULL-universe jaccard verify; blocked by language.
@@ -86,66 +140,6 @@ object DedupQueries {
     * full-universe value, not the capped-universe surrogate. Only narrow
     * (id, lang, h) rows shuffle in candidate generation; arrays ship
     * only for bound-surviving candidates. */
-  private val DedupDerivedVersion = 1
-
-  /** The exploded shingle postings (id, lang, h) materialized to parquet
-    * once per sfDir — d2 and d14 both start here (same derive-once rule
-    * as the g-family's pair/degree tables: first caller pays, the rest
-    * read a scan-only plan; Verify/Bench clear in-memory caches between
-    * queries, the parquet survives). */
-  def postingsMaterialized(s: SparkSession, d: String): DataFrame = synchronized {
-    val tag = graft.core.Derived.tag(d)
-    val path = s"${sys.props("user.dir")}/target/graft_derived/v$DedupDerivedVersion/$tag/dedup_postings"
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
-      graft.core.Derived.recordBuild("dedup_postings") {
-        docs(s, d).select(col("id"), col("lang"),
-            Portable.shingleHashes(col("text"), cfg.shingleWords).as("sh"))
-          .where(size(col("sh")) > 0)
-          .select(col("id"), col("lang"), explode(col("sh")).as("h"))
-          .write.mode("overwrite").parquet(path)
-      }
-    s.read.parquet(path)
-  }
-
-  /** The capped-index pair statistics both near-dup queries consume:
-    * `sizes` (id, ntot, nhot — full vs df-capped shingle counts per doc),
-    * `pairs` (doc_a, doc_b, c — same-lang pair co-occurrence counts
-    * over the capped index, the expensive bounded self-join), and the
-    * `hot` shingle list (df > cap — the recovery passes' anchor, small by
-    * construction). Built once per sfDir from [[postingsMaterialized]];
-    * d2 layers its jaccard bound + hot-recovery on top, d14 its
-    * containment prefilter — the self-join itself never re-runs. */
-  def pairStatsMaterialized(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = synchronized {
-    val tag = graft.core.Derived.tag(d)
-    val base = s"${sys.props("user.dir")}/target/graft_derived/v$DedupDerivedVersion/$tag"
-    val szsPath = s"$base/dedup_sizes"
-    val prPath = s"$base/dedup_pairs"
-    val hotPath = s"$base/dedup_hot"
-    if (!new java.io.File(s"$prPath/_SUCCESS").exists()) graft.core.Derived.recordBuild("dedup_pairs") {
-      val ex = postingsMaterialized(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val dfc = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      dfc.where(col("df") > DfCap).select("h")
-        .write.mode("overwrite").parquet(hotPath)
-      val hot = broadcast(s.read.parquet(hotPath))
-      val cex = ex.join(hot, Seq("h"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ex.groupBy(col("id")).agg(count(lit(1)).as("ntot"))
-        .join(cex.groupBy(col("id")).agg(count(lit(1)).as("nkept")), Seq("id"), "left_outer")
-        .select(col("id"), col("ntot"),
-          (col("ntot") - coalesce(col("nkept"), lit(0L))).as("nhot"))
-        .write.mode("overwrite").parquet(szsPath)
-      val a = cex.as("a"); val b = cex.as("b")
-      a.join(b, col("a.h") === col("b.h") && col("a.lang") === col("b.lang") &&
-          col("a.id") < col("b.id"))
-        .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-        .agg(count(lit(1)).as("c"))
-        .write.mode("overwrite").parquet(prPath)
-      ex.unpersist(); cex.unpersist()
-    }
-    (s.read.parquet(szsPath), s.read.parquet(prPath), s.read.parquet(hotPath))
-  }
-
   def d2NgramJaccard(s: SparkSession, d: String): DataFrame = {
     // Postings re-read from the shared materialization (the recovery
     // pass still walks them); the capped self-join and per-doc sizes
@@ -213,18 +207,11 @@ object DedupQueries {
     * and d6 builds its duplicate-cluster graph from the very same list —
     * without the materialization d6 re-runs the whole
     * shingle→minhash→band→verify pipeline. First caller pays the
-    * derivation; version-bump the path when cfg changes. */
-  private val LshDerivedVersion = 1
-  def lshPairsMaterialized(s: SparkSession, d: String): DataFrame = synchronized {
-    val tag = graft.core.Derived.tag(d)
-    val path = s"${sys.props("user.dir")}/target/graft_derived/lsh_v$LshDerivedVersion/$tag/pairs"
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
-      graft.core.Derived.recordBuild("lsh_pairs") {
-        MinHashLsh.nearDuplicates(docs(s, d), cfg)
-          .write.mode("overwrite").parquet(path)
-      }
-    s.read.parquet(path)
-  }
+    * derivation; bump the `lsh_v1` family when cfg changes. */
+  def lshPairsMaterialized(s: SparkSession, d: String): DataFrame =
+    Derived.parquet(s, d, "lsh_v1", "pairs", bill = "lsh_pairs") {
+      MinHashLsh.nearDuplicates(docs(s, d), cfg)
+    }
 
   /** d3: MinHash+LSH near-dup pairs (banded candidate generation +
     * exact-jaccard verification — see [[graft.dedup.MinHashLsh]]). */
@@ -259,40 +246,27 @@ object DedupQueries {
     * pair list and d18 collapses the very same list to clusters —
     * without the materialization each re-pays the fingerprint kernel +
     * banded self-join (~2.3 s at sf0.1). First caller pays; bump the
-    * version when the fingerprint/banding parameters change. */
-  private val SimDerivedVersion = 2 // v2: 60-bit composed fingerprint, 5×12 bands, h ≤ 4
-  private def simDerivedPath(d: String, leaf: String): String =
-    s"${sys.props("user.dir")}/target/graft_derived/" +
-      s"sim_v$SimDerivedVersion/${graft.core.Derived.tag(d)}/$leaf"
-  private def simhashPairs(s: SparkSession, d: String): DataFrame = synchronized {
-    val path = simDerivedPath(d, "pairs")
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
-      graft.core.Derived.recordBuild("sim_pairs") {
-        // persist: both self-join sides would otherwise re-run the per-doc
-        // fingerprint kernel (the dominant projection) over the full corpus
-        val fp = simhashFingerprints(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try SimHash.bandedPairs(fp, bands = SimBands, maxHamming = SimMaxHamming)
-          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
-          .write.mode("overwrite").parquet(path)
-        // build-only cache: the write above is its sole consumer (the
-        // r8/r9 unpersist discipline, VERDICT r9 item 4)
-        finally fp.unpersist(blocking = false)
-      }
-    s.read.parquet(path)
-  }
+    * `sim_v2` family when the fingerprint/banding parameters change
+    * (v2: 60-bit composed fingerprint, 5×12 bands, h ≤ 4). */
+  private def simhashPairs(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Derived.entry(d, "sim_v2", "pairs", bill = "sim_pairs") { path =>
+      // persist: both self-join sides would otherwise re-run the per-doc
+      // fingerprint kernel (the dominant projection) over the full corpus
+      val fp = simhashFingerprints(s, d)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try SimHash.bandedPairs(fp, bands = SimBands, maxHamming = SimMaxHamming)
+        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
+        .write.mode("overwrite").parquet(path)
+      // build-only cache: the write above is its sole consumer (the
+      // r8/r9 unpersist discipline, VERDICT r9 item 4)
+      finally fp.unpersist(blocking = false)
+    })
 
   /** The per-doc fingerprints materialized beside [[simhashPairs]] —
     * the pair build needs them anyway, and d18's clique contraction
     * re-reads them for the fingerprint → representative map. */
-  private def simhashFingerprints(s: SparkSession, d: String): DataFrame = synchronized {
-    val path = simDerivedPath(d, "fp")
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
-      graft.core.Derived.recordBuild("sim_fp") {
-        SimHash.fingerprints(docs(s, d)).write.mode("overwrite").parquet(path)
-      }
-    s.read.parquet(path)
-  }
+  private def simhashFingerprints(s: SparkSession, d: String): DataFrame =
+    Derived.parquet(s, d, "sim_v2", "fp", bill = "sim_fp")(SimHash.fingerprints(docs(s, d)))
 
   def d4Simhash(s: SparkSession, d: String): DataFrame =
     simhashPairs(s, d).orderBy("doc_a", "doc_b")
@@ -338,39 +312,33 @@ object DedupQueries {
     * d6 and d24 both consume it (the derive-once rule: without this each
     * re-pays the [[D6Iters]]-superstep CC, ~3 s at sf0.1; the first
     * caller pays, the other reads a scan-only plan). */
-  private[operators] def dedupAssignMaterialized(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      val tag = graft.core.Derived.tag(d)
-      // The path carries EVERY derivation input: the LSH version, the CC
-      // iteration count, and the component program's identity — changing
-      // any of them must miss this cache, not silently read a stale
-      // assignment that the oracle (which always recomputes) would
-      // contradict (ADVICE r7).
-      val path = s"${sys.props("user.dir")}/target/graft_derived/" +
-        s"lsh_v$LshDerivedVersion/$tag/assign_cc${D6Iters}_" +
-        ConnectedComponentsProgram.getClass.getSimpleName.stripSuffix("$")
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        graft.core.Derived.recordBuild("dedup_assign") {
-          val pairs = lshPairsMaterialized(s, d)
-            .select(col("id_a").as("src"), col("id_b").as("dst"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(pairs))
-          val comp = GmrRunner.runFixed(g, ConnectedComponentsProgram, D6Iters)
-            .select(col("id"), col("value").cast("long").as("comp"))
-          try docs(s, d).select(col("id").as("doc_id"))
-            .join(comp, col("doc_id") === col("id"), "left_outer")
-            .select(col("doc_id"),
-              coalesce(col("comp"), col("doc_id")).as("canonical_id"))
-            .withColumn("is_dup", col("doc_id") =!= col("canonical_id"))
-            .write.mode("overwrite").parquet(path)
-          // build-only cache: runFixed materializes per superstep, so the
-          // write's plan no longer reads `pairs` — release it with the
-          // build (the r8/r9 unpersist discipline, VERDICT r9 item 4)
-          finally pairs.unpersist(blocking = false)
-        }
-      }
-      s.read.parquet(path)
-    }
+  private[operators] def dedupAssignMaterialized(s: SparkSession, d: String): DataFrame = {
+    // The entry carries EVERY derivation input: the LSH family, the CC
+    // iteration count, and the component program's identity — changing
+    // any of them must miss this cache, not silently read a stale
+    // assignment that the oracle (which always recomputes) would
+    // contradict (ADVICE r7).
+    val leaf = s"assign_cc${D6Iters}_" +
+      ConnectedComponentsProgram.getClass.getSimpleName.stripSuffix("$")
+    s.read.parquet(Derived.entry(d, "lsh_v1", leaf, bill = "dedup_assign") { path =>
+      val pairs = lshPairsMaterialized(s, d)
+        .select(col("id_a").as("src"), col("id_b").as("dst"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(pairs))
+      val comp = GmrRunner.runFixed(g, ConnectedComponentsProgram, D6Iters)
+        .select(col("id"), col("value").cast("long").as("comp"))
+      try docs(s, d).select(col("id").as("doc_id"))
+        .join(comp, col("doc_id") === col("id"), "left_outer")
+        .select(col("doc_id"),
+          coalesce(col("comp"), col("doc_id")).as("canonical_id"))
+        .withColumn("is_dup", col("doc_id") =!= col("canonical_id"))
+        .write.mode("overwrite").parquet(path)
+      // build-only cache: runFixed materializes per superstep, so the
+      // write's plan no longer reads `pairs` — release it with the
+      // build (the r8/r9 unpersist discipline, VERDICT r9 item 4)
+      finally pairs.unpersist(blocking = false)
+    })
+  }
 
   def d6DedupClusters(s: SparkSession, d: String): DataFrame =
     dedupAssignMaterialized(s, d).orderBy("doc_id")

@@ -4,7 +4,7 @@ import graft.graph.Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -466,8 +466,8 @@ object SimilarityQueries {
     * (quantized components, integer-div means, (d2, id) struct-min
     * ties), and the oracle unrolls the identical three-level chain —
     * bit-identical cells across engines and partitionings. The
-    * derive-once cache is versioned with the tree shape
-    * ([[CellsDerivedVersion]] = 3): a depth change invalidates the
+    * derive-once cache is versioned with the tree shape (family
+    * `cells_v3`): a depth change invalidates the
     * materialized cells and the oracle CTE chain together.
     *
     * Determinism details the oracle mirrors: level-1 init = vectors
@@ -515,23 +515,16 @@ object SimilarityQueries {
     * fingerprint; whichever of s15/s16 runs first pays the build, the
     * other reads ~free. Deterministic content (exact integer pipeline)
     * makes the cache partitioning-safe. */
-  // v2: two-level hierarchical build (r8) — the flat v1 nearest-of-k
-  // assignment was O(N·k·d) with k ∝ N.
-  // v3: three-level build (r9) — O(N·k^⅓·d) assignment; versioned
+  // Family cells_v2: two-level hierarchical build (r8) — the flat v1
+  // nearest-of-k assignment was O(N·k·d) with k ∝ N.
+  // cells_v3: three-level build (r9) — O(N·k^⅓·d) assignment; versioned
   // together with the oracle's unrolled CTE chain (the tree shape is
   // pinned on both sides, so depth changes must move this number).
-  private val CellsDerivedVersion = 3
   private[operators] def cellAssignMaterialized(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      val path = s"${sys.props("user.dir")}/target/graft_derived/" +
-        s"cells_v$CellsDerivedVersion/${graft.core.Derived.tag(d)}/assign"
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        graft.core.Derived.recordBuild("cells") {
-          val n = Tables.embeddings(s, d).count()
-          val k = math.max(KmK.toLong, n / SemCellTarget)
-          hierarchicalCellAssign(s, d, k).write.mode("overwrite").parquet(path)
-        }
-      s.read.parquet(path)
+    Derived.parquet(s, d, "cells_v3", "assign", bill = "cells") {
+      val n = Tables.embeddings(s, d).count()
+      val k = math.max(KmK.toLong, n / SemCellTarget)
+      hierarchicalCellAssign(s, d, k)
     }
 
   /** s15: SemDeDup — semantic (embedding-space) deduplication via k-means
@@ -1221,7 +1214,7 @@ object SimilarityQueries {
 
   /** Unrolled THREE-LEVEL Lloyd's CTE chain — the oracle twin of
     * [[hierarchicalCellAssign]] (versioned with it:
-    * [[CellsDerivedVersion]] = 3): `q` → level-1 rounds `hc0..hcK` at
+    * family `cells_v3`): `q` → level-1 rounds `hc0..hcK` at
     * branching r (`hp` derives r by the same min-integer-cube search as
     * [[cubeBranch]] — an exact range scan, never a floating cbrt) →
     * `l1(vec_id, pkey)` → per-cell refine `mout` (r sub-centroids) →

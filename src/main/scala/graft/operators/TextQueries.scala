@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Derived, Tables}
 import graft.functions.Portable
 
 /** Text-analysis operators over the `documents` table: token counting,
@@ -351,41 +351,28 @@ object TextQueries {
   /** Global top-k size for [[t10TopNgrams]]. */
   private val NgramTopK = 20
 
-  private val TextDerivedVersion = 1
-
   /** Per-document bigram postings (doc_id, gram) materialized once per
     * sfDir — the explode + string materialization is the expensive part
     * of both t10 (global counts) and t13 (coverage scoring); the
     * derive-once rule (first caller pays) applies exactly as for the
-    * dedup postings and the g-family pair tables. */
-  def gramPostingsMaterialized(s: SparkSession, d: String): DataFrame = synchronized {
-    val tag = graft.core.Derived.tag(d)
-    val path = s"${sys.props("user.dir")}/target/graft_derived/v$TextDerivedVersion/$tag/gram_postings"
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
-      graft.core.Derived.recordBuild("gram_postings") {
-        val w = Portable.words(col("text"))
-        val grams = when(size(w) >= 2,
-          transform(sequence(lit(1), size(w) - 1),
-            i => concat(element_at(w, i), lit(" "), element_at(w, i + 1))))
-          .otherwise(array().cast("array<string>"))
-        docs(s, d).select(col("doc_id"), explode(grams).as("gram"))
-          .write.mode("overwrite").parquet(path)
-      }
-    s.read.parquet(path)
-  }
+    * dedup postings and the g-family pair tables. The text entries live
+    * in [[Derived]] family `v1`: bump it when the bigram derivation
+    * changes. */
+  def gramPostingsMaterialized(s: SparkSession, d: String): DataFrame =
+    Derived.parquet(s, d, "v1", "gram_postings") {
+      val w = Portable.words(col("text"))
+      val grams = when(size(w) >= 2,
+        transform(sequence(lit(1), size(w) - 1),
+          i => concat(element_at(w, i), lit(" "), element_at(w, i + 1))))
+        .otherwise(array().cast("array<string>"))
+      docs(s, d).select(col("doc_id"), explode(grams).as("gram"))
+    }
 
   /** Global bigram counts (gram, cnt) beside the postings. */
-  def gramCountsMaterialized(s: SparkSession, d: String): DataFrame = synchronized {
-    val tag = graft.core.Derived.tag(d)
-    val path = s"${sys.props("user.dir")}/target/graft_derived/v$TextDerivedVersion/$tag/gram_counts"
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
-      graft.core.Derived.recordBuild("gram_counts") {
-        gramPostingsMaterialized(s, d).groupBy(col("gram"))
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(path)
-      }
-    s.read.parquet(path)
-  }
+  def gramCountsMaterialized(s: SparkSession, d: String): DataFrame =
+    Derived.parquet(s, d, "v1", "gram_counts") {
+      gramPostingsMaterialized(s, d).groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
+    }
 
   /** t10: corpus-global top-k n-grams — the vocabulary-building /
     * corpus-statistics pass of a training pipeline (what BPE merge
@@ -512,12 +499,9 @@ object TextQueries {
     * line-splittable scan (JSONL's reason to exist), the aggregate is
     * map-combinable. */
   def t18JsonlIngest(s: SparkSession, d: String): DataFrame = {
-    val out = s"${sys.props("user.dir")}/target/graft_derived/" +
-      s"jsonl_v1/${graft.core.Derived.tag(d)}/documents_jsonl"
-    if (!new java.io.File(s"$out/_SUCCESS").exists())
-      graft.core.Derived.recordBuild("jsonl_sink") {
-        Tables.documents(s, d).write.mode("overwrite").json(out)
-      }
+    val out = Derived.entry(d, "jsonl_v1", "documents_jsonl", bill = "jsonl_sink") {
+      Tables.documents(s, d).write.mode("overwrite").json(_)
+    }
     s.read
       .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
       .json(out)

@@ -151,6 +151,30 @@ class GmrMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.first().getLong(0) === 3042L)
   }
 
+  test("trianglecount at stateBroadcastBytes=0 broadcasts nothing and counts the same") {
+    // The engine's broadcast budget governs the CLI count too: at 0 the
+    // adjacency takes the shuffle wedge join. Spark's own size-based
+    // broadcast is switched off so that any broadcast left is the engine's.
+    val f = res("small10.graph")
+    val key = graft.graph.GraphOps.StateBroadcastBytesKey
+    val auto = "spark.sql.autoBroadcastJoinThreshold"
+    val autoPrior = spark.conf.get(auto)
+    try {
+      spark.conf.set(auto, "-1")
+      val (atDefault, _) = Gmr.run(spark, "trianglecount", f)
+      spark.conf.set(key, "0")
+      val (df, _) = Gmr.run(spark, "trianglecount", f)
+      assert(df.collect().map(_.getLong(0)).toSeq === Seq(1L))
+      assert(atDefault.collect().map(_.getLong(0)).toSeq === Seq(1L))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastExchange"), plan)
+      assert(atDefault.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
+    } finally {
+      spark.conf.unset(key)
+      spark.conf.set(auto, autoPrior)
+    }
+  }
+
   test("zoltan partition argument accepted, result unchanged") {
     val (a, _) = Gmr.run(spark, "trianglecount", s"$ref/small.graph", "zoltan")
     assert(a.first().getLong(0) === 1L)

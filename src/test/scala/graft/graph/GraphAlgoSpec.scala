@@ -401,6 +401,20 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(long <= short, s"20 rounds started $long jobs, 4 rounds $short")
   }
 
+  test("LPA keeps its vertices' rangepartitioning(id) through the rounds") {
+    // spark.range reports rangepartitioning(id). Seeded with a plain alias
+    // of id, the initial checkpoint records the partitioning on `label`,
+    // and round 1's new label leaves it unknown.
+    val chain = (0L until 19L).map(v => v -> (v + 1))
+    val g = PropertyGraph(spark.range(20).toDF(),
+      PropertyGraph.symmetrize(edgeDf(chain: _*)))
+    val out = GraphOps.labelPropagation(g, 3)
+    val part = out.queryExecution.executedPlan.outputPartitioning.toString
+    assert(part.startsWith("rangepartitioning(id"), part)
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      lpaReplay(symmetric(chain), 3))
+  }
+
   test("partition invariance: same SSSP result with 1 and 4 shuffle partitions") {
     // the property GMR's partitioning machinery was meant to preserve (SURVEY §5)
     val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(
