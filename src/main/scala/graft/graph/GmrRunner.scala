@@ -141,8 +141,8 @@ object GmrRunner {
     def exit(m: Map[String, Any]): Boolean = earlyStop &&
       (if (convergenceCheck) maxDelta(m) < program.tolerance
        else program.frontierOnly && m("changed") == 0L)
-    var edges = graph.edges
-    val run = Superstep.fold(init, maxIter,
+    val run = Materialize.scoped { cache =>
+      Superstep.fold(init, maxIter,
         Seq(coalesce(max(col("_delta")), lit(0.0)).as("max_delta"),
           count_if(col("_delta") > 0.0).as("changed")), exit) { gate =>
       // Static side of every superstep join. Broadcast mode streams the
@@ -150,9 +150,8 @@ object GmrRunner {
       // join probe side, so the upfront O(E) repartition is skipped);
       // shuffle mode partitions once by src so the per-superstep
       // sort-merge join co-locates without re-shuffling the static side.
-      edges = (if (gate.fits) graph.edges
-               else graph.edges.repartition(nShuffle, col("src")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val edges = cache(if (gate.fits) graph.edges
+                        else graph.edges.repartition(nShuffle, col("src")))
       (state, _) => {
         val senders = if (program.frontierOnly) state.where(col("_delta") > 0.0) else state
         val agg = program.messages(gate.hint(senders), edges)
@@ -164,8 +163,8 @@ object GmrRunner {
             program.delta(col("value"), program.updated(col("value"), col("_agg"))).as("_delta") +:
             staticCols.map(col): _*)
       }
+      }
     }
-    edges.unpersist(blocking = false)
     val residuals = if (convergenceCheck) run.rounds.map(maxDelta) else Nil
     RunResult(run.state.drop("_delta"), run.rounds.size,
       residuals.lastOption.getOrElse(Double.MaxValue), residuals)

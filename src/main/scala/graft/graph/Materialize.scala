@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.storage.StorageLevel
 
 /** Superstep/state materialization with a pluggable durability mode.
   *
@@ -34,6 +35,26 @@ import org.apache.spark.sql.functions.{count, lit}
   * }}}
   * Both modes are eager and semantically identical — ReliableCheckpointSpec
   * runs the same queries under both and asserts equal results.
+  *
+  * '''Cache lifetime.''' This object is also the one owner of every cache
+  * made inside a query. A query returns a lazy plan, so a frame it
+  * persisted could only be released by its caller, and no caller does.
+  * Every intermediate frame therefore takes exactly one of four forms:
+  *
+  *  1. A scan of a derived parquet entry, or a filter or projection of
+  *     one, is already materialized: it is never cached.
+  *  1. A frame read once is never cached.
+  *  1. A frame the returned plan reads more than once is
+  *     [[MaterializeOps.materialize materialized]]. Its checkpoint blocks
+  *     belong to an RDD that the `ContextCleaner` reclaims once the result
+  *     referencing it is gone.
+  *  1. A frame consumed entirely before the query returns is cached
+  *     through [[scoped]], which releases it in a `finally` when the
+  *     scope exits.
+  *
+  * `HygieneSpec` runs every query and asserts that none leaves a cache
+  * entry, a non-checkpoint persisted RDD or a changed conf behind; its
+  * source scan keeps `persist` and `StorageLevel` in this file.
   */
 object Materialize {
 
@@ -71,6 +92,16 @@ object Materialize {
     val obs = Observation()
     val out = apply(df.observe(obs, metric, more: _*))
     (out, obs.get)
+  }
+
+  /** Form 4 of the lifetime rule: runs `body` with a `cache` function
+    * that persists a frame (memory, spilling to disk) for the scope's
+    * duration, and unpersists every frame it cached when `body` returns
+    * or throws. Nothing `body` returns may read a cached frame lazily. */
+  def scoped[T](body: (DataFrame => DataFrame) => T): T = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => held += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+    finally held.foreach(_.unpersist(blocking = false))
   }
 
   /** `df.materialize()` — chainable form of [[Materialize.apply]]. */

@@ -19,13 +19,14 @@ import org.apache.spark.sql.functions._
   * The merge step is hybrid. The per-round component-link list has at
   * most one edge per component — after round 1 that is ≤ |V|/2 rows and
   * shrinks geometrically — so when it fits a driver buffer
-  * (`driverMergeLimit` pairs) the contraction is a driver-side
-  * union-find: zero extra distributed actions, which is what makes the
-  * query robust on a busy cluster (each Spark action pays scheduling
-  * latency; the fully-distributed variant runs O(rounds × diameter) of
-  * them). Beyond the limit it falls back to the engine's own
-  * connected-components program ([[ConnectedComponentsProgram]] under
-  * [[GmrRunner]]) on the contracted graph — the standard hash-min
+  * ([[DriverMergeRows]] pairs within the broadcast budget) the
+  * contraction is a driver-side union-find: zero extra distributed
+  * actions, which is what makes the query robust on a busy cluster
+  * (each Spark action pays scheduling latency; the fully-distributed
+  * variant runs O(rounds × diameter) of them). Beyond the limit it falls
+  * back to the engine's own connected-components program
+  * ([[ConnectedComponentsProgram]] under [[GmrRunner]]) on the
+  * contracted graph — the standard hash-min
   * O(diameter)-round merge that never materializes anything driver-side.
   */
 object Mst {
@@ -33,15 +34,19 @@ object Mst {
   /** Cap on the Borůvka rounds (components at least halve per round). */
   private val MaxRounds = 40
 
+  /** Driver-side endgames ([[GraphOps.driverFits]]): the local Kruskal
+    * finish takes at most [[LocalFinishRows]] labeled edges, the
+    * union-find merge at most [[DriverMergeRows]] links. */
+  private val LocalFinishRows = 100000L
+  private val DriverMergeRows = 1000000L
+
   /** Minimum spanning forest of a canonical (src<dst, weight) edge list.
     * Returns the forest edges `(src, dst, weight)`. */
-  def minimumSpanningForest(canonicalEdges: DataFrame,
-                            driverMergeLimit: Long = 1000000L,
-                            localFinishLimit: Long = 100000L): DataFrame = {
+  def minimumSpanningForest(canonicalEdges: DataFrame): DataFrame = {
     val spark = canonicalEdges.sparkSession
     import spark.implicits._
-    val edges = canonicalEdges.select("src", "dst", "weight")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Materialize.scoped { cache =>
+    val edges = cache(canonicalEdges.select("src", "dst", "weight"))
     // The component-label frame is O(V), the gate.
     val (comp0, nComp) = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id")))
@@ -69,7 +74,7 @@ object Mst {
       // labels replaces the remaining O(log V) rounds of cluster actions.
       // The perturbed edge order (weight, src, dst) has a unique MSF, so
       // Kruskal here and further Borůvka rounds produce identical edges.
-      if (nLabeled <= localFinishLimit) {
+      if (GraphOps.driverFits(spark, nLabeled, LocalFinishRows)) {
         val rest = localKruskal(labeled)
         if (rest.nonEmpty) forest = forest.union(rest.toDF("src", "dst", "weight"))
         done = true
@@ -102,7 +107,7 @@ object Mst {
           greatest(col("c"), col("cdst")).as("dst")).distinct()
           .materializeCounted()
         val mapping =
-          if (nLinks <= driverMergeLimit) driverUnionFind(links)
+          if (GraphOps.driverFits(spark, nLinks, DriverMergeRows)) driverUnionFind(links)
           else {
             val cg = PropertyGraph.fromEdges(PropertyGraph.symmetrize(links))
             GmrRunner.run(cg, ConnectedComponentsProgram).vertices
@@ -116,8 +121,8 @@ object Mst {
       round += 1
     }
     }
-    edges.unpersist(blocking = false)
     forest
+    }
   }
 
   /** Kruskal over the collected contracted graph: union-find on component
@@ -138,8 +143,9 @@ object Mst {
     }.toSeq
   }
 
-  /** Driver union-find over a (small) component-link list → broadcastable
-    * `(comp, newcomp)` mapping with min-label roots (labels don't affect
+  /** Driver union-find over a (small) component-link list → broadcast
+    * `(comp, newcomp)` mapping (the caller checked the link count against
+    * the broadcast budget) with min-label roots (labels don't affect
     * the forest — picks group by component *sets* — but min roots keep
     * intermediate state bit-deterministic run to run). */
   private def driverUnionFind(links: DataFrame): DataFrame = {

@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.{GraphOps, PropertyGraph}
+import graft.graph.{GraphOps, Materialize, PropertyGraph}
 
 /** Loaders for the reference's text graph formats (SURVEY.md §2.1
   * O1/O4/O5/O6, FIXTURES.md §A): [[edgeList]] for edge lists, and ONE
@@ -264,9 +264,9 @@ object GraphLoaders {
     // exchange on the edge side, which the sf10 decomposition named as
     // the write leg's dominant cost term (VERDICT r9 item 2). Beyond the
     // budget they fall back to the shuffle join.
-    val assignPersisted = assignment.map(_
-      .select(col("id"), col("part").cast("long").as("part"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Materialize.scoped { cache =>
+    val assignPersisted = assignment.map(a =>
+      cache(a.select(col("id"), col("part").cast("long").as("part"))))
     // 16 payload bytes + ~16 row overhead per (id, part) row; the count
     // also materializes the persisted frame exactly once.
     val assignBroadcasts = assignPersisted.exists(a =>
@@ -296,99 +296,94 @@ object GraphLoaders {
     // pre-scan was a full extra pass per write, guide §1.2), and the
     // token type must be known before any string is rendered, so the
     // strings are built exactly once, inside the write job.
-    val pre = owned(g.vertices.select(col("id")), "id", "part")
+    val pre = cache(owned(g.vertices.select(col("id")), "id", "part")
       .join(nbrs, col("id") === col("src"), "left_outer")
       .select(col("id"), col("part"),
         coalesce(col("ns"), array().cast("array<struct<dst:bigint,dpart:bigint,w:double>>"))
-          .as("ns"))
-    pre.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      // One grouped pass for every part's header counts (the per-part
-      // agg loop was `parts` extra jobs over the persisted frame) — the
-      // same pass detects fractional edge weights (`isfewgts`,
-      // graph.h:609-612): every edge record is in exactly one `ns`.
-      val countRows = pre.groupBy(col("part"))
-        .agg(count(lit(1)).as("nv"), sum(size(col("ns"))).as("ne"),
-          max(exists(col("ns"),
-            n => n.getField("w") =!= floor(n.getField("w")))).as("frac"))
-        .collect()
-      val allIntegral = !countRows.exists(r => Option(r.get(3)).contains(true))
-      def wTok(c: org.apache.spark.sql.Column) =
-        if (allIntegral) c.cast("long").cast("string") else c.cast("string")
-      val lines = pre.select(col("id"), col("part"),
-        concat_ws(" ",
-          col("id").cast("string"), lit("1"), // vid, vwgt (ncon=1)
-          concat_ws(" ", flatten(transform(col("ns"),
-            n => array(n.getField("dst").cast("string"),
-              n.getField("dpart").cast("string"),
-              wTok(n.getField("w"))))))).as("line"))
-      val counts = countRows
-        .map(r => r.getLong(0) -> (r.getLong(1),
-          Option(r.get(2)).map(_.toString.toLong).getOrElse(0L))).toMap
-      // An out-of-range owner would emit a part=p directory the header
-      // loop below never reads — vertices silently vanishing from the
-      // roundtrip. Reject it before anything is written.
-      val outOfRange = counts.keys.filter(p => p < 0 || p >= parts)
-      require(outOfRange.isEmpty,
-        s"assignment maps vertices to part(s) ${outOfRange.toSeq.sorted.mkString(",")} " +
-          s"outside [0, $parts) — was the assignment computed for a different part count?")
-      (0 until parts).foreach { p =>
-        val (nv, ne) = counts.getOrElse(p.toLong, (0L, 0L))
-        require(nv > 0 && ne > 0,
-          s"part $p of $parts is empty (nvtxs=$nv nedges=$ne): the reference " +
-            "reader rejects empty subgraphs (graph.h:587-588) — use fewer parts")
-      }
-      // ONE job writes every part's sorted single file: hash-repartition
-      // on the part id puts each part's rows in exactly one task (two
-      // parts may share a task — partitionBy still splits them into
-      // separate files, each internally ordered), sortWithinPartitions
-      // orders by (part, id), and the dynamic-partition text write emits
-      // part=p/ dirs. The previous shape — one orderBy job per part run
-      // on concurrent driver threads — paid `parts` × (2-stage sort +
-      // job schedule + codegen) on tiny data: measured ~9-13 s of mostly
-      // scheduler/JIT latency at sf0.1 vs ~3 s for this single pass.
-      //
-      // The `nvtxs nedges fmt ncon` header is INJECTED as each part's
-      // first row (id = Long.MinValue sorts before every vertex) — the
-      // counts are already known from the grouped pass above, so the
-      // finished file only needs an O(1) rename. The previous shape —
-      // create + header + stream-copy the whole part file — was a
-      // second full sequential byte pass per part (r9; the sf10 probe
-      // measured ~90 s per 3-part write at ~2.6 GB/part, half of it
-      // this copy).
-      val spark2 = g.edges.sparkSession
-      import spark2.implicits._
-      val headers = counts.toSeq.map { case (p, (nv, ne)) =>
-        (java.lang.Long.MIN_VALUE, p, s"$nv $ne 1111 1")
-      }.toDF("id", "part", "line")
-      val tmp = new org.apache.hadoop.fs.Path(s"$basePath.subgraphs.tmp")
-      val fs = tmp.getFileSystem(hconf)
-      lines.select(col("id"), col("part"), col("line")).union(headers)
-        .repartition(parts, col("part"))
-        .sortWithinPartitions(col("part"), col("id"))
-        .select(col("part"), col("line").as("value"))
-        .write.partitionBy("part").mode("overwrite").text(tmp.toString)
-      (0 until parts).foreach { p =>
-        val dir = new org.apache.hadoop.fs.Path(tmp, s"part=$p")
-        val partFiles = fs.listStatus(dir).map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-        // The rename finish assumes the repartition(col("part")) task
-        // committed exactly ONE file per part=p dir. A session-wide
-        // spark.sql.files.maxRecordsPerFile (or codec split) could emit
-        // several; renaming just the first would silently drop vertex
-        // lines, so the single-file invariant fails loudly (ADVICE r9).
-        require(partFiles.length == 1,
-          s"part=$p committed ${partFiles.length} files (expected exactly 1; " +
-            "is spark.sql.files.maxRecordsPerFile set session-wide?)")
-        val dst = new org.apache.hadoop.fs.Path(s"$basePath.subgraph.$p")
-        if (fs.exists(dst)) fs.delete(dst, false)
-        require(fs.rename(partFiles.head, dst), s"rename ${partFiles.head} -> $dst failed")
-      }
-      fs.delete(tmp, true)
-    } finally {
-      pre.unpersist(blocking = false)
-      assignPersisted.foreach(_.unpersist(blocking = false))
+          .as("ns")))
+    val hconf = spark.sparkContext.hadoopConfiguration
+    // One grouped pass for every part's header counts (the per-part
+    // agg loop was `parts` extra jobs over the persisted frame) — the
+    // same pass detects fractional edge weights (`isfewgts`,
+    // graph.h:609-612): every edge record is in exactly one `ns`.
+    val countRows = pre.groupBy(col("part"))
+      .agg(count(lit(1)).as("nv"), sum(size(col("ns"))).as("ne"),
+        max(exists(col("ns"),
+          n => n.getField("w") =!= floor(n.getField("w")))).as("frac"))
+      .collect()
+    val allIntegral = !countRows.exists(r => Option(r.get(3)).contains(true))
+    def wTok(c: org.apache.spark.sql.Column) =
+      if (allIntegral) c.cast("long").cast("string") else c.cast("string")
+    val lines = pre.select(col("id"), col("part"),
+      concat_ws(" ",
+        col("id").cast("string"), lit("1"), // vid, vwgt (ncon=1)
+        concat_ws(" ", flatten(transform(col("ns"),
+          n => array(n.getField("dst").cast("string"),
+            n.getField("dpart").cast("string"),
+            wTok(n.getField("w"))))))).as("line"))
+    val counts = countRows
+      .map(r => r.getLong(0) -> (r.getLong(1),
+        Option(r.get(2)).map(_.toString.toLong).getOrElse(0L))).toMap
+    // An out-of-range owner would emit a part=p directory the header
+    // loop below never reads — vertices silently vanishing from the
+    // roundtrip. Reject it before anything is written.
+    val outOfRange = counts.keys.filter(p => p < 0 || p >= parts)
+    require(outOfRange.isEmpty,
+      s"assignment maps vertices to part(s) ${outOfRange.toSeq.sorted.mkString(",")} " +
+        s"outside [0, $parts) — was the assignment computed for a different part count?")
+    (0 until parts).foreach { p =>
+      val (nv, ne) = counts.getOrElse(p.toLong, (0L, 0L))
+      require(nv > 0 && ne > 0,
+        s"part $p of $parts is empty (nvtxs=$nv nedges=$ne): the reference " +
+          "reader rejects empty subgraphs (graph.h:587-588) — use fewer parts")
+    }
+    // ONE job writes every part's sorted single file: hash-repartition
+    // on the part id puts each part's rows in exactly one task (two
+    // parts may share a task — partitionBy still splits them into
+    // separate files, each internally ordered), sortWithinPartitions
+    // orders by (part, id), and the dynamic-partition text write emits
+    // part=p/ dirs. The previous shape — one orderBy job per part run
+    // on concurrent driver threads — paid `parts` × (2-stage sort +
+    // job schedule + codegen) on tiny data: measured ~9-13 s of mostly
+    // scheduler/JIT latency at sf0.1 vs ~3 s for this single pass.
+    //
+    // The `nvtxs nedges fmt ncon` header is INJECTED as each part's
+    // first row (id = Long.MinValue sorts before every vertex) — the
+    // counts are already known from the grouped pass above, so the
+    // finished file only needs an O(1) rename. The previous shape —
+    // create + header + stream-copy the whole part file — was a
+    // second full sequential byte pass per part (r9; the sf10 probe
+    // measured ~90 s per 3-part write at ~2.6 GB/part, half of it
+    // this copy).
+    val spark2 = g.edges.sparkSession
+    import spark2.implicits._
+    val headers = counts.toSeq.map { case (p, (nv, ne)) =>
+      (java.lang.Long.MIN_VALUE, p, s"$nv $ne 1111 1")
+    }.toDF("id", "part", "line")
+    val tmp = new org.apache.hadoop.fs.Path(s"$basePath.subgraphs.tmp")
+    val fs = tmp.getFileSystem(hconf)
+    lines.select(col("id"), col("part"), col("line")).union(headers)
+      .repartition(parts, col("part"))
+      .sortWithinPartitions(col("part"), col("id"))
+      .select(col("part"), col("line").as("value"))
+      .write.partitionBy("part").mode("overwrite").text(tmp.toString)
+    (0 until parts).foreach { p =>
+      val dir = new org.apache.hadoop.fs.Path(tmp, s"part=$p")
+      val partFiles = fs.listStatus(dir).map(_.getPath)
+        .filter(_.getName.startsWith("part-"))
+      // The rename finish assumes the repartition(col("part")) task
+      // committed exactly ONE file per part=p dir. A session-wide
+      // spark.sql.files.maxRecordsPerFile (or codec split) could emit
+      // several; renaming just the first would silently drop vertex
+      // lines, so the single-file invariant fails loudly (ADVICE r9).
+      require(partFiles.length == 1,
+        s"part=$p committed ${partFiles.length} files (expected exactly 1; " +
+          "is spark.sql.files.maxRecordsPerFile set session-wide?)")
+      val dst = new org.apache.hadoop.fs.Path(s"$basePath.subgraph.$p")
+      if (fs.exists(dst)) fs.delete(dst, false)
+      require(fs.rename(partFiles.head, dst), s"rename ${partFiles.head} -> $dst failed")
+    }
+    fs.delete(tmp, true)
     }
   }
 

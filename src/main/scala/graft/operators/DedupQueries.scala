@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Derived, Tables}
 import graft.dedup.{MinHashLsh, SimHash}
 import graft.functions.Portable
-import graft.graph.{ConnectedComponentsProgram, GmrRunner, PropertyGraph}
+import graft.graph.{ConnectedComponentsProgram, GmrRunner, Materialize, PropertyGraph}
+import graft.graph.Materialize.MaterializeOps
 
 /** Deduplication operator surface over the `documents` and `embeddings`
   * tables: exact hash, n-gram jaccard, MinHash+LSH, SimHash, and
@@ -57,8 +58,8 @@ object DedupQueries {
   /** The exploded shingle postings (id, lang, h) materialized to parquet
     * once per sfDir — d2 and d14 both start here (same derive-once rule
     * as the g-family's pair/degree tables: first caller pays, the rest
-    * read a scan-only plan; Verify/Bench clear in-memory caches between
-    * queries, the parquet survives). The dedup entries live in
+    * read a scan-only plan; no in-memory cache outlives a query, the
+    * parquet does). The dedup entries live in
     * [[Derived]] family `v1`: bump it when the shingling or the d2 pair
     * statistics change. */
   def postingsMaterialized(s: SparkSession, d: String): DataFrame =
@@ -82,15 +83,13 @@ object DedupQueries {
     // (written last).
     val szsPath = Derived.path(d, "v1", "dedup_sizes")
     val hotPath = Derived.path(d, "v1", "dedup_hot")
-    val prPath = Derived.entry(d, "v1", "dedup_pairs") { path =>
-      val ex = postingsMaterialized(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val prPath = Derived.entry(d, "v1", "dedup_pairs") { path => Materialize.scoped { cache =>
+      val ex = cache(postingsMaterialized(s, d))
       val dfc = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
       dfc.where(col("df") > DfCap).select("h")
         .write.mode("overwrite").parquet(hotPath)
       val hot = broadcast(s.read.parquet(hotPath))
-      val cex = ex.join(hot, Seq("h"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cex = cache(ex.join(hot, Seq("h"), "left_anti"))
       ex.groupBy(col("id")).agg(count(lit(1)).as("ntot"))
         .join(cex.groupBy(col("id")).agg(count(lit(1)).as("nkept")), Seq("id"), "left_outer")
         .select(col("id"), col("ntot"),
@@ -102,8 +101,7 @@ object DedupQueries {
         .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
         .agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(path)
-      ex.unpersist(); cex.unpersist()
-    }
+    } }
     (s.read.parquet(szsPath), s.read.parquet(prPath), s.read.parquet(hotPath))
   }
 
@@ -147,7 +145,6 @@ object DedupQueries {
     // cached: the exact verify re-hashes only the candidate docs (a tiny
     // broadcast semi-join against the raw table).
     val ex = postingsMaterialized(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (szs, common, hotList) = pairStatsMaterialized(s, d)
     val hot = broadcast(hotList)
     val scored = common
@@ -177,8 +174,7 @@ object DedupQueries {
     // Exact full-universe verify on the bound survivors + recovery
     // pairs: re-hash ONLY the candidate docs (broadcast semi-join on the
     // raw table — the corpus is never re-hashed wholesale).
-    val cand = cand1.union(cand2).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = cand1.union(cand2).distinct().materialize()
     val candIds = cand.select(col("doc_a").as("id"))
       .union(cand.select(col("doc_b").as("id"))).distinct()
     // Raw table WITHOUT the docs() repartition: that repartition is a
@@ -188,7 +184,7 @@ object DedupQueries {
       .select(col("doc_id").as("id"), col("text"))
       .join(broadcast(candIds), Seq("id"))
       .select(col("id"), Portable.shingleHashes(col("text"), cfg.shingleWords).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val c = size(array_intersect(col("sha"), col("shb")))
     val j = c.cast("double") / (size(col("sha")) + size(col("shb")) - c).cast("double")
     val verified = broadcast(cand)
@@ -250,16 +246,12 @@ object DedupQueries {
     * (v2: 60-bit composed fingerprint, 5×12 bands, h ≤ 4). */
   private def simhashPairs(s: SparkSession, d: String): DataFrame =
     s.read.parquet(Derived.entry(d, "sim_v2", "pairs", bill = "sim_pairs") { path =>
-      // persist: both self-join sides would otherwise re-run the per-doc
-      // fingerprint kernel (the dominant projection) over the full corpus
-      val fp = simhashFingerprints(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try SimHash.bandedPairs(fp, bands = SimBands, maxHamming = SimMaxHamming)
+      // the fingerprints are a parquet scan, so both self-join sides read
+      // the materialized kernel output, never the kernel itself
+      SimHash.bandedPairs(simhashFingerprints(s, d), bands = SimBands,
+          maxHamming = SimMaxHamming)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
         .write.mode("overwrite").parquet(path)
-      // build-only cache: the write above is its sole consumer (the
-      // r8/r9 unpersist discipline, VERDICT r9 item 4)
-      finally fp.unpersist(blocking = false)
     })
 
   /** The per-doc fingerprints materialized beside [[simhashPairs]] —
@@ -282,11 +274,11 @@ object DedupQueries {
     * derivation — the d3 replicate-the-pipeline trick — keeping the
     * hash-match exact rather than recall-dependent. */
   def d5EmbeddingCosine(s: SparkSession, d: String): DataFrame = {
-    // persist: the 6-plane signature projection (384 multiply-adds/row)
+    // materialized: the 6-plane signature projection (384 multiply-adds/row)
     // feeds both self-join sides
     val n = SimilarityQueries.vecsWithNorm(s, d)
       .withColumn("sig", SimilarityQueries.signature(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val a = n.as("a"); val b = n.as("b")
     val cosSim = Portable.vecDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
     a.join(b, col("a.sig") === col("b.sig") && col("a.vec_id") < col("b.vec_id"))
@@ -323,20 +315,15 @@ object DedupQueries {
     s.read.parquet(Derived.entry(d, "lsh_v1", leaf, bill = "dedup_assign") { path =>
       val pairs = lshPairsMaterialized(s, d)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(pairs))
       val comp = GmrRunner.runFixed(g, ConnectedComponentsProgram, D6Iters)
         .select(col("id"), col("value").cast("long").as("comp"))
-      try docs(s, d).select(col("id").as("doc_id"))
+      docs(s, d).select(col("id").as("doc_id"))
         .join(comp, col("doc_id") === col("id"), "left_outer")
         .select(col("doc_id"),
           coalesce(col("comp"), col("doc_id")).as("canonical_id"))
         .withColumn("is_dup", col("doc_id") =!= col("canonical_id"))
         .write.mode("overwrite").parquet(path)
-      // build-only cache: runFixed materializes per superstep, so the
-      // write's plan no longer reads `pairs` — release it with the
-      // build (the r8/r9 unpersist discipline, VERDICT r9 item 4)
-      finally pairs.unpersist(blocking = false)
     })
   }
 
@@ -510,7 +497,7 @@ object DedupQueries {
       .groupBy(col("simhash")).agg(min(col("id")).as("rep"))
       .join(simhashFingerprints(s, d), "simhash")
       .select(col("id"), col("rep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val qedges = simhashPairs(s, d)
       .join(rep.select(col("id").as("doc_a"), col("rep").as("src")), "doc_a")
       .join(rep.select(col("id").as("doc_b"), col("rep").as("dst")), "doc_b")
@@ -664,7 +651,7 @@ object DedupQueries {
   def d9BloomDecontaminate(s: SparkSession, d: String): DataFrame = {
     val sh = docs(s, d).select(col("id"),
         explode(Portable.shingleHashes(col("text"), DecontamK)).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val evalSh = sh.where(col("id") % 20 === 0).select("h").distinct()
     val bits = evalSh.select(explode(array(
       (0 until BloomJ).map(j => bloomPos(col("h"), j)): _*)).as("p")).distinct()
@@ -675,7 +662,7 @@ object DedupQueries {
     val cand = (0 until BloomJ).foldLeft(train) { (acc, j) =>
       acc.join(broadcast(bits.select(col("p").as(s"p$j"))),
         bloomPos(col("h"), j) === col(s"p$j"), "left_semi")
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.materialize()
     val nCand = cand.groupBy(col("id")).agg(count(lit(1)).as("n_candidates"))
     val nVer = cand.join(broadcast(evalSh), "h")
       .groupBy(col("id")).agg(count(lit(1)).as("n_verified"))
@@ -787,10 +774,10 @@ object DedupQueries {
       .select("doc_a", "doc_b")
     val cand = cand1.union(cand2).distinct()
       // The candidate list is read three times (id semi-join + both
-      // directed verifies) — persist it or the pipeline above re-runs
+      // directed verifies) — materialize it or the pipeline above re-runs
       // per consumer (the d2 lesson; measured 17.6 → ~6 s here before
       // the self-join moved into the shared materialization).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val candIds = cand.select(col("doc_a").as("id"))
       .union(cand.select(col("doc_b").as("id"))).distinct()
     // Exact verify re-hashes ONLY the candidate docs from the raw table
@@ -805,7 +792,7 @@ object DedupQueries {
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("sha"), col("shb"))).cast("long").as("cf"),
         size(col("sha")).cast("long").as("ta"), size(col("shb")).cast("long").as("tb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val dirA = verified.where(lit(5) * col("cf") >= lit(4) * col("ta"))
       .select(col("doc_a").as("contained_id"), col("doc_b").as("container_id"),
         col("cf").as("n_common"), col("ta").as("n_shingles"),
@@ -861,7 +848,7 @@ object DedupQueries {
   def d16NameCanon(s: SparkSession, d: String): DataFrame = {
     val names = Tables.part(s, d).select(col("p_name").as("name")).distinct()
       .withColumn("hid", Portable.charHash(col("name")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val e = d15FuzzyNames(s, d)
       .join(names.select(col("name").as("name_a"), col("hid").as("src")), "name_a")
       .join(names.select(col("name").as("name_b"), col("hid").as("dst")), "name_b")
@@ -895,7 +882,7 @@ object DedupQueries {
       .select(col("source"),
         explode(Portable.spanHashes(col("text"), SpanK)).as("h"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     sh.as("a").join(sh.as("b"),
         col("a.h") === col("b.h") && col("a.source") < col("b.source"))
       .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
@@ -994,7 +981,7 @@ object DedupQueries {
   def d11DupSpans(s: SparkSession, d: String): DataFrame = {
     val spans = docs(s, d).select(col("id"),
         explode(Portable.spanHashes(col("text"), SpanK)).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val dup = spans.groupBy(col("h"))
       .agg(min(col("id")).as("mn"), max(col("id")).as("mx"))
       .where(col("mn") =!= col("mx")).select("h")
@@ -1045,7 +1032,7 @@ object DedupQueries {
     val dd = docs(s, d)
     val isBatch = col("id") % IncrShardMod === 0
     val sets = MinHashLsh.shingleSets(dd, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val cand = MinHashLsh.bandBuckets(sets.where(isBatch), cfg).as("x")
       .join(MinHashLsh.bandBuckets(sets.where(!isBatch), cfg).as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig"))
@@ -1087,7 +1074,7 @@ object DedupQueries {
     val sets = MinHashLsh.shingleSets(docs(s, d), cfg)
       .select(col("id"), col("sh"),
         call_function("graft_minhash_mins", col("sh"), lit(cfg.numPerms)).as("mins"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     lshPairsMaterialized(s, d)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       .join(sets.select(col("id").as("doc_a"), col("sh").as("sha"),
@@ -1137,13 +1124,13 @@ object DedupQueries {
     val tf = docs(s, d)
       .select(col("id"), explode(Portable.wordHashes(col("text"))).as("h"))
       .groupBy("id", "h").agg(least(count(lit(1)), lit(TcTfCap)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val dfreq = tf.groupBy("h").agg(count(lit(1)).as("df"))
     val nDocs = broadcast(docs(s, d).agg(count(lit(1)).as("n_docs")))
     val weights = tf.join(dfreq, "h").crossJoin(nDocs)
       .select(col("id"), col("h"),
         (col("tf") * expr(s"($TcIdfScale * n_docs) DIV df")).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val norms = weights.groupBy("id").agg(sum(col("w") * col("w")).as("n2"))
     val rare = tf.join(dfreq.where(col("df") >= 2 && col("df") <= DfCap), "h")
       .select(col("id"), col("h"))

@@ -51,10 +51,10 @@ object GraphQueries {
   }
 
   /** [[partPairs]] materialized to parquet once per sfDir: all nine
-    * g-family queries start from the same derived graph, and Verify/Bench
-    * rightly clear the block-manager cache between queries — so without a
-    * disk materialization each query re-pays the lineitem scan + two
-    * shuffles (~1-2 s × 9 at sf0.1). The first caller computes and
+    * g-family queries start from the same derived graph, and no
+    * in-memory cache outlives the query that made it — so without a disk
+    * materialization each query re-pays the lineitem scan + two shuffles
+    * (~1-2 s × 9 at sf0.1). The first caller computes and
     * writes (that cost stays billed to it — no bench gaming); the rest
     * re-read a scan-only plan. At cluster scale this is the standard
     * shared-derivation pattern: derive once, write partitioned, fan out.
@@ -99,15 +99,13 @@ object GraphQueries {
     }
 
   /** Derived graph from the materialized pair + degree tables: the edge
-    * view re-derives from the persisted pairs (no lineitem re-scan) and
+    * view re-derives from the pair parquet (no lineitem re-scan) and
     * the vertex set is a 20k-row parquet scan carrying `deg` — programs
     * that need degrees ([[PageRank]]) use it directly, the rest project
-    * it away in `initial`. Bench/Verify clear caches between queries. */
-  def partGraph(s: SparkSession, d: String): PropertyGraph = {
-    val pairs = partPairsMaterialized(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    PropertyGraph(vertexDegMaterialized(s, d), PropertyGraph.symmetrize(pairs))
-  }
+    * it away in `initial`. Both are scans, so nothing is cached. */
+  def partGraph(s: SparkSession, d: String): PropertyGraph =
+    PropertyGraph(vertexDegMaterialized(s, d),
+      PropertyGraph.symmetrize(partPairsMaterialized(s, d)))
 
   // ---- oracle SQL derivation (shared CTE prefix) ----
 
@@ -387,7 +385,6 @@ object GraphQueries {
     * O(Σ deg²) of the THRESHOLDED graph. */
   def g13LinkPredict(s: SparkSession, d: String): DataFrame = {
     val cpairs = partPairsMaterialized(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val te = cpairs.where(col("weight") >= LinkMinWeight).select("src", "dst")
     val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
     val sdeg = se.groupBy(col("src").as("id")).agg(count(lit(1)).as("dg"))
@@ -481,9 +478,11 @@ object GraphQueries {
     * triple credits its three corners via an explode + count. Integer
     * ppm score via DIV; vertices of degree < 2 score 0. */
   def g17ClusteringCoeff(s: SparkSession, d: String): DataFrame = {
+    // Materialized: the strong ties are a small slice of the pair table
+    // and the returned plan reads them five times; re-scanning the pair
+    // parquet per read measured 0.9 → 2.0 s at sf0.1 on a 4-vCPU host.
     val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
-      .select("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("src", "dst").materialize()
     val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
     val sdeg = se.groupBy(col("src").as("id")).agg(count(lit(1)).as("dg"))
     val tri = te.as("ab").join(te.as("bc"), col("ab.dst") === col("bc.src"))
@@ -587,19 +586,18 @@ object GraphQueries {
   /** The strong-tie BFS that g14, g21 and g23 share: the weight ≥
     * [[LinkMinWeight]] pairs symmetrized into `se`, their vertex set, and
     * [[bfsLevels]] from the [[BcSources]] smallest ids. `finish` gets
-    * `se`, the vertices and the BFS; `se` is unpersisted once it returns,
-    * so the plan it returns must read only materialized frames. */
+    * `se`, the vertices and the BFS; `se` is cached only while `finish`
+    * runs, so the plan it returns must read only materialized frames. */
   private def strongTieBfs(s: SparkSession, d: String)(
       finish: (DataFrame, DataFrame, Superstep.Folded) => DataFrame): DataFrame = {
     val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
       .select("src", "dst")
-    val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped { cache =>
+      val se = cache(te.union(te.select(col("dst").as("src"), col("src").as("dst"))))
       val (verts, nVerts) = se.select(col("src").as("id")).distinct().materializeCounted()
       val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
       finish(se, verts, bfsLevels(se, nVerts, srcs, BcDepth))
-    } finally se.unpersist(blocking = false)
+    }
   }
 
   def g14Betweenness(s: SparkSession, d: String): DataFrame =
@@ -703,7 +701,6 @@ object GraphQueries {
     * bit with no L2 sqrt. All intermediates ≤ V·scale² < 2⁶² — BIGINT-safe. */
   def g20Hits(s: SparkSession, d: String): DataFrame = {
     val e = partPairsMaterialized(s, d).select("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Hub and authority frames are O(V), the gate.
     val (verts, nVerts) = vertexDegMaterialized(s, d).select(col("id")).materializeCounted()
     var hub = verts.select(col("id"), lit(HitsScale).as("h"))
@@ -982,33 +979,32 @@ object GraphQueries {
 
   /** q54: bounded transitive closure / reachability — the recursive-CTE
     * face (WITH RECURSIVE is the one relational surface Spark SQL lacks
-    * outright). Spark-first formulation is SEMI-NAIVE Datalog evaluation:
-    * the frontier carries only the delta (nodes first reached last
-    * round), each round is frontier ⋈ edges with an anti-join against
-    * the accumulated closure, so total work is O(closure edges) — the
-    * naive re-join of the FULL closure every round is quadratic in depth.
-    * On the strong-tie DAG (src < dst) first-reach hop = shortest hop,
-    * matching the oracle's min(hops) over the bounded recursive
-    * enumeration (recursive UNION, not UNION ALL — DuckDB's fixpoint
-    * dedup is the oracle-side analog of the anti-join). */
+    * outright). Spark-first formulation is SEMI-NAIVE Datalog evaluation,
+    * which is the multi-source [[bfsLevels]] over the DIRECTED strong-tie
+    * edges: the seeds are its sources, each level joins only the frontier
+    * (nodes first reached last round) to the edges with an anti-join
+    * against the reached set, so total work is O(closure edges). On the
+    * strong-tie DAG (src < dst) first-reach hop = shortest hop, matching
+    * the oracle's min(hops) over the bounded recursive enumeration
+    * (recursive UNION, not UNION ALL — DuckDB's fixpoint dedup is the
+    * oracle-side analog of the anti-join). Each seed reaches at most the
+    * edge-endpoint set, the BFS's gate bound. */
   def q54TransitiveClosure(s: SparkSession, d: String): DataFrame = {
-    val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
-      .select("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seeds = te.select(col("src")).distinct().orderBy("src")
-      .limit(ReachSeeds).select(col("src").as("seed"))
-    var frontier = seeds.select(col("seed"), col("seed").as("node")).materialize()
-    var reached = frontier.select(col("seed"), col("node"), lit(0L).as("hops"))
-    for (h <- 1 to ReachDepth) {
-      val nxt = frontier.join(te, frontier("node") === te("src"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-      val fresh = nxt.join(reached, Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(h.toLong).as("hops"))
-        .materialize()
-      reached = reached.union(fresh).materialize()
-      frontier = fresh.select("seed", "node")
+    // The strong ties are cached while the BFS reads them once per level
+    // (re-scanning the pair parquet per level measured 1.2 → 2.5 s at
+    // sf0.1 on a 4-vCPU host); the returned plan reads only the BFS's
+    // materialized state.
+    val reached = Materialize.scoped { cache =>
+      val te = cache(partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
+        .select("src", "dst"))
+      val nVerts = te.select(col("src").as("id"))
+        .union(te.select(col("dst").as("id"))).distinct().count()
+      val seeds = te.select(col("src").as("q")).distinct().orderBy("q").limit(ReachSeeds)
+      bfsLevels(te, nVerts, seeds, ReachDepth).state
     }
-    reached.where(col("hops") >= 1).orderBy("seed", "node")
+    reached.where(col("v") >= 1)
+      .select(col("q").as("seed"), col("id").as("node"), col("v").as("hops"))
+      .orderBy("seed", "node")
   }
 
   private def sourceVertex(g: PropertyGraph): Long =
@@ -1030,8 +1026,7 @@ object GraphQueries {
     ccLabelsMaterialized(s, d).orderBy("id")
 
   def g5TriangleCount(s: SparkSession, d: String): DataFrame =
-    GraphOps.triangleCountAuto(
-      partPairsMaterialized(s, d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    GraphOps.triangleCountAuto(partPairsMaterialized(s, d))
 
   /** g19: the fmt=1111 subgraph writer/reader under the oracle gate —
     * the co-occurrence graph is written as 3 pre-partitioned subgraph
@@ -1046,19 +1041,17 @@ object GraphQueries {
     * point is gating the writer, not caching it. */
   def g19PartitionRoundtrip(s: SparkSession, d: String): DataFrame = {
     val parts = 3
-    val pairs = partPairsMaterialized(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val g = PropertyGraph(vertexDegMaterialized(s, d).select(col("id")),
-      PropertyGraph.symmetrize(pairs))
     val base = Derived.path(d, "v1", "subgraph_rt")
     new java.io.File(base).getParentFile.mkdirs()
-    graft.core.Phase.record("g19.write") {
-      graft.io.GraphLoaders.writeMetisSubgraphs(g, parts, base)
-    }
     // The write is `pairs`' sole consumer — everything below reads the
-    // written subgraph files back. Release it (the r8/r9 unpersist
-    // discipline, VERDICT r9 item 4; the g29 fix's hash-mode twin).
-    pairs.unpersist(blocking = false)
+    // written subgraph files back.
+    Materialize.scoped { cache =>
+      val g = PropertyGraph(vertexDegMaterialized(s, d).select(col("id")),
+        PropertyGraph.symmetrize(cache(partPairsMaterialized(s, d))))
+      graft.core.Phase.record("g19.write") {
+        graft.io.GraphLoaders.writeMetisSubgraphs(g, parts, base)
+      }
+    }
     // Parse the written files ONCE into a materialized frame shared by
     // the stats aggregate and the read-back edge view (checkpointed, so
     // the ContextCleaner reclaims it with the result, where a persist
@@ -1124,26 +1117,22 @@ object GraphQueries {
     * win) ride the fully-gated companion [[g29bLocalityInvariants]]. */
   def g29LocalityRoundtrip(s: SparkSession, d: String): DataFrame = {
     val parts = 3
-    val pairs = partPairsMaterialized(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sym = PropertyGraph.symmetrize(pairs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val g = PropertyGraph(vertexDegMaterialized(s, d).select(col("id")), sym)
+    val sym = PropertyGraph.symmetrize(partPairsMaterialized(s, d))
     val assign = graft.core.Phase.record("g29.assign") {
       graft.io.GraphLoaders.localityAssignment(
         lpaLabelsMaterialized(s, d), parts)
     }
     val base = Derived.path(d, "v1", "subgraph_loc")
     new java.io.File(base).getParentFile.mkdirs()
-    graft.core.Phase.record("g29.write") {
-      graft.io.GraphLoaders.writeMetisSubgraphs(g, parts, base, Some(assign))
+    // The write is the multi-pass consumer the cache exists for. The
+    // returned plan's hash-baseline leg recomputes the symmetrized view
+    // from the derived parquet — one scan-only pass.
+    Materialize.scoped { cache =>
+      val g = PropertyGraph(vertexDegMaterialized(s, d).select(col("id")), cache(sym))
+      graft.core.Phase.record("g29.write") {
+        graft.io.GraphLoaders.writeMetisSubgraphs(g, parts, base, Some(assign))
+      }
     }
-    // The write (the multi-pass consumer the persists exist for) is done:
-    // release both frames now (the r8/r9 unpersist discipline, VERDICT r9
-    // item 4). The returned plan's hash-baseline leg recomputes the
-    // symmetrized view from the derived parquet — one scan-only pass.
-    pairs.unpersist(blocking = false)
-    sym.unpersist(blocking = false)
     val loc = graft.io.GraphLoaders.partitionStats(s, base, parts)
       .select(col("part"), col("nvtxs").as("loc_nvtxs"),
         col("nedges").as("loc_nedges"), col("cut_edges").as("loc_cut"))
@@ -1210,25 +1199,11 @@ object GraphQueries {
     * assignment fits the threshold), both aggregates are single-pass
     * partial+final — no driver-side data beyond the bounded LPT collect
     * inside localityAssignment itself. */
-  def g29bLocalityInvariants(s: SparkSession, d: String): DataFrame =
-    g29bInvariantsWithHandle(s, d)._1
-
-  /** [[g29bLocalityInvariants]] plus a handle to its persisted
-    * assignment frame, for callers that action the plan themselves and
-    * then want to release EXACTLY that cache entry (ADVICE r13: the
-    * spec's previous `spark.catalog.clearCache()` evicted every cached
-    * frame in the shared session, not just this one). Bench/Verify keep
-    * using the DataFrame-only entry point — their between-query cache
-    * wipe is the release there — so this split changes no engine
-    * behavior; it only exposes the frame the persist call creates. */
-  private[graft] def g29bInvariantsWithHandle(
-      s: SparkSession, d: String): (DataFrame, DataFrame) = {
+  def g29bLocalityInvariants(s: SparkSession, d: String): DataFrame = {
     val parts = 3
+    // Referenced three times below (loads + both ownership joins).
     val assign = graft.io.GraphLoaders.localityAssignment(
-      lpaLabelsMaterialized(s, d), parts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Referenced three times below (loads + both ownership joins);
-    // Bench/Verify clear caches between queries (the partGraph pattern).
+      lpaLabelsMaterialized(s, d), parts).materialize()
     val sym = PropertyGraph.symmetrize(partPairsMaterialized(s, d))
     val loads = assign.groupBy(col("part")).agg(count(lit(1)).as("n"))
     val stats = loads.agg(
@@ -1243,14 +1218,13 @@ object GraphQueries {
         sum(when(pmod(col("src"), lit(parts.toLong)) =!=
             pmod(col("dst"), lit(parts.toLong)), 1L).otherwise(0L)).as("hash_cut"))
     val cap = expr(s"(nvtxs_total + ${parts - 1}) DIV $parts") // ⌈V/parts⌉, exact
-    val out = stats.crossJoin(broadcast(cuts))
+    stats.crossJoin(broadcast(cuts))
       .select(
         col("nvtxs_total"),
         col("parts_used"),
         (col("max_part") * lit(parts.toLong) <=
           cap * lit(2L * parts - 1L)).as("balance_ok"),
         (col("loc_cut") < col("hash_cut")).as("cut_improved"))
-    (out, assign)
   }
 
   def g6DegreeHistogram(s: SparkSession, d: String): DataFrame =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.graph.Materialize
 import graft.graph.Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -304,7 +305,7 @@ object SimilarityQueries {
         posexplode(transform(col("embedding"),
           x => round((x.cast("double") + lit(1.0)) * QScale).cast("long")))
           .as(Seq("dim", "qd")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     def assign(centroids: DataFrame): DataFrame = {
       val d2 = (col("qd") - col("cd")) * (col("qd") - col("cd"))
       val dist = q.join(broadcast(centroids), "dim")
@@ -339,16 +340,12 @@ object SimilarityQueries {
     * explodes only the assigned corpus once per round (N×64 rows,
     * linear). KmeansArrayParitySpec pins cell-for-cell equality with
     * the per-dim formulation at both k = 4 and a derived k > 4. */
-  private[operators] def kmeansAssignArray(s: SparkSession, d: String, k: Long): DataFrame = {
-    val qa = quantizedArrays(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Materialize the assignment, then release the build-only cache —
-    // without this the quantized corpus stays pinned in the block
-    // manager for the rest of the session (ADVICE r8).
-    val out = kmeansAssignArrayOn(qa, k).materialize()
-    qa.unpersist(blocking = false)
-    out
-  }
+  private[operators] def kmeansAssignArray(s: SparkSession, d: String, k: Long): DataFrame =
+    // The assignment is materialized before the scope releases the
+    // quantized corpus it was computed from.
+    Materialize.scoped { cache =>
+      kmeansAssignArrayOn(cache(quantizedArrays(s, d)), k).materialize()
+    }
 
   /** The `(vec_id, qv)` quantized-array corpus frame shared by every
     * array-kernel Lloyd build (same micro-unit quantization as the
@@ -367,8 +364,8 @@ object SimilarityQueries {
     * output (`sum DIV count` per dim, positive longs). */
   private def vecMean = udaf(new graft.functions.Aggregators.VecMean)
 
-  /** Core flat Lloyd over an already-persisted quantized frame — callers
-    * own `qa`'s persist/unpersist lifecycle. */
+  /** Core flat Lloyd over an already-cached quantized frame — callers
+    * own `qa`'s cache scope. */
   private def kmeansAssignArrayOn(qa: DataFrame, k: Long): DataFrame = {
     val d2 = aggregate(zip_with(col("qv"), col("cv"), (x, y) => (x - y) * (x - y)),
       lit(0L), (acc, v) => acc + v)
@@ -479,34 +476,28 @@ object SimilarityQueries {
       s: SparkSession, d: String, k: Long): DataFrame = {
     val r = cubeBranch(k)
     val f = (k + r * r - 1) / (r * r)
-    val qa = quantizedArrays(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Materialize.scoped { cache =>
+    val qa = cache(quantizedArrays(s, d))
     // ---- level 1: flat array-kernel Lloyd at r (broadcast argmin over
     // O(k^⅓) centroid rows, shared with the flat build) ----
-    val ca1 = qa.join(
+    val ca1 = cache(qa.join(
         kmeansAssignArrayOn(qa, r).select(col("vec_id"), col("cluster").as("pkey")),
         "vec_id")
-      .select(col("vec_id"), col("pkey"), col("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("vec_id"), col("pkey"), col("qv")))
     // ---- level 2: r sub-centroids per level-1 cell ----
     val mid = refineWithin(ca1, r)
-    val ca2 = qa.join(
+    val ca2 = cache(qa.join(
         mid.select(col("vec_id"), (col("pkey") * r + col("sidx")).as("pkey")),
         "vec_id")
-      .select(col("vec_id"), col("pkey"), col("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("vec_id"), col("pkey"), col("qv")))
     // ---- level 3: f sub-centroids per level-2 cell ----
-    // Materialize the final assignment, then release the build-only
-    // cached frames — without this, qa/ca1/ca2 stay pinned in the block
-    // manager for the rest of the session after the one-shot build.
-    val out = refineWithin(ca2, f)
+    // The final assignment is materialized before the scope releases
+    // the cached frames it was computed from.
+    refineWithin(ca2, f)
       .select(col("vec_id"), (col("pkey") * f + col("sidx")).as("cluster"),
         col("d2"))
       .materialize()
-    qa.unpersist(blocking = false)
-    ca1.unpersist(blocking = false)
-    ca2.unpersist(blocking = false)
-    out
+    }
   }
 
   /** Derive-once cell assignment shared by s15/s16 (the dedup-family
@@ -643,7 +634,7 @@ object SimilarityQueries {
     * heap — O(k) state per query with map-side partial merge, where the
     * `row_number` form would sort all N approx distances per query. */
   /** Shared PQ training (s6 and s7): returns the exploded integer
-    * micro-unit frame (persisted — both consumers re-join it), the
+    * micro-unit frame (materialized — both consumers re-join it), the
     * per-(vec, sub) code table, and the trained centroids. Assignment is
     * the `min(struct)` argmin (hash aggregate, never a window sort). */
   private def pqModel(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
@@ -652,7 +643,7 @@ object SimilarityQueries {
           x => round((x.cast("double") + lit(1.0)) * QScale).cast("long")))
           .as(Seq("dim", "qd")))
       .withColumn("sub", expr(s"dim DIV $PqSubDims"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     // per-(vec, sub) argmin over the sub's clusters; join on dim implies
     // sub. min(struct(d2, cluster)) == ORDER BY d2, cluster LIMIT 1 — a
     // hash aggregate instead of a window sort.
@@ -849,7 +840,7 @@ object SimilarityQueries {
     val sigs = vecsWithNorm(s, d)
       .select(col("vec_id"), col("v"), col("nrm"),
         half(0).as("lo"), half(32).as("hi"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val q = broadcast(sigs.where(col("vec_id") < NQueryVecs)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("lo").as("qlo"), col("hi").as("qhi")))
@@ -922,7 +913,7 @@ object SimilarityQueries {
       .select(col("vec_id"), col("q"),
         sqrt(expr("aggregate(zip_with(q, q, (x, y) -> x * y), 0L, (a, c) -> a + c)")
           .cast("double")).as("qn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val probes = broadcast(q.where(col("vec_id") < NQueryVecs)
       .select(col("vec_id").as("query_id"), col("q").as("qa"), col("qn").as("qan")))
     val scored = q.crossJoin(probes)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Derived, Tables}
 import graft.functions.Portable
+import graft.graph.Materialize.MaterializeOps
 
 /** Text-analysis operators over the `documents` table: token counting,
   * heuristic language ID, quality scoring, and rolling-hash document
@@ -586,7 +587,7 @@ object TextQueries {
       .where(col("text").contains(PhraseW1) && col("text").contains(PhraseW2))
       .select(col("doc_id"), posexplode(w).as(Seq("pos", "word")))
       .where(col("word").isin(PhraseW1, PhraseW2))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .materialize()
     val p1 = postings.where(col("word") === PhraseW1)
       .select(col("doc_id"), col("pos"))
     val p2 = postings.where(col("word") === PhraseW2)

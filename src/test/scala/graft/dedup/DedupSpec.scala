@@ -108,6 +108,14 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(banded.toSeq === Seq((1L, 2L)))
   }
 
+  /** Runs `f` on a fresh temp corpus dir, then wipes the derive-once
+    * entries the queries keyed on it, so a test run leaves no tag dir
+    * behind under the derived root. */
+  private def onTempCorpus[T](prefix: String)(f: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try f(dir) finally graft.core.Derived.wipeFor(Seq(dir))
+  }
+
   test("d2 recovery: a pair sharing ONLY hot shingles is still found") {
     import spark.implicits._
     // Corpus: 70 docs all containing the same boilerplate header (every
@@ -122,14 +130,15 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
         (i.toLong, "en",
           boiler + " " + (1 to 60).map(w => s"unique${i}word$w").mkString(" "))
       }
-    val dir = java.nio.file.Files.createTempDirectory("graft-d2rec").toString
-    rows.toDF("doc_id", "lang", "text").withColumn("source", lit("t"))
-      .withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.operators.DedupQueries.d2NgramJaccard(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(out.exists { case (a, b, j) => a == 1L && b == 2L && j == 1.0 },
-      s"hot-only pair (1,2) not recovered: ${out.mkString(", ")}")
+    onTempCorpus("graft-d2rec") { dir =>
+      rows.toDF("doc_id", "lang", "text").withColumn("source", lit("t"))
+        .withColumn("n_chars", length(col("text")))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = graft.operators.DedupQueries.d2NgramJaccard(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(out.exists { case (a, b, j) => a == 1L && b == 2L && j == 1.0 },
+        s"hot-only pair (1,2) not recovered: ${out.mkString(", ")}")
+    }
   }
 
   test("d14: a short doc quoted inside a long one is contained, not jaccard-similar") {
@@ -143,18 +152,19 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, "en", (1 to 50).map(i => s"longa$i").mkString(" ") + " " + quote +
         " " + (1 to 50).map(i => s"longb$i").mkString(" ")),
       (3L, "en", (1 to 40).map(i => s"other$i").mkString(" ")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-d14").toString
-    rows.toDF("doc_id", "lang", "text").withColumn("source", lit("t"))
-      .withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.operators.DedupQueries.d14Containment(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
-    assert(out.toSeq === Seq((1L, 2L, 1.0)),
-      s"expected exactly doc1-contained-in-doc2: ${out.mkString(", ")}")
-    // and d2's jaccard gate (threshold 0.5) rightly does NOT pair them
-    val j = graft.operators.DedupQueries.d2NgramJaccard(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(!j.contains((1L, 2L)), "jaccard gate should not fire on containment-only pair")
+    onTempCorpus("graft-d14") { dir =>
+      rows.toDF("doc_id", "lang", "text").withColumn("source", lit("t"))
+        .withColumn("n_chars", length(col("text")))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = graft.operators.DedupQueries.d14Containment(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
+      assert(out.toSeq === Seq((1L, 2L, 1.0)),
+        s"expected exactly doc1-contained-in-doc2: ${out.mkString(", ")}")
+      // and d2's jaccard gate (threshold 0.5) rightly does NOT pair them
+      val j = graft.operators.DedupQueries.d2NgramJaccard(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(!j.contains((1L, 2L)), "jaccard gate should not fire on containment-only pair")
+    }
   }
 
   test("d14 recovery: mutual hot-only containment found; boilerplate-quote class excluded") {
@@ -168,21 +178,22 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
         (i.toLong, "en",
           boiler + " " + (1 to 60).map(w => s"unique${i}word$w").mkString(" "))
       }
-    val dir = java.nio.file.Files.createTempDirectory("graft-d14rec").toString
-    rows.toDF("doc_id", "lang", "text").withColumn("source", lit("t"))
-      .withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.operators.DedupQueries.d14Containment(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
-    assert(out.exists { case (a, b, c) => a == 1L && b == 2L && c == 1.0 },
-      s"mutual hot-only pair (1,2) not recovered: ${out.mkString(", ")}")
-    assert(out.exists { case (a, b, c) => a == 2L && b == 1L && c == 1.0 })
-    // The documented exclusion: doc 1 IS contained in docs 3..70, but
-    // only via hot shingles with a non-hot-dominated container — that
-    // boilerplate-quote class is deliberately out of scope (Ω(df)
-    // output; d1/t7 are the tools for boilerplate docs).
-    assert(!out.exists { case (a, b, _) => a == 1L && b >= 3L },
-      "boilerplate-quote class unexpectedly enumerated")
+    onTempCorpus("graft-d14rec") { dir =>
+      rows.toDF("doc_id", "lang", "text").withColumn("source", lit("t"))
+        .withColumn("n_chars", length(col("text")))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = graft.operators.DedupQueries.d14Containment(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
+      assert(out.exists { case (a, b, c) => a == 1L && b == 2L && c == 1.0 },
+        s"mutual hot-only pair (1,2) not recovered: ${out.mkString(", ")}")
+      assert(out.exists { case (a, b, c) => a == 2L && b == 1L && c == 1.0 })
+      // The documented exclusion: doc 1 IS contained in docs 3..70, but
+      // only via hot shingles with a non-hot-dominated container — that
+      // boilerplate-quote class is deliberately out of scope (Ω(df)
+      // output; d1/t7 are the tools for boilerplate docs).
+      assert(!out.exists { case (a, b, _) => a == 1L && b >= 3L },
+        "boilerplate-quote class unexpectedly enumerated")
+    }
   }
 
   test("d15: deletion-1 blocking finds substitution AND indel pairs, nothing else") {

@@ -244,12 +244,12 @@ class GraphPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
       same("lubyMis")(GraphOps.lubyMis(vertices, sym, 3))
       same("kCore")(GraphOps.kCore(sym, 2, 6))
       same("kTruss")(GraphOps.kTruss(canon, 3, 4))
-      // Limits 0 force the distributed rounds, so the gate governs them.
-      same("scc")(Scc.strongComponents(directed, localFinishLimit = 0))
+      // Budget 0 also forces the distributed rounds past the driver-side
+      // endgames, so the local finish is checked against them.
+      same("scc")(Scc.strongComponents(directed))
       val minW = es.collect { case (a, b, w) if a != b => ((math.min(a, b), math.max(a, b)), w) }
         .groupBy(_._1).map { case ((a, b), ws) => (a, b, ws.map(_._2).min) }.toSeq
-      same("mst")(Mst.minimumSpanningForest(minW.toDF("src", "dst", "weight"),
-        driverMergeLimit = 0, localFinishLimit = 0))
+      same("mst")(Mst.minimumSpanningForest(minW.toDF("src", "dst", "weight")))
       same("triangleCountByGroup")(GraphOps.triangleCountByGroup(canon, x => pmod(x, lit(3L))))
       // Locality write → read: an LPA-community assignment at the most
       // parts ≤ 3 whose every part owns a vertex and an edge (the

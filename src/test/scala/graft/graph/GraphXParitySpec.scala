@@ -78,13 +78,15 @@ class GraphXParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 3).flatMap(i =>
       genDirected.apply(Gen.Parameters.default.withSize(50), Seed(100L + i))
     ).foreach { es =>
-      // default config = the driver-Tarjan endgame; limit 0 forces the
-      // pure-distributed forward-backward rounds — both must agree with
-      // GraphX (and therefore with each other).
+      // default config = the driver-Tarjan endgame; a broadcast budget
+      // of 0 forces the pure-distributed forward-backward rounds — both
+      // must agree with GraphX (and therefore with each other).
       val local = Scc.strongComponents(es.toDF("src", "dst"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Scc.strongComponents(es.toDF("src", "dst"), localFinishLimit = 0L)
+      spark.conf.set(GraphOps.StateBroadcastBytesKey, "0")
+      val dist = try Scc.strongComponents(es.toDF("src", "dst"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        finally spark.conf.unset(GraphOps.StateBroadcastBytesKey)
       val gx = Graph.fromEdges(
           spark.sparkContext.parallelize(es.map { case (a, b) => Edge(a, b, 1) }), 0)
         .stronglyConnectedComponents(numIter = 20)

@@ -54,13 +54,16 @@ class MstSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 4).foreach { i =>
       gen.apply(Gen.Parameters.default.withSize(14), Seed(i.toLong)).foreach { edges =>
         val expect = kruskal(edges)
-        // localFinishLimit = 0 forces the distributed Borůvka rounds; the
-        // default path (local finish) must agree with them and with Kruskal
-        for (limit <- Seq(0L, 100000L)) {
-          val got = Mst.minimumSpanningForest(edgeDf(edges: _*), localFinishLimit = limit)
+        // a broadcast budget of 0 forces the distributed Borůvka rounds;
+        // the default path (local finish) must agree with them and with
+        // Kruskal
+        for (budget <- Seq("0", GraphOps.StateBroadcastBytesDefault.toString)) {
+          spark.conf.set(GraphOps.StateBroadcastBytesKey, budget)
+          val got = try Mst.minimumSpanningForest(edgeDf(edges: _*))
             .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          assert(got.length === expect.length, s"edge count, seed $i limit $limit")
-          assert(got.map(_._3).sum === expect.map(_._3).sum, s"weight, seed $i limit $limit")
+            finally spark.conf.unset(GraphOps.StateBroadcastBytesKey)
+          assert(got.length === expect.length, s"edge count, seed $i budget $budget")
+          assert(got.map(_._3).sum === expect.map(_._3).sum, s"weight, seed $i budget $budget")
         }
       }
     }

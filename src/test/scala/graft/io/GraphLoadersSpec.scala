@@ -325,30 +325,18 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
     // LPT capacity bound held, and the Zoltan cut claim true as data.
     import org.apache.spark.sql.functions.col
     val sf = "/root/testdata/sf0.001"
-    val (frame, assignHandle) = graft.operators.GraphQueries
-      .g29bInvariantsWithHandle(spark, sf)
-    // g29b persists its assignment frame and cannot unpersist it itself
-    // (the caller actions the plan). Release exactly that frame — a
-    // blanket clearCache() would evict every cached frame in the shared
-    // session and silently slow later suites (ADVICE r13) — and release
-    // it even when an assert fails, or the leak outlives this suite
-    // (ADVICE r14).
-    try {
-      val rows = frame.collect()
-      assert(rows.length === 1)
-      val r = rows.head
-      val v = graft.operators.GraphQueries
-        .vertexDegMaterialized(spark, sf).select(col("id")).count()
-      assert(r.getAs[Long]("nvtxs_total") === v,
-        "assignment must be total: every vertex placed exactly once")
-      assert(r.getAs[Long]("parts_used") === 3L)
-      assert(r.getAs[Boolean]("balance_ok"),
-        "max part load must respect the LPT bound cap·(2 − 1/parts)")
-      assert(r.getAs[Boolean]("cut_improved"),
-        "locality cut must beat the id-mod-parts baseline")
-    } finally {
-      assignHandle.unpersist(blocking = true)
-    }
+    val rows = graft.operators.GraphQueries.g29bLocalityInvariants(spark, sf).collect()
+    assert(rows.length === 1)
+    val r = rows.head
+    val v = graft.operators.GraphQueries
+      .vertexDegMaterialized(spark, sf).select(col("id")).count()
+    assert(r.getAs[Long]("nvtxs_total") === v,
+      "assignment must be total: every vertex placed exactly once")
+    assert(r.getAs[Long]("parts_used") === 3L)
+    assert(r.getAs[Boolean]("balance_ok"),
+      "max part load must respect the LPT bound cap·(2 − 1/parts)")
+    assert(r.getAs[Boolean]("cut_improved"),
+      "locality cut must beat the id-mod-parts baseline")
   }
 
   test("integer files + SampleSort ≡ sorted concatenation (O22)") {
