@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.graph.Materialize.MaterializeOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** PageRank — re-expression of `/root/reference/algorithms.h:4-37`.
@@ -29,16 +29,35 @@ final class PageRank(n: Long, damping: Double = 0.85) extends VertexProgram {
   override def combiner: Column = sum(col("msg"))
   override def updated(old: Column, agg: Column): Column =
     lit((1.0 - damping) / n) + lit(damping) * coalesce(agg, lit(0.0))
+  override def twin: Option[VertexProgram.Twin] =
+    Some(new PageRank.Twin(_ => (1.0 - damping) / n, damping))
 }
 
 object PageRank {
   def apply(graph: PropertyGraph, damping: Double = 0.85): PageRankRun = {
-    val degs = graph.degrees // short-circuits when vertices carry deg
-    val n = degs.count()
+    // short-circuits when vertices carry deg; materialized, as every run
+    // reads it again for its initial state
+    val (degs, n) = graph.degrees.materializeCounted()
     PageRankRun(PropertyGraph(degs, graph.edges), new PageRank(n, damping))
   }
   /** Reference-compat damping (d=0.5, `/root/reference/algorithms.h:30`). */
   def compat(graph: PropertyGraph): PageRankRun = apply(graph, damping = 0.5)
+
+  /** The twin of [[PageRank]] and [[PersonalizedPageRank]]: a vertex sends
+    * value/deg (null where SQL's division gives null: a null or zero
+    * deg), the messages sum, and the update is
+    * `teleport(v) + d·coalesce(agg, 0)` in the programs' own operation
+    * order. */
+  private[graph] final class Twin(teleport: Row => Double, damping: Double)
+      extends VertexProgram.Twin {
+    def message(v: Row, value: Double, weight: Double): java.lang.Double = {
+      val deg = v.getAs[Number]("deg")
+      if (deg == null || deg.doubleValue == 0.0) null else value / deg.doubleValue
+    }
+    def combine(a: Double, b: Double): Double = a + b
+    def updated(v: Row, old: java.lang.Double, agg: java.lang.Double): java.lang.Double =
+      teleport(v) + damping * (if (agg == null) 0.0 else agg.doubleValue)
+  }
 }
 
 /** Personalized PageRank: the teleport term returns ALL restart mass to a
@@ -66,6 +85,8 @@ final class PersonalizedPageRank(nSeeds: Long, isSeed: Column,
   override def updated(old: Column, agg: Column): Column =
     when(col("seed"), lit((1.0 - damping) / nSeeds)).otherwise(lit(0.0)) +
       lit(damping) * coalesce(agg, lit(0.0))
+  override def twin: Option[VertexProgram.Twin] = Some(new PageRank.Twin(
+    v => if (v.getAs[Any]("seed") == true) (1.0 - damping) / nSeeds else 0.0, damping))
 }
 final case class PageRankRun(graph: PropertyGraph, program: VertexProgram) {
   def fixed(iterations: Int): DataFrame =
@@ -91,6 +112,8 @@ class Sssp(source: Long) extends VertexProgram {
   override def combiner: Column = min(col("msg"))
   override def updated(old: Column, agg: Column): Column = least(old, agg)
   override def frontierOnly: Boolean = true // monotone min-propagation
+  override def twin: Option[VertexProgram.Twin] =
+    Some(new VertexProgram.MinTwin(_ + _, weighted = true))
 }
 
 /** BFS hop distance = SSSP over unit weights (reference stub
@@ -100,6 +123,8 @@ final class Bfs(source: Long) extends Sssp(source) {
     e.join(v, e("src") === v("id"))
       .where(v("value").isNotNull)
       .select(e("dst").as("id"), (v("value") + lit(1.0)).as("msg"))
+  override def twin: Option[VertexProgram.Twin] =
+    Some(new VertexProgram.MinTwin((value, _) => value + 1.0))
 }
 
 /** Connected components by min-label propagation (reference stub
@@ -114,6 +139,8 @@ object ConnectedComponentsProgram extends VertexProgram {
   override def combiner: Column = min(col("msg"))
   override def updated(old: Column, agg: Column): Column = least(old, agg)
   override def frontierOnly: Boolean = true // monotone min-propagation
+  override def twin: Option[VertexProgram.Twin] =
+    Some(new VertexProgram.MinTwin((value, _) => value))
 }
 
 /** Non-iterative whole-graph operators. */
@@ -137,12 +164,18 @@ object GraphOps {
     budget > 0 && bytes <= budget
   }
 
+  /** The most rows a driver-side loop or endgame collects: SCC's Tarjan
+    * finish (active vertices and edges), MST's Kruskal finish (labeled
+    * edges), and the resident rounds of [[Superstep.fold]] (state rows
+    * and edges). One limit, so "fits on the driver" means one thing. */
+  val DriverRows: Long = 100000L
+
   /** May a driver-side endgame (collect, solve locally, broadcast the
     * answer) take `rows` rows? At most `maxRows`, and their 64 B per row
     * within the broadcast budget, so budget 0 forces the distributed
     * rounds. */
   private[graph] def driverFits(spark: org.apache.spark.sql.SparkSession,
-                                rows: Long, maxRows: Long): Boolean =
+                                rows: Long, maxRows: Long = DriverRows): Boolean =
     rows <= maxRows && broadcastFits(spark, rows * 64L)
 
   /** Priority composite shift for [[lubyMis]]: hash ∈ [0, P) with
@@ -525,16 +558,20 @@ object GraphOps {
     * round would be an exact no-op (each vertex's vote multiset is
     * unchanged), so the result equals the full `iters`-round run. Sync
     * LPA need not reach a fixpoint (a bipartite pair swaps labels
-    * forever), and such runs take all `iters` rounds. */
+    * forever), and such runs take all `iters` rounds. A graph that fits
+    * the driver runs its rounds there ([[LpaRounds]]). */
   def labelPropagation(g: PropertyGraph, iters: Int): DataFrame = {
     val edges = g.edges.select(col("src"), col("dst"))
+    val resident = Superstep.Resident(edges) {
+      (state, graph) => new LpaRounds(state.map(_.getLong(1)), graph)
+    }
     // Labels and picks are O(V): the vertex count gates the loop. The
     // seed label is -(-id), not an alias of id: an alias would carry the
     // vertices' partitioning on `id` over to `label`, which round 1 replaces.
     Superstep.fold(
         g.vertices.select(col("id"), (-(-col("id"))).as("label"), lit(true).as("changed")),
         iters, Seq(count_if(col("changed")).as("changed")),
-        exit = _("changed") == 0L) { gate => (state, _) =>
+        exit = _("changed") == 0L, resident = Some(resident)) { gate => (state, _) =>
       val labels = state.select(col("id"), col("label"))
       val votes = edges
         .join(gate.hint(labels), col("src") === col("id"))
@@ -551,5 +588,39 @@ object GraphOps {
           coalesce(col("new_label"), col("label")).as("label"),
           coalesce(col("new_label") =!= col("label"), lit(false)).as("changed"))
     }.state.select(col("id"), col("label"))
+  }
+
+  /** [[labelPropagation]]'s rounds on the driver, by its rules: a vertex
+    * takes the most frequent label among its in-neighbors (a duplicate
+    * edge votes twice, ties go to the smaller label), a vertex with no
+    * in-edges keeps its label, and the probe counts the labels changed. */
+  private final class LpaRounds(labels: Array[Long], g: Superstep.Csr)
+      extends Superstep.Rounds {
+    private var label = labels
+    private var changed = Array.fill(labels.length)(true)
+
+    def step(round: Int): Map[String, Any] = {
+      val next = label.clone()
+      val moved = new Array[Boolean](g.size)
+      for (v <- 0 until g.size if g.start(v) < g.start(v + 1)) {
+        val votes = (g.start(v) until g.start(v + 1)).map(k => label(g.src(k))).sorted
+        // the first of the longest runs: the smallest label among the modes
+        var (best, bestRun, i) = (votes(0), 0, 0)
+        while (i < votes.length) {
+          var j = i
+          while (j < votes.length && votes(j) == votes(i)) j += 1
+          if (j - i > bestRun) { best = votes(i); bestRun = j - i }
+          i = j
+        }
+        next(v) = best
+        moved(v) = best != label(v)
+      }
+      label = next
+      changed = moved
+      Map("changed" -> moved.count(identity).toLong)
+    }
+
+    def result: Map[String, Array[Any]] =
+      Map("label" -> label.map(x => x: Any), "changed" -> changed.map(x => x: Any))
   }
 }

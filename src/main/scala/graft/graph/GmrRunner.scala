@@ -1,7 +1,6 @@
 package graft.graph
 
-import graft.graph.Materialize.MaterializeOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** A vertex-centric program: the Spark-native form of the reference's
@@ -61,6 +60,55 @@ trait VertexProgram {
     * (`/root/reference/graph.h:761-762` "可能导致不收敛"). Results are
     * identical either way; only no-op message volume changes. */
   def frontierOnly: Boolean = false
+
+  /** The same superstep in plain Scala, for rounds run on the driver: a
+    * program that declares one runs resident whenever its graph fits
+    * there ([[GmrRunner]] '''Resident loops'''). A program without one
+    * always runs distributed. */
+  def twin: Option[VertexProgram.Twin] = None
+}
+
+object VertexProgram {
+
+  /** A program's superstep in plain Scala over one vertex at a time. A
+    * value, message or aggregate is a SQL double: null is `null`. A
+    * vertex whose value is null sends nothing; every twin's program
+    * sends a null message there, which its combiner skips as SQL
+    * aggregates do, so the two agree. */
+  trait Twin {
+    /** Does [[message]] read the edge weight? An edge whose weight is
+      * null then sends a null message, which the combiner skips, so such
+      * edges are dropped before the rounds. */
+    def weighted: Boolean = false
+
+    /** [[VertexProgram.messages]]: what a vertex with initial-state row
+      * `v` and (non-null) value `value` sends along an edge of `weight`. */
+    def message(v: Row, value: Double, weight: Double): java.lang.Double
+
+    /** [[VertexProgram.combiner]] of two messages. */
+    def combine(a: Double, b: Double): Double
+
+    /** [[VertexProgram.updated]]: the new value of the vertex with
+      * initial-state row `v`; `agg` is null when no message arrived. */
+    def updated(v: Row, old: java.lang.Double, agg: java.lang.Double): java.lang.Double
+
+    /** [[VertexProgram.delta]]. */
+    def delta(old: java.lang.Double, next: java.lang.Double): Double = {
+      def or(x: java.lang.Double) = if (x == null) Double.MaxValue else x.doubleValue
+      math.abs(or(next) - or(old))
+    }
+  }
+
+  /** The twin of min-propagation (SSSP, BFS, connected components): a
+    * vertex sends `hop(value, weight)`, the combiner is `min` and the
+    * update `least(old, agg)`, null-skipping like SQL's. */
+  final class MinTwin(hop: (Double, Double) => Double,
+                      override val weighted: Boolean = false) extends Twin {
+    def message(v: Row, value: Double, weight: Double): java.lang.Double = hop(value, weight)
+    def combine(a: Double, b: Double): Double = if (b < a) b else a
+    def updated(v: Row, old: java.lang.Double, agg: java.lang.Double): java.lang.Double =
+      if (old == null) agg else if (agg == null) old else combine(old, agg)
+  }
 }
 
 /** Bulk-synchronous superstep driver — the Spark-native form of the
@@ -81,6 +129,18 @@ trait VertexProgram {
   * [[Superstep.fold]], so every superstep is one checkpoint action
   * ([[Materialize]], which truncates lineage and makes the state as
   * durable as the session's checkpoint mode asks).
+  *
+  * '''Resident loops.''' A program that declares a
+  * [[VertexProgram.twin]] runs every superstep on the driver when its
+  * vertex state and edges each fit there ([[GraphOps.driverFits]] at
+  * [[GraphOps.DriverRows]] rows): the kernel collects both once and the
+  * twin folds over an in-edge CSR, the reference's own local map → sort →
+  * reduce → update (`/root/reference/gmr.h`). Same exit tests, residuals
+  * and superstep count; the loop costs three jobs instead of about four
+  * per superstep, which is all overhead on a graph of 10³ vertices.
+  * PageRank sums each vertex's messages in source-id order, so its
+  * resident sums are deterministic and agree with the distributed ones
+  * to rounding. `stateBroadcastBytes=0` forces the distributed rounds.
   */
 object GmrRunner {
 
@@ -141,10 +201,19 @@ object GmrRunner {
     def exit(m: Map[String, Any]): Boolean = earlyStop &&
       (if (convergenceCheck) maxDelta(m) < program.tolerance
        else program.frontierOnly && m("changed") == 0L)
+    val resident = program.twin.map { twin =>
+      val (value, delta) = (init.columns.indexOf("value"), init.columns.indexOf("_delta"))
+      Superstep.Resident(
+        if (twin.weighted) graph.edges.where(col("weight").isNotNull)
+        else graph.edges.select("src", "dst")) {
+        (state, g) => new TwinRounds(twin, program.frontierOnly, state, value, delta, g)
+      }
+    }
     val run = Materialize.scoped { cache =>
       Superstep.fold(init, maxIter,
         Seq(coalesce(max(col("_delta")), lit(0.0)).as("max_delta"),
-          count_if(col("_delta") > 0.0).as("changed")), exit) { gate =>
+          count_if(col("_delta") > 0.0).as("changed")), exit,
+        resident = resident) { gate =>
       // Static side of every superstep join. Broadcast mode streams the
       // cached frame map-side (partitioning is irrelevant to a broadcast
       // join probe side, so the upfront O(E) repartition is skipped);
@@ -168,5 +237,47 @@ object GmrRunner {
     val residuals = if (convergenceCheck) run.rounds.map(maxDelta) else Nil
     RunResult(run.state.drop("_delta"), run.rounds.size,
       residuals.lastOption.getOrElse(Double.MaxValue), residuals)
+  }
+
+  /** [[loop]]'s supersteps on the driver, the distributed superstep
+    * vertex by vertex: a sender is a vertex with a non-null value (and,
+    * for a frontier-pruned program, a positive delta); each vertex
+    * combines its senders' messages in source-id order, then takes
+    * `updated(old, agg)` and its delta; the probes are the distributed
+    * ones. `state` holds the initial rows, their value and delta at
+    * columns `valueAt` and `deltaAt`. */
+  private final class TwinRounds(twin: VertexProgram.Twin, frontierOnly: Boolean,
+                                 state: Array[Row], valueAt: Int, deltaAt: Int,
+                                 g: Superstep.Csr) extends Superstep.Rounds {
+    private var value: Array[java.lang.Double] = state.map(r =>
+      if (r.isNullAt(valueAt)) null else java.lang.Double.valueOf(r.getDouble(valueAt)))
+    private var delta: Array[Double] = state.map(_.getDouble(deltaAt))
+
+    def step(round: Int): Map[String, Any] = {
+      val next = new Array[java.lang.Double](g.size)
+      val nextDelta = new Array[Double](g.size)
+      var maxDelta = 0.0
+      var changed = 0L
+      for (v <- 0 until g.size) {
+        var agg: java.lang.Double = null
+        for (k <- g.start(v) until g.start(v + 1)) {
+          val s = g.src(k)
+          if (value(s) != null && (!frontierOnly || delta(s) > 0.0)) {
+            val m = twin.message(state(s), value(s), g.weight(k))
+            if (m != null) agg = if (agg == null) m else twin.combine(agg, m)
+          }
+        }
+        next(v) = twin.updated(state(v), value(v), agg)
+        nextDelta(v) = twin.delta(value(v), next(v))
+        maxDelta = math.max(maxDelta, nextDelta(v))
+        if (nextDelta(v) > 0.0) changed += 1
+      }
+      value = next
+      delta = nextDelta
+      Map("max_delta" -> maxDelta, "changed" -> changed)
+    }
+
+    def result: Map[String, Array[Any]] =
+      Map("value" -> value.map(x => x: Any), "_delta" -> delta.map(x => x: Any))
   }
 }

@@ -35,9 +35,8 @@ object Mst {
   private val MaxRounds = 40
 
   /** Driver-side endgames ([[GraphOps.driverFits]]): the local Kruskal
-    * finish takes at most [[LocalFinishRows]] labeled edges, the
+    * finish takes at most [[GraphOps.DriverRows]] labeled edges, the
     * union-find merge at most [[DriverMergeRows]] links. */
-  private val LocalFinishRows = 100000L
   private val DriverMergeRows = 1000000L
 
   /** Minimum spanning forest of a canonical (src<dst, weight) edge list.
@@ -74,7 +73,7 @@ object Mst {
       // labels replaces the remaining O(log V) rounds of cluster actions.
       // The perturbed edge order (weight, src, dst) has a unique MSF, so
       // Kruskal here and further Borůvka rounds produce identical edges.
-      if (GraphOps.driverFits(spark, nLabeled, LocalFinishRows)) {
+      if (GraphOps.driverFits(spark, nLabeled)) {
         val rest = localKruskal(labeled)
         if (rest.nonEmpty) forest = forest.union(rest.toDF("src", "dst", "weight"))
         done = true

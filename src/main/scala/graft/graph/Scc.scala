@@ -37,10 +37,6 @@ object Scc {
   /** Cap on the distributed coloring rounds. */
   private val MaxRounds = 40
 
-  /** Driver-side Tarjan finish ([[GraphOps.driverFits]]): at most this
-    * many active vertices and as many active edges. */
-  private val LocalFinishRows = 100000L
-
   /** Backward-reachability marker. Vertices carry a static `color`;
     * value 0.0 = "reaches its color root via same-color vertices"
     * (monotone null→0.0 absorption, so frontier pruning is sound). */
@@ -66,9 +62,9 @@ object Scc {
     * residue is the periphery — chains of small SCCs that would otherwise
     * cost one distributed round EACH (only a color root's SCC finalizes
     * per color class per round). Once the active subgraph fits a driver
-    * buffer ([[LocalFinishRows]] vertices and edges, within the broadcast
-    * budget), one iterative Tarjan pass replaces the remaining O(chain
-    * length) rounds of cluster actions. Same unique
+    * buffer ([[GraphOps.DriverRows]] vertices and edges, within the
+    * broadcast budget), one iterative Tarjan pass replaces the remaining
+    * O(chain length) rounds of cluster actions. Same unique
     * result either way — `stateBroadcastBytes=0` forces pure-distributed. */
   def strongComponents(directedEdges: DataFrame): DataFrame = {
     val spark = directedEdges.sparkSession
@@ -84,7 +80,7 @@ object Scc {
     var round = 0
     var finished = false
     while (round < MaxRounds && !finished && nActive > 0) {
-      if (Seq(nActive, nActiveEdges).forall(GraphOps.driverFits(spark, _, LocalFinishRows))) {
+      if (Seq(nActive, nActiveEdges).forall(GraphOps.driverFits(spark, _))) {
         val verts = active.collect().map(_.getLong(0))
         val edgeArr = activeEdges.collect().map(r => (r.getLong(0), r.getLong(1)))
         result = result.union(localTarjan(verts, edgeArr).toSeq.toDF("id", "scc"))

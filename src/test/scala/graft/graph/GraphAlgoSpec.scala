@@ -401,6 +401,59 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(long <= short, s"20 rounds started $long jobs, 4 rounds $short")
   }
 
+  test("resident loops start no more jobs for more rounds; budget 0 runs distributed") {
+    // 40 vertices on a ring with chords: both the state and the edges fit
+    // the driver, so every round runs there.
+    val ring = (0L until 40L).flatMap(v => Seq(v -> (v + 1) % 40, v -> (v + 7) % 40))
+    val pr = PageRank(PropertyGraph.fromEdges(PropertyGraph.symmetrize(edgeDf(ring: _*))))
+    def prJobs(steps: Int): Int = jobsStarted {
+      val r = GmrRunner.loop(pr.graph, pr.program, steps, convergenceCheck = false)
+      assert(r.iterations === steps)
+      r.vertices.collect()
+    }
+    prJobs(3)
+    val (short, long) = (prJobs(3), prJobs(30))
+    assert(long <= short, s"30 supersteps started $long jobs, 3 supersteps $short")
+    // 7 and 8 swap labels every round, so LPA never exits early
+    val pair = Seq(7L -> 8L)
+    val (lpa2, lpa20) = (jobsStarted(lpaLabels(pair, 2)), jobsStarted(lpaLabels(pair, 20)))
+    assert(lpa20 <= lpa2, s"LPA: 20 rounds started $lpa20 jobs, 2 rounds $lpa2")
+    // budget 0 forces the distributed rounds: one checkpoint job each at least
+    spark.conf.set(GraphOps.StateBroadcastBytesKey, "0")
+    try {
+      val (short0, long0) = (prJobs(3), prJobs(30))
+      assert(long0 > short0 + 26, s"budget 0: 30 supersteps $long0 jobs, 3 supersteps $short0")
+    } finally spark.conf.unset(GraphOps.StateBroadcastBytesKey)
+  }
+
+  test("resident and distributed rounds drop edges leaving the vertex frame alike") {
+    import spark.implicits._
+    // vertices 1..5; edges from 6 and to 7 and 9 reach no vertex, and a
+    // null weight sends SSSP a null message
+    val vertices = spark.range(1, 6).toDF("id")
+    val edges = Seq[(Long, Long, java.lang.Double)]((1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0),
+        (6, 4, 1.0), (2, 7, 1.0), (9, 5, 1.0), (4, 5, null), (1, 4, 3.0), (1, 2, 1.0))
+      .toDF("src", "dst", "weight")
+    val g = PropertyGraph(vertices, edges)
+    def both[A](f: => A): (A, A) = {
+      val resident = f
+      spark.conf.set(GraphOps.StateBroadcastBytesKey, "0")
+      try (resident, f) finally spark.conf.unset(GraphOps.StateBroadcastBytesKey)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val (sssp, sssp0) = both(rows(GmrRunner.run(g, new Sssp(1L)).vertices))
+    assert(sssp === sssp0)
+    val (lpa, lpa0) = both(rows(GraphOps.labelPropagation(g, 4)))
+    assert(lpa === lpa0)
+    val pr = PageRank(g)
+    val (ranks, ranks0) = both(GmrRunner.run(pr.graph, pr.program))
+    assert(ranks.iterations === ranks0.iterations)
+    val (a, b) = (ranks.vertices.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap,
+      ranks0.vertices.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+    assert(a.keySet === b.keySet)
+    a.foreach { case (v, x) => assert(math.abs(x - b(v)) < 1e-12, s"vertex $v") }
+  }
+
   test("LPA keeps its vertices' rangepartitioning(id) through the rounds") {
     // spark.range reports rangepartitioning(id). Seeded with a plain alias
     // of id, the initial checkpoint records the partitioning on `label`,

@@ -234,12 +234,40 @@ class GraphPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
         val (bc, sh) = atBothBudgets(rowsOf(df))
         assert(bc === sh, s"$what: $ctx")
       }
-      same("sssp")(GmrRunner.run(g, new Sssp(hub)).vertices)
-      same("cc")(GmrRunner.run(ug, ConnectedComponentsProgram).vertices)
-      val (prB, prS) = atBothBudgets(PageRank(g).fixed(5).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
-      assert(prB.keySet === prS.keySet, s"pagerank: $ctx")
-      prB.foreach { case (v, x) => assert(math.abs(x - prS(v)) < 1e-9, s"pagerank $v: $ctx") }
+      // Every program with a twin, in convergence, fixed and traced mode:
+      // the same superstep count, and residuals and values within `tol`
+      // (exact for the min-propagation programs). The default budget runs
+      // these graphs resident, budget 0 distributed.
+      def sameRun(what: String, tol: Double)(run: => GmrRunner.RunResult): Unit = {
+        val (bc, sh) = atBothBudgets {
+          val r = run
+          (r.iterations, r.residuals, r.vertices.select("id", "value").collect()
+            .map(x => x.getLong(0) -> Option.when(!x.isNullAt(1))(x.getDouble(1))).toMap)
+        }
+        def close(a: Double, b: Double) = a == b || math.abs(a - b) <= tol
+        assert(bc._1 === sh._1, s"$what iterations: $ctx")
+        assert(bc._2.size === sh._2.size, s"$what residuals: $ctx")
+        bc._2.zip(sh._2).foreach { case (a, b) => assert(close(a, b), s"$what residual: $ctx") }
+        assert(bc._3.keySet === sh._3.keySet, s"$what vertices: $ctx")
+        bc._3.foreach { case (v, x) =>
+          assert(x.isDefined === sh._3(v).isDefined && x.forall(close(_, sh._3(v).get)),
+            s"$what vertex $v: $ctx")
+        }
+      }
+      val pr = PageRank(g)
+      val ppr = PropertyGraph(g.degrees, g.edges)
+      val programs = Seq[(String, PropertyGraph, VertexProgram, Double)](
+        ("sssp", g, new Sssp(hub), 0.0),
+        ("bfs", g, new Bfs(hub), 0.0),
+        ("cc", ug, ConnectedComponentsProgram, 0.0),
+        ("pagerank", pr.graph, pr.program, 1e-9),
+        ("ppr", ppr, new PersonalizedPageRank(1, col("id") === hub), 1e-9))
+      programs.foreach { case (what, graph, program, tol) =>
+        sameRun(what, tol)(GmrRunner.run(graph, program))
+        sameRun(s"$what fixed", tol)(
+          GmrRunner.loop(graph, program, 5, convergenceCheck = false))
+      }
+      sameRun("pagerank traced", 1e-9)(GmrRunner.runTraced(pr.graph, pr.program, 5))
       same("lpa")(GraphOps.labelPropagation(ug, 5))
       same("lubyMis")(GraphOps.lubyMis(vertices, sym, 3))
       same("kCore")(GraphOps.kCore(sym, 2, 6))
