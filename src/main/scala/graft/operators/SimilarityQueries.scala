@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Derived, Tables}
+import graft.graph.GraphOps
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -277,116 +278,114 @@ object SimilarityQueries {
     * keeping the gated parity surface identical to a fixed-k build). */
   private[operators] val SemCellTarget = 125L
 
-  /** s4: Lloyd's k-means over the embeddings — the reference's declared
-    * KMeans capability (`/root/reference/algorithms.h:212-250`, a stub
-    * whose body is a copy of PageRank) made real, and made
-    * *deterministic*: components are quantized to positive integer
-    * micro-units (`round((x+1)*1e6)` — the +1 offset keeps every value
-    * positive so integer division truncation == floor in both engines),
-    * so assignment distances and centroid means are exact BIGINT
-    * arithmetic with zero float accumulation — bit-identical across any
-    * partitioning and in the DuckDB oracle, which unrolls the same
-    * [[KmIters]] Lloyd rounds as CTEs.
-    *
-    * Init: centroids = vectors 0..k-1. Empty clusters keep their previous
-    * centroid. Scale shape: the exploded (vec, dim, q) table shuffles
-    * once per round on (cluster, dim); centroids are k×dim rows —
-    * broadcast; assignment is a windowed argmin per vector. */
-  def s4Kmeans(s: SparkSession, d: String): DataFrame =
-    kmeansAssign(s, d).orderBy("vec_id")
+  /** Embedding components as positive integer micro-units,
+    * `round((x+1)·QScale)`: the +1 offset keeps every value positive, so
+    * integer-division truncation == floor in both engines, and every
+    * distance and mean over them is exact BIGINT arithmetic. */
+  private def quantized(embedding: Column): Column =
+    transform(embedding, x => round((x.cast("double") + lit(1.0)) * QScale).cast("long"))
 
-  /** Per-dim integer-Lloyd's assignment (vec_id, cluster, d2) — the body
-    * of s4, and the reference formulation KmeansArrayParitySpec pins
-    * [[kmeansAssignArray]] against (at k = [[KmK]] and at a derived
-    * k > [[KmK]]). */
-  private[operators] def kmeansAssign(
-      s: SparkSession, d: String, k: Long = KmK.toLong): DataFrame = {
-    val q = Tables.embeddings(s, d).select(col("vec_id"),
-        posexplode(transform(col("embedding"),
-          x => round((x.cast("double") + lit(1.0)) * QScale).cast("long")))
-          .as(Seq("dim", "qd")))
-      .materialize()
-    def assign(centroids: DataFrame): DataFrame = {
-      val d2 = (col("qd") - col("cd")) * (col("qd") - col("cd"))
-      val dist = q.join(broadcast(centroids), "dim")
-        .groupBy(col("vec_id"), col("cluster")).agg(sum(d2).as("d2"))
-      val w = Window.partitionBy("vec_id").orderBy(col("d2"), col("cluster"))
-      dist.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        .select(col("vec_id"), col("cluster"), col("d2"))
-    }
-    var centroids = q.where(col("vec_id") < k)
-      .select(col("vec_id").as("cluster"), col("dim"), col("qd").as("cd"))
-    for (_ <- 1 to KmIters) {
-      val sums = q.join(assign(centroids).select("vec_id", "cluster"), "vec_id")
-        .groupBy(col("cluster"), col("dim"))
-        .agg(expr("sum(qd) DIV count(1)").as("ncd"))
-      centroids = centroids
-        .join(sums, Seq("cluster", "dim"), "left_outer")
-        .select(col("cluster"), col("dim"), coalesce(col("ncd"), col("cd")).as("cd"))
-        .materialize()
-    }
-    assign(centroids)
+  /** Exact BIGINT squared distance between two quantized arrays — one
+    * left fold in element order. */
+  private def sqDist(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, v) => acc + v)
+
+  /** The `(vec_id, qv)` quantized-array corpus. */
+  private def quantizedArrays(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id"), quantized(col("embedding")).as("qv"))
+
+  /** s4: Lloyd's k-means over the embeddings — the reference's declared
+    * KMeans capability (`algorithms.h:212-250`, a stub whose body is a
+    * copy of PageRank) made real, and made *deterministic*: the grouped
+    * kernel ([[lloyd]]) over one group of [[quantized]] vectors, so
+    * assignment distances and centroid means are exact BIGINT arithmetic
+    * with zero float accumulation — bit-identical across any
+    * partitioning and in the DuckDB oracle, which unrolls the same
+    * [[KmIters]] rounds per dimension as CTEs. Init: centroids =
+    * vectors 0..k-1. */
+  def s4Kmeans(s: SparkSession, d: String): DataFrame =
+    kmeansAssignArray(s, d, KmK).orderBy("vec_id")
+
+  /** Flat integer k-means `(vec_id, cluster, d2)`: the kernel with a
+    * constant group and init = vectors 0..k-1 (the dense-id convention —
+    * an id space that does not start near 0 degenerates to an empty
+    * centroid set; normalize ids upstream, as the testdata does).
+    * KmeansArrayParitySpec pins it against a per-dim reference at
+    * k = [[KmK]] and at a derived k > [[KmK]]. */
+  private[operators] def kmeansAssignArray(s: SparkSession, d: String, k: Long): DataFrame = {
+    val points = quantizedArrays(s, d).withColumn("g", lit(0)).materialize()
+    lloyd(points, lowestIds(points, k), k)._1
+      .select(col("vec_id"), col("cluster"), col("d2"))
   }
 
-  /** Array-kernel integer Lloyd's for a DERIVED cluster count — s15's
-    * cell build. Same arithmetic as [[kmeansAssign]] (same quantization,
-    * init = vec_id < k, integer-div centroid means, empty cells keep
-    * their previous centroid, ties broken by lowest cluster id — the
-    * struct-min is lexicographic (d2, cluster), exactly the per-dim
-    * window's ORDER BY), but shaped for k that grows with N: the
-    * distance leg is one broadcast of k centroid ROWS against the
-    * quantized-array corpus (N×k rows of one fused zip_with fold each),
-    * not the per-dim join's N×64×k exploded rows; the update leg
-    * explodes only the assigned corpus once per round (N×64 rows,
-    * linear). KmeansArrayParitySpec pins cell-for-cell equality with
-    * the per-dim formulation at both k = 4 and a derived k > 4. */
-  private[operators] def kmeansAssignArray(s: SparkSession, d: String, k: Long): DataFrame =
-    // The assignment is materialized before the scope releases the
-    // quantized corpus it was computed from.
-    Materialize.scoped { cache =>
-      kmeansAssignArrayOn(cache(quantizedArrays(s, d)), k).materialize()
-    }
-
-  /** The `(vec_id, qv)` quantized-array corpus frame shared by every
-    * array-kernel Lloyd build (same micro-unit quantization as the
-    * per-dim [[kmeansAssign]]). */
-  private def quantizedArrays(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d).select(col("vec_id"),
-      transform(col("embedding"),
-        x => round((x.cast("double") + lit(1.0)) * QScale).cast("long")).as("qv"))
+  /** Initial centroids: in every group, the points with vec_id < k,
+    * keyed by their id. */
+  private def lowestIds(points: DataFrame, k: Long): DataFrame =
+    points.where(col("vec_id") < k)
+      .select(col("g"), col("vec_id").as("cluster"), col("qv").as("cv"))
 
   /** The Lloyd centroid-update aggregate: elementwise exact integer
-    * means over the assigned vectors' quantized arrays in ONE
-    * map-combinable pass ([[graft.functions.Aggregators.VecMean]]) —
-    * the posexplode formulation it replaces (r9) pushed d rows per
-    * input vector through two aggregate stages every round, the
-    * dominant row volume of the cell build's hot loop. Bit-identical
-    * output (`sum DIV count` per dim, positive longs). */
+    * means (`sum DIV count` per dim, positive longs) over the assigned
+    * vectors' quantized arrays in one map-combinable pass
+    * ([[graft.functions.Aggregators.VecMean]]). */
   private def vecMean = udaf(new graft.functions.Aggregators.VecMean)
 
-  /** Core flat Lloyd over an already-cached quantized frame — callers
-    * own `qa`'s cache scope. */
-  private def kmeansAssignArrayOn(qa: DataFrame, k: Long): DataFrame = {
-    val d2 = aggregate(zip_with(col("qv"), col("cv"), (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
-    def assign(cent: DataFrame): DataFrame =
-      qa.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("cluster"), d2.as("d2"))
-        .groupBy("vec_id")
-        .agg(min(struct(col("d2"), col("cluster"))).as("m"))
-        .select(col("vec_id"), col("m.cluster").as("cluster"), col("m.d2").as("d2"))
-    var cent = qa.where(col("vec_id") < k)
-      .select(col("vec_id").as("cluster"), col("qv").as("cv"))
+  /** The one integer-Lloyd kernel, grouped. `points` is a cached
+    * `(vec_id, g, qv)` frame: each point belongs to group `g` and is
+    * clustered against its group's centroids only, starting from `init`
+    * `(g, cluster, cv)`. Each of [[KmIters]] rounds assigns every point
+    * to its group's nearest centroid and moves each centroid to the
+    * exact integer mean of its points ([[vecMean]]); a cluster left
+    * empty keeps its centroid. Each round's centroids are materialized.
+    * Returns the final assignment `(vec_id, g, cluster, d2)` and the
+    * final centroids.
+    *
+    * The callers differ only in the group key and the init:
+    *  - flat k-means (s4, level 1 of the cell build): a constant `g`,
+    *    init = vectors 0..k-1. The constant is a column of the cached
+    *    points, so the optimizer cannot fold the equi-join into a cross
+    *    join;
+    *  - refinement (levels 2 and 3 of the cell build): `g` = the parent
+    *    cell, init = its lowest ids;
+    *  - PQ (s6, s7): `g` = the subspace, `qv` = the vector's slice in it.
+    *
+    * `centroidRows` bounds the centroid frame's rows (k, M·k, r², r²·f):
+    * [[toCentroids]] broadcasts it when that many [[Dim]]-long rows fit
+    * the engine's broadcast budget. */
+  private def lloyd(points: DataFrame, init: DataFrame,
+                    centroidRows: Long): (DataFrame, DataFrame) = {
+    var cent = init
     for (_ <- 1 to KmIters) {
-      val sums = qa.join(assign(cent).select("vec_id", "cluster"), "vec_id")
-        .groupBy("cluster")
+      val sums = nearest(points, cent, centroidRows)
+        .join(points, Seq("vec_id", "g"))
+        .groupBy("g", "cluster")
         .agg(vecMean(col("qv")).as("ncv"))
-      cent = cent.join(sums, Seq("cluster"), "left_outer")
-        .select(col("cluster"), coalesce(col("ncv"), col("cv")).as("cv"))
+      cent = cent.join(sums, Seq("g", "cluster"), "left_outer")
+        .select(col("g"), col("cluster"), coalesce(col("ncv"), col("cv")).as("cv"))
         .materialize()
     }
-    assign(cent)
+    (nearest(points, cent, centroidRows), cent)
   }
+
+  /** Every point's squared distance to each centroid of its group,
+    * `(vec_id, g, cluster, d2)`: an equi-join on `g`, the centroid side
+    * broadcast when `centroidRows` rows of [[Dim]] longs fit
+    * [[GraphOps.broadcastFits]]. */
+  private def toCentroids(points: DataFrame, cent: DataFrame, centroidRows: Long): DataFrame = {
+    val c = if (GraphOps.broadcastFits(points.sparkSession, centroidRows * Dim * 8L))
+      broadcast(cent) else cent
+    points.join(c, "g")
+      .select(col("vec_id"), col("g"), col("cluster"), sqDist(col("qv"), col("cv")).as("d2"))
+  }
+
+  /** Per point, the nearest centroid of its group: `min(struct(d2,
+    * cluster))` is the lexicographic argmin with ties to the lowest
+    * cluster — one aggregate with a map-side partial, never a window. */
+  private def nearest(points: DataFrame, cent: DataFrame, centroidRows: Long): DataFrame =
+    toCentroids(points, cent, centroidRows)
+      .groupBy("vec_id", "g")
+      .agg(min(struct(col("d2"), col("cluster"))).as("m"))
+      .select(col("vec_id"), col("g"), col("m.cluster").as("cluster"), col("m.d2").as("d2"))
 
   /** Branching factor of the three-level cell tree: the smallest r with
     * r³ ≥ k. Derived by exact integer search (never a bare floating
@@ -399,104 +398,57 @@ object SimilarityQueries {
     r
   }
 
-  /** One per-parent-cell Lloyd refinement level — the building block of
-    * the hierarchical cell build. `ca` is a persisted `(vec_id, pkey,
-    * qv)` frame (every vector with its parent cell id); runs
-    * [[KmIters]] integer-Lloyd rounds over `subK` sub-centroids per
-    * parent and returns `(vec_id, pkey, sidx, d2)`. Sub-centroid init
-    * within a parent = its subK lowest vec_ids (rank by vec_id — a
-    * window PARTITIONED by parent, never global); empty sub-cells keep
-    * their previous centroid; ties break by lowest sidx (the (d2, sidx)
-    * struct-min, exactly the per-dim window's ORDER BY). The assignment
-    * argmin is an equi-join on the parent key — per-vector work is
-    * O(subK·d), never O(total-centroids·d). */
-  private def refineWithin(ca: DataFrame, subK: Long): DataFrame = {
-    val d2 = aggregate(zip_with(col("qv"), col("cv"), (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
-    val wf = Window.partitionBy(col("pkey")).orderBy(col("vec_id"))
-    var cent = ca.select(col("pkey"), col("vec_id"), col("qv"),
-        (row_number().over(wf) - 1).as("sidx"))
-      .where(col("sidx") < subK)
-      .select(col("pkey"), col("sidx"), col("qv").as("cv"))
-      .materialize()
-    def assign(c: DataFrame): DataFrame =
-      ca.join(c, "pkey")
-        .select(col("vec_id"), col("pkey"), col("sidx"), d2.as("d2"))
-        .groupBy("vec_id", "pkey")
-        .agg(min(struct(col("d2"), col("sidx"))).as("m"))
-        .select(col("vec_id"), col("pkey"), col("m.sidx").as("sidx"),
-          col("m.d2").as("d2"))
-    for (_ <- 1 to KmIters) {
-      val sums = assign(cent).join(ca.select("vec_id", "qv"), "vec_id")
-        .groupBy("pkey", "sidx")
-        .agg(vecMean(col("qv")).as("ncv"))
-      cent = cent.join(sums, Seq("pkey", "sidx"), "left_outer")
-        .select(col("pkey"), col("sidx"), coalesce(col("ncv"), col("cv")).as("cv"))
-        .materialize()
-    }
-    assign(cent)
-  }
-
   /** Three-level (hierarchical) integer-Lloyd's cell build for the
-    * derived-k family (s15/s16/s17/s18) — the depth-generalization of
-    * the r8 two-level build (VERDICT r8 item 1): flat nearest-of-k
-    * assignment is O(N·k·d) compute, and with k = N/[[SemCellTarget]]
-    * that is O(N²); the two-level tree cut it to O(N·√k·d), still
-    * N^1.5 per decade (measured ~3.4–3.6× wall at sf10). Three levels
-    * at branching r = ⌈k^⅓⌉ ([[cubeBranch]]) bring assignment to
-    * O(N·k^⅓·d) — N^4/3 per decade: level 1 is EXACTLY the flat
-    * array-kernel Lloyd at r (one shared implementation,
-    * [[kmeansAssignArrayOn]], so any fix to the quantization/tie/update
-    * arithmetic cannot diverge between the flat and hierarchical
-    * builds); levels 2 and 3 are [[refineWithin]] over r and
-    * f = ⌈k/r²⌉ sub-centroids respectively — the same code pattern at
-    * each depth, per the r8 builder note (§7.4(4)). The final cell id
-    * packs injectively: `(cc·r + mid)·f + fidx` with mid < r, fidx < f,
-    * so every id falls in [0, r·r·f).
+    * derived-k family (s15/s16/s17/s18). Flat nearest-of-k assignment is
+    * O(N·k·d) compute, and with k = N/[[SemCellTarget]] that is O(N²);
+    * three levels at branching r = ⌈k^⅓⌉ ([[cubeBranch]]) bring it to
+    * O(N·k^⅓·d). Each level is one run of the grouped kernel
+    * ([[lloyd]]):
+    *  1. r centroids over the whole corpus (a constant group, init =
+    *     vectors 0..r-1);
+    *  1. r sub-centroids per level-1 cell (group = that cell);
+    *  1. f = ⌈k/r²⌉ sub-centroids per level-2 cell `cc·r + mid`.
+    * A refined level's init is its group's lowest vec_ids, ranked by a
+    * window PARTITIONED by the parent cell (never global). The final
+    * cell id packs injectively: `(cc·r + mid)·f + fidx` with mid < r,
+    * fidx < f, so every id falls in [0, r·r·f).
     *
     * SemDeDup's contract is cells-of-bounded-occupancy with semantic
     * locality + EXACT radius verification within cells (Abbas et al.
     * 2023 §3 builds its cells with faiss — approximate clustering is
     * the reference behavior, not a concession); tree depth changes
-    * which cells the verify runs in, never the verify itself. Every
-    * step is the same exact-BIGINT arithmetic as [[kmeansAssignArray]]
-    * (quantized components, integer-div means, (d2, id) struct-min
-    * ties), and the oracle unrolls the identical three-level chain —
-    * bit-identical cells across engines and partitionings. The
-    * derive-once cache is versioned with the tree shape (family
-    * `cells_v3`): a depth change invalidates the
-    * materialized cells and the oracle CTE chain together.
-    *
-    * Determinism details the oracle mirrors: level-1 init = vectors
-    * with vec_id < r (the s4 dense-id convention — an id space that
-    * does not start near 0 degenerates to an empty centroid set;
-    * normalize ids upstream, as the testdata does); levels 2/3 init
-    * per [[refineWithin]]. */
+    * which cells the verify runs in, never the verify itself. The
+    * oracle unrolls the identical three-level chain, so the cells are
+    * bit-identical across engines and partitionings. The derive-once
+    * cache is versioned with the tree shape (family `cells_v3`): a
+    * depth change invalidates the materialized cells and the oracle CTE
+    * chain together. */
   private[operators] def hierarchicalCellAssign(
       s: SparkSession, d: String, k: Long): DataFrame = {
     val r = cubeBranch(k)
     val f = (k + r * r - 1) / (r * r)
     Materialize.scoped { cache =>
-    val qa = cache(quantizedArrays(s, d))
-    // ---- level 1: flat array-kernel Lloyd at r (broadcast argmin over
-    // O(k^⅓) centroid rows, shared with the flat build) ----
-    val ca1 = cache(qa.join(
-        kmeansAssignArrayOn(qa, r).select(col("vec_id"), col("cluster").as("pkey")),
-        "vec_id")
-      .select(col("vec_id"), col("pkey"), col("qv")))
-    // ---- level 2: r sub-centroids per level-1 cell ----
-    val mid = refineWithin(ca1, r)
-    val ca2 = cache(qa.join(
-        mid.select(col("vec_id"), (col("pkey") * r + col("sidx")).as("pkey")),
-        "vec_id")
-      .select(col("vec_id"), col("pkey"), col("qv")))
-    // ---- level 3: f sub-centroids per level-2 cell ----
-    // The final assignment is materialized before the scope releases
-    // the cached frames it was computed from.
-    refineWithin(ca2, f)
-      .select(col("vec_id"), (col("pkey") * f + col("sidx")).as("cluster"),
-        col("d2"))
-      .materialize()
+      val flat = cache(quantizedArrays(s, d).withColumn("g", lit(0)))
+      def regrouped(cells: DataFrame): DataFrame =
+        cache(flat.select(col("vec_id"), col("qv")).join(cells, "vec_id")
+          .select(col("vec_id"), col("g"), col("qv")))
+      def refined(points: DataFrame, subK: Long, centroidRows: Long): DataFrame = {
+        val w = Window.partitionBy(col("g")).orderBy(col("vec_id"))
+        val init = points.select(col("g"), (row_number().over(w) - 1).as("cluster"),
+            col("qv").as("cv"))
+          .where(col("cluster") < subK)
+          .materialize()
+        lloyd(points, init, centroidRows)._1
+      }
+      val top = lloyd(flat, lowestIds(flat, r), r)._1
+      val mid = refined(regrouped(top.select(col("vec_id"), col("cluster").as("g"))),
+        r, r * r)
+      // The final assignment is materialized before the scope releases
+      // the cached frames it was computed from.
+      refined(regrouped(mid.select(col("vec_id"), (col("g") * r + col("cluster")).as("g"))),
+          f, r * r * f)
+        .select(col("vec_id"), (col("g") * f + col("cluster")).as("cluster"), col("d2"))
+        .materialize()
     }
   }
 
@@ -542,11 +494,10 @@ object SimilarityQueries {
     * column is total and null-free).
     *
     * Scale shape: the candidate join is an equi-join on the cell id
-    * (one shuffle, never a global cross product); level-1 centroids are
-    * ⌈k^⅓⌉ rows — broadcast (the declared cross join, the s3 anchor
-    * pattern) — and level-2/3 centroids equi-join on their parent cell
-    * id; the embedding column is scanned once and carried as a
-    * quantized array, never re-read. The assignment leg is O(N·k^⅓·d)
+    * (one shuffle, never a global cross product); every level's
+    * centroids equi-join on their group key ([[lloyd]]); the embedding
+    * column is scanned once and carried as a quantized array, never
+    * re-read. The assignment leg is O(N·k^⅓·d)
     * via the three-level build (the IVF coarse-probe refinement: landed
     * two-level in r8 at O(N·√k·d), depth-generalized r9 — N^4/3 per
     * decade where flat arithmetic said ~quadratic). Everything is exact
@@ -554,18 +505,13 @@ object SimilarityQueries {
     * across any partitioning and in the DuckDB oracle (whose CTE chain
     * derives the same k via a scalar subquery). */
   def s15SemDedup(s: SparkSession, d: String): DataFrame = {
-    val qa = Tables.embeddings(s, d).select(col("vec_id"),
-      transform(col("embedding"),
-        x => round((x.cast("double") + lit(1.0)) * QScale).cast("long")).as("qv"))
-    val m = qa.join(cellAssignMaterialized(s, d).select("vec_id", "cluster"), "vec_id")
+    val m = quantizedArrays(s, d)
+      .join(cellAssignMaterialized(s, d).select("vec_id", "cluster"), "vec_id")
       .materialize()
-    val pairD2 = aggregate(
-      zip_with(col("a.qv"), col("b.qv"), (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
     val dupOf = m.as("a").join(m.as("b"),
         col("a.cluster") === col("b.cluster") &&
           col("a.vec_id") < col("b.vec_id"))
-      .where(pairD2 <= SemDupD2)
+      .where(sqDist(col("a.qv"), col("b.qv")) <= SemDupD2)
       .groupBy(col("b.vec_id").as("vec_id"))
       .agg(min(col("a.vec_id")).as("witness"))
     m.join(dupOf, Seq("vec_id"), "left_outer")
@@ -607,78 +553,30 @@ object SimilarityQueries {
   }
 
   /** PQ geometry: 4 subspaces × 16 dims over the 64-dim vectors; each
-    * subspace gets its own [[KmK]]-entry codebook trained with the s4
-    * integer-quantized Lloyd's (same [[KmIters]] rounds). */
+    * subspace gets its own [[KmK]]-entry codebook. */
   private val PqM = 4
   private val PqSubDims = Dim / PqM
 
-  /** s6: product-quantization ANN with asymmetric distance computation
-    * (ADC) — the compression leg of the production ANN stack (IVF-PQ):
-    * each vector is stored as [[PqM]] small codebook indices (here
-    * 4×2 bits vs 64 floats), and query-to-vector distance is
-    * approximated by summing precomputed query-to-codeword distances per
-    * subspace. The whole pipeline is the s4 kernel with a subspace key:
-    * codebook training is Lloyd's grouped by (sub, cluster), assignment
-    * an argmin per (vec, sub), and ADC one broadcast join of the
-    * q×M×k distance table (tiny by construction) against the code table
-    * — the full vectors are never touched at query time, which is the
-    * entire point at 100 TB: the scan reads M bytes per vector, not the
-    * embedding column. Integer micro-unit arithmetic end-to-end (the s4
-    * trick), so distances are exact BIGINTs and the oracle unrolls
-    * bit-identically.
-    *
-    * The plan is deliberately Window-free ([[PlanAuditSpec]] asserts it):
-    * codebook assignment is the `min(struct)` argmax trick (hash
-    * aggregate, not a per-(vec,sub) sort), and the final per-query
-    * ranking is the bounded [[graft.functions.Aggregators.BottomK]]
-    * heap — O(k) state per query with map-side partial merge, where the
-    * `row_number` form would sort all N approx distances per query. */
-  /** Shared PQ training (s6 and s7): returns the exploded integer
-    * micro-unit frame (materialized — both consumers re-join it), the
-    * per-(vec, sub) code table, and the trained centroids. Assignment is
-    * the `min(struct)` argmin (hash aggregate, never a window sort). */
-  private def pqModel(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val q = Tables.embeddings(s, d).select(col("vec_id"),
-        posexplode(transform(col("embedding"),
-          x => round((x.cast("double") + lit(1.0)) * QScale).cast("long")))
-          .as(Seq("dim", "qd")))
-      .withColumn("sub", expr(s"dim DIV $PqSubDims"))
+  /** Shared PQ training (s6 and s7): the grouped kernel ([[lloyd]]) with
+    * `g` = the subspace, over each vector's [[PqSubDims]]-long slices,
+    * init = vectors 0..[[KmK]]-1 in every subspace. Returns the code
+    * table `(vec_id, sub, cluster, d2)` and the ADC table `(query_id,
+    * sub, cluster, pd2)`: each query slice's squared distance to every
+    * codeword of its subspace, the kernel's own distance leg — q × M × k
+    * rows, tiny by construction, broadcast by the callers. */
+  private[operators] def pqModel(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val points = quantizedArrays(s, d)
+      .select(col("vec_id"), col("qv"), explode(sequence(lit(0), lit(PqM - 1))).as("g"))
+      .select(col("vec_id"), col("g"),
+        slice(col("qv"), col("g") * PqSubDims + 1, lit(PqSubDims)).as("qv"))
       .materialize()
-    // per-(vec, sub) argmin over the sub's clusters; join on dim implies
-    // sub. min(struct(d2, cluster)) == ORDER BY d2, cluster LIMIT 1 — a
-    // hash aggregate instead of a window sort.
-    def assign(centroids: DataFrame): DataFrame = {
-      val d2 = (col("qd") - col("cd")) * (col("qd") - col("cd"))
-      val dist = q.join(broadcast(centroids.drop("sub")), "dim")
-        .groupBy(col("vec_id"), col("sub"), col("cluster")).agg(sum(d2).as("d2"))
-      dist.groupBy(col("vec_id"), col("sub"))
-        .agg(min(struct(col("d2"), col("cluster"))).as("am"))
-        .select(col("vec_id"), col("sub"), col("am.cluster").as("cluster"))
-    }
-    var centroids = q.where(col("vec_id") < KmK)
-      .select(col("sub"), col("vec_id").as("cluster"), col("dim"), col("qd").as("cd"))
-    for (_ <- 1 to KmIters) {
-      val sums = q.join(assign(centroids), Seq("vec_id", "sub"))
-        .groupBy(col("sub"), col("cluster"), col("dim"))
-        .agg(expr("sum(qd) DIV count(1)").as("ncd"))
-      centroids = centroids
-        .join(sums, Seq("sub", "cluster", "dim"), "left_outer")
-        .select(col("sub"), col("cluster"), col("dim"),
-          coalesce(col("ncd"), col("cd")).as("cd"))
-        .materialize()
-    }
-    (q, assign(centroids), centroids)
+    val rows = PqM.toLong * KmK
+    val (codes, cent) = lloyd(points, lowestIds(points, KmK), rows)
+    val adc = toCentroids(points.where(col("vec_id") < NQueryVecs), cent, rows)
+      .select(col("vec_id").as("query_id"), col("g").as("sub"), col("cluster"),
+        col("d2").as("pd2"))
+    (codes.withColumnRenamed("g", "sub"), adc)
   }
-
-  /** ADC table: query-to-codeword distance per (query, sub, cluster) —
-    * q × M × k rows, tiny by construction, broadcast by the callers. */
-  private def pqAdcTable(q: DataFrame, centroids: DataFrame): DataFrame =
-    q.where(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("dim"), col("qd").as("pq"))
-      .join(broadcast(centroids.drop("sub")), "dim")
-      .withColumn("sub", expr(s"dim DIV $PqSubDims"))
-      .groupBy(col("query_id"), col("sub"), col("cluster"))
-      .agg(sum((col("pq") - col("cd")) * (col("pq") - col("cd"))).as("pd2"))
 
   /** Bounded top-k heap per query (O(k) state, map-side merge) — never a
     * full per-query sort of the candidate approx distances. */
@@ -694,9 +592,28 @@ object SimilarityQueries {
       .orderBy("query_id", "rank")
   }
 
+  /** s6: product-quantization ANN with asymmetric distance computation
+    * (ADC) — the compression leg of the production ANN stack (IVF-PQ):
+    * each vector is stored as [[PqM]] small codebook indices (here
+    * 4×2 bits vs 64 floats), and query-to-vector distance is
+    * approximated by summing precomputed query-to-codeword distances per
+    * subspace. Codebook training and code assignment are the grouped
+    * Lloyd kernel keyed by subspace ([[pqModel]]); ADC is one broadcast
+    * join of the q×M×k distance table against the code table — the full
+    * vectors are never touched at query time, which is the entire point
+    * at 100 TB: the scan reads M bytes per vector, not the embedding
+    * column. Integer micro-unit arithmetic end-to-end, so distances are
+    * exact BIGINTs and the oracle unrolls bit-identically.
+    *
+    * The plan is deliberately Window-free ([[PlanAuditSpec]] asserts it):
+    * code assignment is the kernel's `min(struct)` argmin (an
+    * aggregate, not a per-(vec,sub) window), and the final per-query
+    * ranking is the bounded [[graft.functions.Aggregators.BottomK]]
+    * heap — O(k) state per query with map-side partial merge, where the
+    * `row_number` form would sort all N approx distances per query. */
   def s6AnnPq(s: SparkSession, d: String): DataFrame = {
-    val (q, codes, centroids) = pqModel(s, d)
-    val approx = codes.join(broadcast(pqAdcTable(q, centroids)), Seq("sub", "cluster"))
+    val (codes, adc) = pqModel(s, d)
+    val approx = codes.join(broadcast(adc), Seq("sub", "cluster"))
       .where(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("pd2")).as("approx_d2"))
@@ -736,11 +653,11 @@ object SimilarityQueries {
       .withColumn("prn", row_number().over(cellW)).where(col("prn") <= 2)
       .select(col("vec_id").as("query_id"), col("anchor_id").as("cell"))
     // PQ leg + ADC over probed cells only
-    val (q, codes, centroids) = pqModel(s, d)
+    val (codes, adc) = pqModel(s, d)
     val approx = codes.join(cells, "vec_id")
       .join(probes, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
-      .join(broadcast(pqAdcTable(q, centroids)), Seq("query_id", "sub", "cluster"))
+      .join(broadcast(adc), Seq("query_id", "sub", "cluster"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("pd2")).as("approx_d2"))
     bottomKRank(approx)
@@ -949,9 +866,7 @@ object SimilarityQueries {
   def s14EmbeddingDrift(s: SparkSession, d: String): DataFrame = {
     val cells = Tables.embeddings(s, d)
       .select((col("label") >= 5).as("slice_b"),
-        posexplode(transform(col("embedding"),
-          x => round((x.cast("double") + lit(1.0)) * QScale).cast("long")))
-          .as(Seq("dim", "q")))
+        posexplode(quantized(col("embedding"))).as(Seq("dim", "q")))
       .groupBy(col("slice_b"), col("dim"))
       .agg(count(lit(1)).as("n"), sum(col("q")).as("qsum"))
       .select(col("slice_b"), col("dim"), expr("qsum DIV n").as("mean_micro"))
@@ -1040,19 +955,15 @@ object SimilarityQueries {
     val top = s16CellMedoids(s, d)
       .orderBy(col("n_vecs").desc, col("cluster")).limit(SepTopCells)
       .select(col("cluster"), col("medoid_id"), col("n_vecs"), col("radius_d2"))
-    val qa = Tables.embeddings(s, d).select(col("vec_id"),
-      transform(col("embedding"),
-        x => round((x.cast("double") + lit(1.0)) * QScale).cast("long")).as("qv"))
+    val qa = quantizedArrays(s, d)
     val mv = top.join(qa, top("medoid_id") === qa("vec_id"))
       .select(col("cluster"), col("n_vecs"), col("radius_d2"), col("qv"))
     val a = mv.select(col("cluster").as("ca"), col("n_vecs"),
       col("radius_d2"), col("qv").as("va"))
     val b = mv.select(col("cluster").as("cb"), col("qv").as("vb"))
-    val d2 = aggregate(zip_with(col("va"), col("vb"), (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
     a.join(broadcast(b), col("ca") =!= col("cb"))
       .select(col("ca"), col("cb"), col("n_vecs"), col("radius_d2"),
-        d2.as("sep_d2"))
+        sqDist(col("va"), col("vb")).as("sep_d2"))
       .groupBy(col("ca").as("cluster"), col("n_vecs"), col("radius_d2"))
       .agg(min(struct(col("sep_d2"), col("cb"))).as("m"))
       .select(col("cluster"), col("n_vecs"), col("radius_d2"),
@@ -1167,7 +1078,7 @@ object SimilarityQueries {
   }
 
   /** One unrolled per-parent refinement level as CTEs — the oracle twin
-    * of [[refineWithin]]. `parent` names a CTE with `(vec_id, pkey)`;
+    * of a refined level of [[hierarchicalCellAssign]]. `parent` names a CTE with `(vec_id, pkey)`;
     * emits `${p}iv` (init ranks), `${p}c0..${p}c[[KmIters]]` centroid
     * rounds, and `${p}out(vec_id, pkey, sidx, d2)`. `subKSql` is a
     * scalar subquery for the per-parent sub-centroid count. */

@@ -34,8 +34,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     "t17_zipf",          // k-row top frame × broadcast total_tokens scalar
     "d22_tfidf_cosine",  // weight table × broadcast n_docs scalar (the t5 idf shape)
     "q60_key_skew",      // 10-row top frame × broadcast count-stats scalar
-    "s15_semdedup",      // quantized corpus × broadcast k centroid rows (s3 anchor pattern)
-    "s16_cell_medoids",  // same declared centroid cross join (the s15 cell build)
     "m6_phash_dedup",    // 8-byte hashes × 4 broadcast band ids (the d4 banding kernel)
     "q63_assoc_rules",   // rule frame × broadcast n_orders scalar (the q60 stats shape)
     "g25_component_sizes", // size histogram × broadcast vertex-total scalar
